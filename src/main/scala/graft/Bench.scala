@@ -1,5 +1,7 @@
 package graft
+import graft.gates.Gate
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -23,34 +25,33 @@ object Bench {
     // q1_pricing first, and it should not absorb the lineitem cold-read
     // cost for everyone else
     Seq("q_stg_cast", "q1_pricing", "q_sessionize", "q_text_stats",
-      "q_knn_brute").foreach { w =>
-      try SparkEntry.queries(w)(spark, sfDir).write
-        .format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
+      "q_knn_brute").map(SparkEntry.gate).foreach { g =>
+      try g.run(spark, sfDir).write.format("noop").mode("overwrite").save()
+      catch { case NonFatal(_) => () }
     }
     // a failed query records -1 (never its elapsed time) so a regression
     // that breaks a query cannot masquerade as a speedup
-    // sorted key order: Map iteration order reshuffles whenever a query is
-    // added, which made round-over-round per-query deltas pure noise (cold
-    // cache lands on whichever query happens to run first)
+    // sorted by name, so adding a gate never reorders the others (an
+    // unstable order made round-over-round per-query deltas pure noise:
+    // cold cache lands on whichever query happens to run first)
     // median of 3 full passes: single-run per-query numbers wobble ±8%+
     // at this scale (two rounds chased phantom regressions), and a medianed
     // number is what a round-over-round delta can actually be judged on
-    val queryOrder = SparkEntry.queries.toSeq
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .sortBy(_._1)
+    val queryOrder = SparkEntry.gates
+      .filter(g => only.forall(_.contains(g.name)))
+      .sortBy(_.name)
     def runPass(keys: Set[String]): Map[String, Double] =
-      queryOrder.filter { case (name, _) => keys(name) }.map { case (name, fn) =>
+      queryOrder.filter(g => keys(g.name)).map { case Gate(name, run, _) =>
         val t0 = System.nanoTime()
         val elapsed =
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          try { run(spark, sfDir).write.format("noop").mode("overwrite").save()
                 (System.nanoTime() - t0) / 1e9 }
           catch { case e: Throwable =>
             System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
             -1.0 }
         name -> elapsed
       }.toMap
-    val allKeys = queryOrder.map(_._1).toSet
+    val allKeys = queryOrder.map(_.name).toSet
     // the q_stream_* rows are the board's noise floor (each is Spark's
     // per-trigger machinery over ≥5-9 asserted micro-batches — the r15
     // streamfloor adjudication) and their median-of-3 has flip-flopped the
@@ -64,7 +65,7 @@ object Bench {
     val streamKeys = allKeys.filter(_.startsWith("q_stream_"))
     val passes = Seq(allKeys, streamKeys, allKeys, streamKeys, allKeys)
       .map(runPass)
-    val results = queryOrder.map { case (name, _) =>
+    val results = queryOrder.map(_.name).map { name =>
       val ok = passes.flatMap(_.get(name)).filter(_ >= 0).sorted
       // median of the successful runs (3 batch / 5 stream samples); a key
       // is reported only if at least two samples succeeded. Lower middle

@@ -53,7 +53,7 @@ object Profile {
         "q_sample_fixedk", "q_quantile_phase", "q_inverted_index",
         "q_clip_filter", "q_epoch_shuffle", "q_rep_signals",
         "q_context_order", "q_pack_nosplit", "q_knn_graph_inc").foreach { name =>
-        val plan = SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(
+        val plan = SparkEntry.gate(name).run(spark, sfDir).queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         val exchanges = plan.linesIterator.count(_.contains("Exchange"))
         val bhj = plan.linesIterator.count(_.contains("BroadcastHashJoin"))
@@ -72,12 +72,12 @@ object Profile {
       def noop(df: org.apache.spark.sql.DataFrame): Long = {
         df.write.format("noop").mode("overwrite").save(); 0L
       }
-      time("uptime input frame") { noop(SparkEntry.queries("q_uptime")(spark, sfDir)) }
+      time("uptime input frame") { noop(SparkEntry.gate("q_uptime").run(spark, sfDir)) }
       time("visit input frame (sessionRollup shape)") {
-        noop(SparkEntry.queries("q_session_metrics")(spark, sfDir))
+        noop(SparkEntry.gate("q_session_metrics").run(spark, sfDir))
       }
-      time("full q_metric_layer") { noop(SparkEntry.queries("q_metric_layer")(spark, sfDir)) }
-      time("full q_metric_layer (2nd)") { noop(SparkEntry.queries("q_metric_layer")(spark, sfDir)) }
+      time("full q_metric_layer") { noop(SparkEntry.gate("q_metric_layer").run(spark, sfDir)) }
+      time("full q_metric_layer (2nd)") { noop(SparkEntry.gate("q_metric_layer").run(spark, sfDir)) }
       spark.stop()
       return
     }
@@ -331,7 +331,7 @@ object Profile {
       val suffix = args.drop(4).headOption.getOrElse("")
       new java.io.File(outDir).mkdirs()
       names.foreach { name =>
-        val plan = SparkEntry.queries(name)(spark, sfDir).queryExecution
+        val plan = SparkEntry.gate(name).run(spark, sfDir).queryExecution
           .explainString(org.apache.spark.sql.execution.FormattedMode)
         val p = java.nio.file.Paths.get(outDir, s"$name$suffix.txt")
         java.nio.file.Files.write(p, plan.getBytes("UTF-8"))
@@ -354,10 +354,10 @@ object Profile {
       time("jaccardOn over sets") { Dedup.ngramJaccardOn(sets, 0.8).count() }
       time("overlapOn over sets") { Dedup.overlapPairsOn(sets, 0.8).count() }
       time("full q_ngram_jaccard_zipf") {
-        SparkEntry.queries("q_ngram_jaccard_zipf")(spark, sfDir)
+        SparkEntry.gate("q_ngram_jaccard_zipf").run(spark, sfDir)
           .write.format("noop").mode("overwrite").save(); 0L }
       time("full q_containment_zipf") {
-        SparkEntry.queries("q_containment_zipf")(spark, sfDir)
+        SparkEntry.gate("q_containment_zipf").run(spark, sfDir)
           .write.format("noop").mode("overwrite").save(); 0L }
       spark.stop()
       return
@@ -418,7 +418,7 @@ object Profile {
         time(s"match HOF keys         round $i") { full(keyedHof).count() }
         time(s"match KERNEL keys      round $i") { full(keyedKernel).count() }
         time(s"full q_fuzzy_match2    round $i") {
-          SparkEntry.queries("q_fuzzy_match2")(spark, sfDir)
+          SparkEntry.gate("q_fuzzy_match2").run(spark, sfDir)
             .write.format("noop").mode("overwrite").save(); 0L }
       }
       spark.stop()
@@ -499,7 +499,7 @@ object Profile {
         graft.operators.Dedup.connectedComponents(cached, "id_a", "id_b").count()
       }
       time("full q_dedup_canonical") {
-        noop(SparkEntry.queries("q_dedup_canonical")(spark, sfDir))
+        noop(SparkEntry.gate("q_dedup_canonical").run(spark, sfDir))
       }
       spark.stop()
       return
@@ -860,7 +860,7 @@ object Profile {
       for (round <- 1 to 2; key <- keys; (pname, pclass) <- providers) {
         spark.conf.set("spark.sql.streaming.stateStore.providerClass", pclass)
         time(f"$key%-22s $pname%-8s round $round") {
-          SparkEntry.queries(key)(spark, sfDir)
+          SparkEntry.gate(key).run(spark, sfDir)
             .write.format("noop").mode("overwrite").save(); 0L
         }
       }

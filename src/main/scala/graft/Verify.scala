@@ -1,8 +1,10 @@
 package graft
+import graft.gates.Gate
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Driver-run correctness dump: each gate's result → parquet, plus
+  * oracle_sql.json (the attempted gates' oracles, sorted by name), for the
+  * driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
@@ -26,16 +28,19 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    val attempted = SparkEntry.gates
+      .filter(g => only.forall(_.contains(g.name)))
+      .sortBy(_.name)
+    attempted.foreach { case Gate(name, run, _) =>
+      // a result left by an earlier run must not pass for a gate that now throws
+      graft.streaming.FileReplay.deleteRecursively(new java.io.File(s"$outDir/$name"))
       // repartition(1), NOT coalesce(1): coalesce propagates up to the last
       // shuffle boundary, so a query whose final operator is a join/filter
       // (no aggregate) would run its whole heavy stage in ONE task
       // (measured 204 s vs 8.5 s for q_containment at sf2); repartition
       // inserts an exchange and keeps upstream parallelism. The gate sorts
       // rows before hashing, so the changed row order is irrelevant.
-      try fn(spark, sfDir).repartition(1).write.mode("overwrite")
+      try run(spark, sfDir).repartition(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
@@ -53,8 +58,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = attempted
+      .map(g => s"${q(g.name)}: ${q(g.oracle)}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -32,7 +32,7 @@ import org.apache.spark.sql.functions._
   * double division, then binary-quantized to k/2^-40 (floor/×2^40/÷2^40 are
   * exact IEEE ops) so per-document sums are association-order-free — the
   * whole score hash-matches an external SQL engine (see
-  * [[graft.SparkEntry.oracleSql q_ngram_lm]]).
+  * the q_ngram_lm gate's oracle in `graft.gates.MiscGates`).
   */
 object NgramLM {
 

@@ -11,7 +11,7 @@ package graft
 class CurationPipelinePlanSpec extends SparkSpec {
 
   test("q_curation_pipeline: two exchanges (block re-assembly + dedup window), no joins") {
-    val df = SparkEntry.queries("q_curation_pipeline")(spark, "/root/testdata/sf0.001")
+    val df = SparkEntry.gate("q_curation_pipeline").run(spark, SparkEntry.SmokeDir)
     val phys = df.queryExecution.executedPlan.toString
     val exchanges = "Exchange hashpartitioning".r.findAllIn(phys).length
     assert(exchanges == 2,

@@ -13,7 +13,7 @@ class GroupingSetsSpec extends SparkSpec {
   import spark.implicits._
 
   test("grouping sets: grand total == per-flag totals == leaf totals; one Expand, one scan") {
-    val df = SparkEntry.queries("q_grouping_sets")(spark, "/root/testdata/sf0.001")
+    val df = SparkEntry.gate("q_grouping_sets").run(spark, SparkEntry.SmokeDir)
     val rows = df.select("sum_qty", "n_rows", "g_flag", "g_status")
       .as[(Double, Long, Long, Long)].collect()
 

@@ -13,7 +13,7 @@ package graft
 class StarJoinPlanSpec extends SparkSpec {
 
   test("q_multi_join_agg: partial agg below the join, dims broadcast, no Expand") {
-    val df = SparkEntry.queries("q_multi_join_agg")(spark, "/root/testdata/sf0.001")
+    val df = SparkEntry.gate("q_multi_join_agg").run(spark, SparkEntry.SmokeDir)
     val opt = df.queryExecution.optimizedPlan.toString
     val aggIdx = opt.indexOf("Aggregate [l_orderkey")
     val joinIdx = opt.indexOf("Join ")

@@ -2,12 +2,11 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The SURVEY §2 operator inventory is the coverage contract the driver and
-  * judge grade against — an operator shipped in `SparkEntry.queries` but
-  * absent from the checklist is invisible coverage, and a checklist row with
-  * no query is a false claim. This spec pins the two to exact equality so
-  * the checklist can never drift again (it did in round 3: five shipped
-  * queries had no §2 row).
+/** The SURVEY §2 operator inventory is the coverage contract — an operator
+  * shipped in `SparkEntry.gates` but absent from the checklist is invisible
+  * coverage, and a checklist row with no query is a false claim. This spec
+  * pins the two to exact equality so the checklist can never drift again
+  * (it once did: five shipped queries had no §2 row).
   */
 class SurveyDriftSpec extends AnyFunSuite {
 
@@ -27,31 +26,24 @@ class SurveyDriftSpec extends AnyFunSuite {
 
   test("SURVEY §2 declares exactly the queries SparkEntry ships") {
     val declared = RowKey.findAllMatchIn(section2).map(_.group(1)).toSet
-    val shipped = SparkEntry.queries.keySet
+    val shipped = SparkEntry.gates.map(_.name).toSet
     val undeclared = shipped -- declared
     val phantom = declared -- shipped
     assert(undeclared.isEmpty,
       s"shipped but missing from SURVEY §2 (add a checklist row): ${undeclared.toSeq.sorted.mkString(", ")}")
     assert(phantom.isEmpty,
-      s"declared in SURVEY §2 but not shipped in SparkEntry.queries: ${phantom.toSeq.sorted.mkString(", ")}")
+      s"declared in SURVEY §2 but not shipped in SparkEntry.gates: ${phantom.toSeq.sorted.mkString(", ")}")
   }
 
-  test("every query has an oracle or is a declared rows-only fast path") {
-    // rows-only is a weaker gate (rows>0 only) — each such query must be
-    // pinned by a hash-exact deterministic twin and declared here, so a
-    // forgotten oracle can't silently downgrade the gate. Empty since r12:
-    // the last three rows-only gates (q_hll_sketch, q_knn_ivf,
-    // q_knn_ivf_inc) gained driver-checkable error/recall envelope oracles.
-    val declaredRowsOnly = Set.empty[String]
-    val noOracle = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    assert(noOracle == declaredRowsOnly,
-      s"oracle coverage drifted: missing oracles ${(noOracle -- declaredRowsOnly).toSeq.sorted.mkString(", ")}; " +
-        s"stale rows-only declarations ${(declaredRowsOnly -- noOracle).toSeq.sorted.mkString(", ")}")
+  test("gate names are unique: a repeated name fails the registry") {
+    val names = SparkEntry.gates.map(_.name)
+    assert(names.distinct.size == names.size)
+    val g = SparkEntry.gate("q_stg_cast")
+    val e = intercept[IllegalArgumentException](SparkEntry.uniqueNames(Seq(g, g)))
+    assert(e.getMessage.contains("duplicate gate names: q_stg_cast"))
   }
 
-  test("every oracle targets a shipped query") {
-    val orphaned = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphaned.isEmpty,
-      s"oracleSql entries with no query: ${orphaned.toSeq.sorted.mkString(", ")}")
+  test("an unknown gate name throws") {
+    intercept[NoSuchElementException](SparkEntry.gate("q_no_such_gate"))
   }
 }

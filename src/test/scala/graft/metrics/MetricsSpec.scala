@@ -25,7 +25,7 @@ class MetricsSpec extends SparkSpec {
     "first_attempt_success", "troubled_success", "failed_visits",
     "first_attempt_success_rate", "troubled_success_rate", "failed_rate")
 
-  private val model = graft.SparkEntry.visitSemanticModel
+  private val model = graft.gates.KwwhatGates.visitSemanticModel
 
   private def handWritten(dimSql: String, groupSql: String) = {
     visits.createOrReplaceTempView("v")

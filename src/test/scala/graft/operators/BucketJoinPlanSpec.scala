@@ -42,7 +42,7 @@ class BucketJoinPlanSpec extends SparkSpec {
   }
 
   test("the gate's join stage itself is exchange-free (only the final agg shuffles)") {
-    val df = graft.SparkEntry.queries("q_bucket_join")(spark, "/root/testdata/sf0.001")
+    val df = graft.SparkEntry.gate("q_bucket_join").run(spark, graft.SparkEntry.SmokeDir)
     val phys = df.queryExecution.executedPlan.toString
     val exchanges = "Exchange hashpartitioning".r.findAllIn(phys).length
     assert(exchanges == 1,

@@ -16,7 +16,7 @@ class StreamMetricsSpec extends SparkSpec {
 
   test("the batch semantic-model declarations instantiate over a stream") {
     implicit val sqlCtx = spark.sqlContext
-    val model = graft.SparkEntry.visitSemanticModel
+    val model = graft.gates.KwwhatGates.visitSemanticModel
     val metricNames = Seq("total_visits", "total_charge_attempts",
       "first_attempt_success_rate", "failed_rate")
 

@@ -2,7 +2,9 @@
 """Local replica of the driver's correctness gate: run each oracle SQL in
 DuckDB against the test parquet tables and compare with the Spark result
 parquet dumped by graft.Verify. Columns sorted by name, rows sorted, exact
-value compare (floats reported with max abs diff on mismatch).
+value compare (floats reported with max abs diff on mismatch). Every gate in
+oracle_sql.json is checked; one without an output dir counts as MISSING.
+Exits non-zero when any check fails.
 
 Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
 """
@@ -33,7 +35,9 @@ def canon(df):
             df[c] = s.astype("float64")
     return df.sort_values(by=list(df.columns)).reset_index(drop=True)
 
-def main(sf_dir, out_dir):
+def check(sf_dir, out_dir):
+    """Compare every gate named in oracle_sql.json; returns (n_pass, n_fail).
+    A gate with no output dir (Verify could not run it) is a failure."""
     con = duckdb.connect()
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
@@ -43,17 +47,15 @@ def main(sf_dir, out_dir):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracles = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
     n_pass = n_fail = 0
-    for name in sorted(os.listdir(out_dir)):
+    for name in sorted(oracles):
         d = os.path.join(out_dir, name)
         if not os.path.isdir(d):
+            print(f"{name:24s} MISSING (no output dir)")
+            n_fail += 1
             continue
         files = glob.glob(os.path.join(d, "*.parquet"))
         spark_df = con.execute(
             f"SELECT * FROM read_parquet({files!r})").df() if files else pd.DataFrame()
-        if name not in oracles:
-            print(f"{name:24s} ROWS-ONLY rows={len(spark_df)}" +
-                  ("  !! EMPTY" if len(spark_df) == 0 else ""))
-            continue
         try:
             oracle_df = con.execute(oracles[name]).df()
         except Exception as e:
@@ -72,7 +74,6 @@ def main(sf_dir, out_dir):
         ok = True
         for c in a.columns:
             if pd.api.types.is_float_dtype(a[c]):
-                import numpy as np
                 av, bv = a[c].values, b[c].values
                 same = (av == bv) | (pd.isna(av) & pd.isna(bv))
                 if not same.all():
@@ -91,6 +92,9 @@ def main(sf_dir, out_dir):
         else:
             n_fail += 1
     print(f"\n{n_pass} pass, {n_fail} fail")
+    return n_pass, n_fail
+
 
 if __name__ == "__main__":
-    main(sys.argv[1], sys.argv[2])
+    _, failed = check(sys.argv[1], sys.argv[2])
+    sys.exit(1 if failed else 0)
