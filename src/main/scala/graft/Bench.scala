@@ -1,6 +1,5 @@
 package graft
 import graft.gates.Gate
-import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -8,15 +7,7 @@ object Bench {
     // optional arg: comma-separated query names for fast iteration (the
     // driver passes none and benches everything)
     val only = args.headOption.map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warm the session (parquet footers, codegen, JIT) so per-query numbers
     // reflect steady-state cost, then time each query with a noop write —

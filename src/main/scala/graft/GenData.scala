@@ -50,7 +50,7 @@ object GenData {
         s"unknown tables: ${bad.toSeq.sorted.mkString(",")} " +
           s"(known: ${known.toSeq.sorted.mkString(",")})")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = Sessions.cpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -1,6 +1,5 @@
 package graft
 import graft.gates.Gate
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each gate's result → parquet, plus
   * oracle_sql.json (the attempted gates' oracles, sorted by name), for the
@@ -10,22 +9,14 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     // optional third arg: comma-separated query names for fast iteration
     val only = args.drop(2).headOption.map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // SPARK_GRAFT_MASTER=local-cluster[2,2,2048] runs the whole gate across
     // REAL executor JVMs (closure serialization, broadcast transport, kryo —
     // everything single-JVM local mode hides); SPARK_GRAFT_JARS must then
     // point at the packaged application jar for the executor classpath
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder0 = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-    val spark = sys.env.get("SPARK_GRAFT_JARS")
-      .fold(builder0)(jars => builder0.config("spark.jars", jars))
-      .getOrCreate()
+    val builder = Sessions.builder()
+    sys.env.get("SPARK_GRAFT_MASTER").foreach(builder.master)
+    sys.env.get("SPARK_GRAFT_JARS").foreach(builder.config("spark.jars", _))
+    val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val attempted = SparkEntry.gates

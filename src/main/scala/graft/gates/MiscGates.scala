@@ -809,8 +809,8 @@ private[graft] object MiscGates {
     // the NATIVE MeterFrames kernel: one scan of the payload bytes emits
     // the flattened (grp, m, v) rows — one explode replaces parse → nested
     // cast → two explodes. The generic routes (from_json / parse_json →
-    // VARIANT, both measured 1.2–1.9 s/round at sf0.1 in
-    // `runMain graft.Profile <sf> variantab`, which still exercises them)
+    // VARIANT, both measured 1.2–1.9 s/round at sf0.1 by the r4 interleaved
+    // A/B that landed the kernel; that harness is retired, SURVEY §6)
     // build a JSON tree per row in an interpreted projection; the kernel
     // stays inside whole-stage codegen and its Double.parseDouble is the
     // same correctly-rounded conversion, so the hash is unchanged.
@@ -1197,7 +1197,8 @@ private[graft] object MiscGates {
       // grams shuffle as 8-byte xxhash64 longs, not ~30-byte strings (the
       // Dedup posting discipline): per-doc counts are key-identity-
       // invariant, so the oracle's string-grouped counts match exactly.
-      // MEASURED DECISION (r15, Profile `repab` interleaved A/B at sf10):
+      // MEASURED DECISION (r15 interleaved A/B at sf10, SURVEY §6 r15
+      // "rep-signals fuse adjudicated AGAINST"):
       // fusing the three families into ONE explode with n in the grouping
       // key — the r14 verdict's suggestion, tried as both a struct key and
       // a packed-long key — is 2× SLOWER (split 7.7-13.0 s vs fused

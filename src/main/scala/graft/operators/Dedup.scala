@@ -260,14 +260,6 @@ object Dedup {
     * above (prefix lengths use an ε-guard so float rounding can only
     * LENGTHEN a prefix, never drop a qualifying pair).
     */
-  /** Profiling hook: the pre-threshold candidate stats (cardinality = the
-    * cost driver of the prefix-filtered core). */
-  private[graft] def pairStatsForProfile(
-      df: DataFrame, idCol: String, textCol: String, n: Int,
-      threshold: Double, maxShingleDocFreq: Long,
-      containment: Boolean): DataFrame =
-    shinglePairStats(df, idCol, textCol, n, maxShingleDocFreq, threshold, containment)
-
   private def shinglePairStats(
       df: DataFrame,
       idCol: String,

@@ -84,9 +84,10 @@ object EntityResolution {
     // discards anyway (blocking never decides, it only proposes).
     // Key GENERATION is the native DeletionKeyHashes kernel: the HOF
     // formulation (deletionNeighborhood ∘ transform(xxhash64)) is
-    // CodegenFallback and was the measured dominant stage (Profile
-    // `fuzzygate`); the kernel emits the identical hash set inside the
-    // scan's codegen span (EntityResolutionSpec pins set identity)
+    // CodegenFallback and was the measured dominant stage (r18 stage
+    // decomposition, OPTIMIZATION_r18 "VERDICT item 7"); the kernel emits
+    // the identical hash set (valid UTF-8) inside the scan's codegen span
+    // (EntityResolutionSpec pins set identity)
     def keyed(df: DataFrame, name: String): DataFrame =
       df.withColumn("_bk",
         explode(graft.plans.EntityExpressions.deletionKeyHashes(

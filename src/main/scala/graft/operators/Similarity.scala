@@ -63,13 +63,13 @@ object Similarity {
     * The linear family is a lattice: stepping p adds a CONSTANT vector
     * mod 1, so consecutive planes are strongly correlated and the sign
     * bits of a b-bit band carry far fewer than b bits of entropy. Measured
-    * at 200k vectors / 12-bit bands (sf10, `Profile <dir> bands`): the
-    * linear family leaves 40-60 % of buckets empty with Σ|bucket|² of
-    * 250-435M per band (25-44× the uniform ideal — the banded-candidate
-    * linearity claim collapses); the quadratic map lands at 13.3-14.5M per
-    * band, statistically indistinguishable from true gaussian planes
-    * (13.8-16.2M). Every intermediate stays < 2^47, exact in int64 and in
-    * IEEE doubles on any engine.
+    * at 200k vectors / 12-bit bands (sf10, the r5 occupancy experiment,
+    * SURVEY §6 r5): the linear family leaves 40-60 % of buckets empty with
+    * Σ|bucket|² of 250-435M per band (25-44× the uniform ideal — the
+    * banded-candidate linearity claim collapses); the quadratic map lands
+    * at 13.3-14.5M per band, statistically indistinguishable from true
+    * gaussian planes (13.8-16.2M). Every intermediate stays < 2^47, exact
+    * in int64 and in IEEE doubles on any engine.
     */
   private[operators] def hyperplanes(
       planes: Int, dim: Int, seed: Long): Array[Array[Double]] =

@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.array.ByteArrayMethods
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native deletion-neighborhood block keys — the whole-stage-codegen
@@ -16,12 +17,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * depth 2 every name paid ≈len²/2 interpreted substr→concat chains plus
   * an `array_distinct` over ~300 strings — measured as the dominant stage
   * of q_fuzzy_match2, ahead of the block join AND the thresholded-
-  * levenshtein verify; Profile `fuzzygate`, r18).
+  * levenshtein verify; r18 stage decomposition, OPTIMIZATION_r18
+  * "VERDICT item 7").
   *
   * Output: the xxhash64 (seed 42 — Spark's `xxhash64(string)`) of every
   * DISTINCT string obtainable by deleting up to `depth` characters
   * (codepoints, matching `substr` semantics) from the input, the input
-  * itself included. Values equal the HOF formulation's hash SET exactly;
+  * itself included. On valid UTF-8, values equal the HOF formulation's
+  * hash SET exactly (malformed bytes: [[EntityKernel.deletionKeyHashes]]);
   * the array is sorted-unique rather than first-occurrence-ordered, and
   * two distinct variants whose xxhash64 values collide (2⁻⁶⁴) dedupe
   * here where the string-distinct HOF kept both copies. Both differences
@@ -67,7 +70,16 @@ object EntityKernel {
     * `name`. Called from generated code; must stay a plain static-shaped
     * method. One scratch buffer serves every variant of a row; deletion
     * positions are codepoint starts (UTF-8 non-continuation bytes), so
-    * multi-byte characters delete whole, exactly like `substr`. */
+    * multi-byte characters delete whole, exactly like `substr`.
+    *
+    * Hash-set identity with the HOF form holds for valid UTF-8 only:
+    * `substr` steps by the byte count a lead byte announces, this scan by
+    * non-continuation bytes, and the two split malformed sequences
+    * differently. Matching stays correct either way — both join sides use
+    * this kernel and the exact levenshtein verify decides membership.
+    *
+    * @throws IllegalArgumentException when the neighborhood would not fit
+    *   in one JVM array (depth 2 past ~65k codepoints) */
   def deletionKeyHashes(name: UTF8String, depth: Int): GenericArrayData = {
     val bytes = name.getBytes
     val len = bytes.length
@@ -81,8 +93,11 @@ object EntityKernel {
     }
     offs(nChars) = len
     val maxVariants =
-      1 + nChars + (if (depth == 2) nChars * (nChars - 1) / 2 else 0)
-    val hashes = new Array[Long](maxVariants)
+      1L + nChars + (if (depth == 2) nChars.toLong * (nChars - 1) / 2 else 0L)
+    if (maxVariants > ByteArrayMethods.MAX_ROUNDED_ARRAY_LENGTH)
+      throw new IllegalArgumentException(
+        s"name too long for depth-$depth deletion blocking: $nChars codepoints")
+    val hashes = new Array[Long](maxVariants.toInt)
     var m = 0
     hashes(m) = XXH64.hashUnsafeBytes(bytes, Platform.BYTE_ARRAY_OFFSET, len, Seed)
     m += 1

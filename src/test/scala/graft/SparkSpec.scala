@@ -7,15 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * sessions are expensive; specs run sequentially in sbt's forked JVM).
   */
 object SparkSpec {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    Sessions.builder("4").appName("graft-test").getOrCreate()
 }
 
 abstract class SparkSpec extends AnyFunSuite {

@@ -252,4 +252,14 @@ class EntityResolutionSpec extends SparkSpec {
       .select(EntityExpressions.deletionKeyHashes($"n", 2)).collect()(0)
     assert(nullOut.isNullAt(0))
   }
+
+  test("deletion_key_hashes fails loudly when a depth-2 neighborhood cannot fit in an array") {
+    // 90k codepoints at depth 2 is ~4.05e9 variants: an Int product wraps
+    // negative here, so the kernel must size in Long and refuse up front
+    val name = org.apache.spark.unsafe.types.UTF8String.fromString("a" * 90000)
+    val e = intercept[IllegalArgumentException](
+      graft.plans.EntityKernel.deletionKeyHashes(name, 2))
+    assert(e.getMessage.contains(
+      "name too long for depth-2 deletion blocking: 90000 codepoints"), e.getMessage)
+  }
 }
