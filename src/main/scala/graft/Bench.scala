@@ -5,8 +5,12 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // optional arg: comma-separated query names for fast iteration (the
-    // driver passes none and benches everything)
-    val only = args.headOption.map(_.split(",").toSet)
+    // driver passes none and benches everything), resolved before the
+    // session starts so a misspelled name fails instead of being dropped.
+    // Sorted by name, so adding a gate never reorders the others (an
+    // unstable order made round-over-round per-query deltas pure noise:
+    // cold cache lands on whichever query happens to run first)
+    val queryOrder = SparkEntry.selected(args.headOption)
     val spark = Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warm the session (parquet footers, codegen, JIT) so per-query numbers
@@ -22,15 +26,9 @@ object Bench {
     }
     // a failed query records -1 (never its elapsed time) so a regression
     // that breaks a query cannot masquerade as a speedup
-    // sorted by name, so adding a gate never reorders the others (an
-    // unstable order made round-over-round per-query deltas pure noise:
-    // cold cache lands on whichever query happens to run first)
     // median of 3 full passes: single-run per-query numbers wobble ±8%+
     // at this scale (two rounds chased phantom regressions), and a medianed
     // number is what a round-over-round delta can actually be judged on
-    val queryOrder = SparkEntry.gates
-      .filter(g => only.forall(_.contains(g.name)))
-      .sortBy(_.name)
     def runPass(keys: Set[String]): Map[String, Double] =
       queryOrder.filter(g => keys(g.name)).map { case Gate(name, run, _) =>
         val t0 = System.nanoTime()

@@ -32,4 +32,9 @@ object SparkEntry {
   /** The gate called `name`; throws on an unknown name. */
   def gate(name: String): Gate =
     byName.getOrElse(name, throw new NoSuchElementException(s"no gate named $name"))
+
+  /** The gates a comma-separated name list selects (every gate when
+    * absent), sorted by name; an unknown name throws, as [[gate]] does. */
+  def selected(names: Option[String]): Seq[Gate] =
+    names.fold(gates)(_.split(",").toSeq.distinct.map(gate)).sortBy(_.name)
 }

@@ -7,8 +7,9 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    // optional third arg: comma-separated query names for fast iteration
-    val only = args.drop(2).headOption.map(_.split(",").toSet)
+    // optional third arg: comma-separated query names for fast iteration;
+    // an unknown name throws here, before the session starts
+    val attempted = SparkEntry.selected(args.drop(2).headOption)
     // SPARK_GRAFT_MASTER=local-cluster[2,2,2048] runs the whole gate across
     // REAL executor JVMs (closure serialization, broadcast transport, kryo —
     // everything single-JVM local mode hides); SPARK_GRAFT_JARS must then
@@ -19,9 +20,6 @@ object Verify {
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    val attempted = SparkEntry.gates
-      .filter(g => only.forall(_.contains(g.name)))
-      .sortBy(_.name)
     attempted.foreach { case Gate(name, run, _) =>
       // a result left by an earlier run must not pass for a gate that now throws
       graft.streaming.FileReplay.deleteRecursively(new java.io.File(s"$outDir/$name"))

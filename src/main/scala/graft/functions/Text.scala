@@ -93,18 +93,10 @@ object Text {
     qualityScoreFrom(tokenCount(text), punctCount(text),
       stopwordCount(text, EnStopwords), length(text))
 
-  /** Word n-gram shingles joined with single spaces (distinct set).
-    * Empty array when the document has fewer than `n` tokens.
-    *
-    * The tokens array is let-bound via a single-element `transform` so it is
-    * evaluated exactly once per row: naive `transform(sequence(...), i ->
-    * slice(tokens(text), i, n))` re-evaluates the tokenization per index —
-    * O(tokens²) per document (measured 6 s just to shingle 5 000 docs).
-    * Inside the lambda, `t` is a lambda-variable lookup, so the n slices and
-    * zip_with passes are O(tokens) total.
-    */
-  /** Distinct word n-gram shingles (first-occurrence order) — native
-    * single-pass codegen'd expression ([[graft.plans.WordShingles]]).
+  /** Distinct word n-gram shingles joined with single spaces
+    * (first-occurrence order; empty when the document has fewer than `n`
+    * tokens) — native single-pass codegen'd expression
+    * ([[graft.plans.WordShingles]]).
     */
   def wordShingles(text: Column, n: Int): Column =
     graft.plans.TextExpressions.wordShingles(text, n)
@@ -114,22 +106,6 @@ object Text {
     */
   def wordShinglesAll(text: Column, n: Int): Column =
     graft.plans.TextExpressions.wordShinglesAll(text, n)
-
-  /** Declarative HOF formulation of [[wordShingles]] — interpreted
-    * (`transform`/`zip_with` have no codegen) and kept only as the
-    * semantics reference for the spec that cross-checks the native kernel.
-    * The `transform(array(...))` wrapper is a let-binding so CollapseProject
-    * inlines the tokenization once, not once per slice.
-    */
-  def wordShinglesHof(text: Column, n: Int): Column =
-    element_at(
-      transform(array(tokens(text)), t => {
-        val cnt = greatest(size(t) - (n - 1), lit(0))
-        val parts = (1 to n).map(k => slice(t, lit(k), cnt))
-        val joined = parts.reduce((acc, nxt) => zip_with(acc, nxt, (x, y) => concat(x, lit(" "), y)))
-        when(size(t) >= n, array_distinct(joined)).otherwise(array().cast("array<string>"))
-      }),
-      1)
 
   /** PII-style scrubbing: replace digit runs of `minRun`+ with `marker`
     * (phone numbers, ids, SSNs — the standard training-corpus redaction
@@ -168,16 +144,12 @@ object Text {
   /** BPE-ish token stream: maximal runs of word chars (with one inner
     * apostrophe group) or digit runs — `[a-z]+(?:'[a-z]+)?|[0-9]+` over the
     * lowercased text, as a native single-pass scanner
-    * ([[graft.plans.RegexTokens]]); the regex formulation is kept as
-    * [[regexTokensRegexp]] for the spec that cross-checks the kernel.
+    * ([[graft.plans.RegexTokens]]); its regex reference form,
+    * `graft.plans.References.regexTokensRegexp`, is test-side.
     * `textCol` is the source column name (SQL identifier).
     */
   def regexTokens(textCol: String): Column =
     graft.plans.TextExpressions.bpeTokens(col(textCol))
-
-  /** java.util.regex formulation of [[regexTokens]] (semantics reference). */
-  def regexTokensRegexp(textCol: String): Column =
-    expr(s"regexp_extract_all(lower($textCol), \"[a-z]+(?:'[a-z]+)?|[0-9]+\", 0)")
 
   /** 64-bit SimHash over a string-array column named `shinglesCol`: per bit,
     * sum +1/−1 by shingle-hash bit, take the sign. Pure higher-order-function

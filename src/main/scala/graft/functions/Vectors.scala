@@ -5,19 +5,13 @@ import org.apache.spark.sql.functions._
 
 /** Dense-vector math over `array<float>`/`array<double>` columns. The dot
   * product is a native codegen'd Catalyst expression
-  * ([[graft.plans.FloatDot]] — a primitive Java loop); the higher-order
-  * function form is kept as [[dotHof]] for reference/benchmark comparison.
+  * ([[graft.plans.FloatDot]] — a primitive Java loop); its higher-order
+  * function reference form is `graft.plans.References.dotHof`, on the
+  * test side.
   */
 object Vectors {
 
   def dot(a: Column, b: Column): Column = graft.plans.VectorExpressions.floatDot(a, b)
-
-  /** HOF formulation of [[dot]] — CodegenFallback, ~10× slower per pair. */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0),
-      (acc, v) => acc + v)
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 

@@ -10,12 +10,14 @@ import org.apache.spark.sql.functions._
   * link density, keep content blocks and drop chrome (nav, share bars,
   * related-links rails, footers).
   *
-  * Scale shape: everything is regexp/string `functions._` — a pure
-  * scan-side projection + one `posexplode` to block grain, no UDFs, no
-  * shuffle until the caller aggregates; at 100 TB the page never leaves
-  * the task that scanned it. Every operation has an exact DuckDB
-  * equivalent (same RE2-compatible patterns, same replace chains), so the
-  * whole pipeline is oracle-checkable; [[graft.SparkEntry]] gates it with
+  * Scale shape: the native [[graft.plans.HtmlBlocks]] kernel cuts and
+  * cleans the blocks — a pure scan-side projection + one `posexplode` to
+  * block grain, no UDFs, no shuffle until the caller aggregates; at 100 TB
+  * the page never leaves the task that scanned it. The kernel is bit-exact
+  * with a regex chain (the test-side `graft.plans.References.blocksRegex`)
+  * whose every operation has an exact DuckDB equivalent (same
+  * RE2-compatible patterns, same replace chains), so the whole pipeline is
+  * oracle-checkable; [[graft.SparkEntry]] gates it with
   * q_html_extract (block grain) and q_html_clean (doc grain, composed
   * with token stats + a QualityFilter decision).
   */
@@ -31,32 +33,7 @@ object Html {
 
   val BlockSplitRe: String = s"(?i)</?(?:$BlockTags)\\b[^>]*>"
 
-  /** Spans removed wholesale before segmentation. */
-  val NonContentRes: Seq[String] = Seq(
-    "(?s)<!--.*?-->",
-    "(?is)<script\\b[^>]*>.*?</script>",
-    "(?is)<style\\b[^>]*>.*?</style>")
-
   val LinkRe: String = "(?is)<a\\b[^>]*>(.*?)</a>"
-
-  def stripNonContent(html: Column): Column =
-    NonContentRes.foldLeft(html)((c, p) => regexp_replace(c, p, " "))
-
-  /** The 5 named-entity escapes + the numeric apostrophe, `&amp;` LAST so
-    * double-escaped text un-escapes one level, as a browser would.
-    */
-  def unescapeEntities(c: Column): Column = {
-    val steps = Seq("&lt;" -> "<", "&gt;" -> ">", "&quot;" -> "\"",
-      "&#39;" -> "'", "&nbsp;" -> " ", "&amp;" -> "&")
-    steps.foldLeft(c) { case (acc, (from, to)) => regexp_replace(acc, java.util.regex.Pattern.quote(from), to) }
-  }
-
-  /** Visible text of a markup fragment: tags → spaces, entities unescaped,
-    * whitespace collapsed, trimmed.
-    */
-  def cleanText(raw: Column): Column =
-    trim(regexp_replace(
-      unescapeEntities(regexp_replace(raw, "<[^>]*>", " ")), "\\s+", " "))
 
   /** Segment pre-stripped-and-split blocks with per-block signals and the
     * keep decision. Output grain: one row per non-empty block —
@@ -78,35 +55,11 @@ object Html {
           col("_b.text").as("text"), col("_b.link_chars").as("link_chars")),
       minWords, maxLinkDensity)
 
-  /** The regex formulation of [[blocks]] — kept as the executable
-    * specification the native [[graft.plans.HtmlKernels]] kernel is
-    * differentially tested against (HtmlKernelSpec); the DuckDB oracle
-    * replays THESE patterns.
-    */
-  private[graft] def blocksRegex(
-      df: DataFrame,
-      idCol: String,
-      htmlCol: String,
-      minWords: Int = 5,
-      maxLinkDensity: Double = 0.33): DataFrame = {
-    val linkChars = aggregate(
-      transform(
-        regexp_extract_all(col("_raw"), lit(LinkRe), lit(1)),
-        x => length(cleanText(x)).cast("long")),
-      lit(0L), (a, x) => a + x)
-    signals(
-      df.select(col(idCol),
-          posexplode(split(stripNonContent(col(htmlCol)), BlockSplitRe))
-            .as(Seq("block_idx", "_raw")))
-        .select(col(idCol), col("block_idx"),
-          cleanText(col("_raw")).as("text"), linkChars.as("link_chars")),
-      minWords, maxLinkDensity)
-  }
-
   /** Per-block signals + keep decision over `(.., block_idx, text,
-    * link_chars)` rows — shared by the kernel and regex paths.
+    * link_chars)` rows — shared by the kernel path and its test-side regex
+    * reference, `graft.plans.References.blocksRegex`.
     */
-  private def signals(b: DataFrame, minWords: Int, maxLinkDensity: Double): DataFrame =
+  private[graft] def signals(b: DataFrame, minWords: Int, maxLinkDensity: Double): DataFrame =
     b.withColumn("n_chars", length(col("text")).cast("long"))
       .withColumn("n_words",
         when(col("text") === "", lit(0L))
@@ -181,7 +134,7 @@ object Html {
         "</body></html>"))
   }
 
-  // ---- DuckDB oracle fragments (exact replicas of the ops above) --------
+  // ---- DuckDB oracle fragments (exact replicas of the regex reference) ---
 
   /** DuckDB page construction — same concat as [[synthesizePage]]. */
   val SynthesizePageSql: String =

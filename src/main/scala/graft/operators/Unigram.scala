@@ -23,8 +23,8 @@ import org.apache.spark.sql.functions._
   * itself runs scan-side as the native whole-stage-codegen
   * [[graft.plans.UnigramSegment]] kernel (positions 1..n, candidates
   * over the ≤ [[MaxPieceLen]] lookback) — no per-word shuffle, no UDF,
-  * no interpreted fold (the original HOF formulation is kept as the
-  * differential-spec reference).
+  * no interpreted fold (the original HOF formulation is the test-side
+  * differential-spec reference, `graft.plans.References.segmentedHof`).
   *
   * Engine-exactness: piece scores are INTEGER quantized log-likelihoods
   * `ilog2q(cnt) − ilog2q(total)` where [[ilog2q]] is an exact-integer
@@ -99,61 +99,6 @@ object Unigram {
         (ilog2q(col("used")) - ilog2q(col("_t"))).as("score"))
   }
 
-  /** Viterbi best-score DP as a per-row fold: positions j = 1..n, each
-    * appending `struct(s, bp)` — the best score ending at j and its
-    * backpointer — computed from the ≤ maxLen candidates `i = j−k`.
-    * Iterating candidates in ASCENDING i with a strict-> replacement
-    * keeps the smallest i on ties: equal-score segmentations resolve
-    * toward the longest final piece, deterministically in any engine.
-    *
-    * REFERENCE FORMULATION ONLY: `aggregate` HOFs are CodegenFallback
-    * and made q_unigram_doc_ids the board's most expensive batch row;
-    * production segmentation runs the native
-    * [[graft.plans.UnigramSegment]] kernel with identical scores and
-    * tie rules — UnigramSpec pins the two equal on every vocab word.
-    */
-  private[graft] def viterbiAcc(word: Column, m: Column, maxLen: Int): Column =
-    aggregate(
-      sequence(lit(1), length(word)),
-      array(struct(lit(0L).as("s"), lit(0).as("bp"))),
-      (acc, j) => {
-        def cand(k: Int): Column = {
-          val i = j - k
-          val piece = word.substr(i + 1, lit(k))
-          // unknown single char: the UNK edge; unknown multi-char: dead
-          val miss = if (k == 1) UnkScore else Neg
-          when(i >= 0,
-            struct(
-              (element_at(acc, (i + 1).cast("int")).getField("s") +
-                coalesce(element_at(m, piece), lit(miss))).as("s"),
-              i.cast("int").as("bp")))
-            .otherwise(struct(lit(2L * Neg).as("s"), lit(-1).as("bp")))
-        }
-        val best = (maxLen to 1 by -1).map(cand).reduceLeft { (b, c) =>
-          when(c.getField("s") > b.getField("s"), c).otherwise(b)
-        }
-        concat(acc, array(best))
-      })
-
-  /** Backtrace of a [[viterbiAcc]] array into the chosen piece sequence:
-    * walk j = n → 0 through the backpointers, prepending each piece. The
-    * fold runs n no-op-padded steps (j stops moving at 0), so it stays a
-    * bounded per-row expression. */
-  private[graft] def backtrace(word: Column, acc: Column): Column =
-    aggregate(
-      sequence(lit(1), length(word)),
-      struct(length(word).cast("int").as("j"),
-        array().cast("array<string>").as("ps")),
-      (st, _) => {
-        val j = st.getField("j")
-        val bp = element_at(acc, (j + 1).cast("int")).getField("bp")
-        when(j > 0,
-          struct(bp.as("j"),
-            concat(array(word.substr(bp + 1, j - bp)), st.getField("ps"))
-              .as("ps")))
-          .otherwise(st)
-      }).getField("ps")
-
   /** Segment every vocab word under `pieceScores(piece, score)`:
     * candidate pieces arrive per word as a map (one vocab-sized
     * equi-join + aggregation), the DP and backtrace run as ONE native
@@ -182,17 +127,6 @@ object Unigram {
       .groupBy(col("word"), col("cnt"))
       .agg(map_from_entries(collect_list(struct(col("piece"), col("score"))))
         .as("_m"))
-
-  /** [[segmented]] through the interpreted HOF reference formulation —
-    * differential-spec use only. */
-  private[graft] def segmentedHof(
-      vocab: DataFrame,
-      pieceScores: DataFrame,
-      maxLen: Int = MaxPieceLen): DataFrame =
-    wordPieceMaps(vocab, pieceScores, maxLen)
-      .withColumn("_acc", viterbiAcc(col("word"), col("_m"), maxLen))
-      .select(col("word"), col("cnt"),
-        backtrace(col("word"), col("_acc")).as("pieces"))
 
   /** Viterbi usage counts: how much corpus mass each piece absorbed. */
   def pieceCounts(segs: DataFrame): DataFrame =

@@ -12,7 +12,8 @@ import org.apache.spark.unsafe.array.ByteArrayMethods
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native deletion-neighborhood block keys — the whole-stage-codegen
-  * replacement for `EntityResolution.deletionNeighborhood` composed with
+  * replacement for the deletion neighborhood (test-side reference
+  * `graft.plans.References.deletionNeighborhood`) composed with
   * `xxhash64` through `transform` lambdas (HOFs are CodegenFallback: at
   * depth 2 every name paid ≈len²/2 interpreted substr→concat chains plus
   * an `array_distinct` over ~300 strings — measured as the dominant stage

@@ -41,9 +41,21 @@ case class SortedIntersectCount(left: Expression, right: Expression)
 
   override def prettyName: String = "sorted_intersect_count"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    SetKernels.sortedIntersectCount(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (x, y) => s"graft.plans.SetKernels.sortedIntersectCount($x, $y)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object SetKernels {
+
+  /** The [[SortedIntersectCount]] merge walk. */
+  def sortedIntersectCount(x: ArrayData, y: ArrayData): Long = {
     val n = x.numElements()
     val m = y.numElements()
     var i = 0
@@ -58,33 +70,6 @@ case class SortedIntersectCount(left: Expression, right: Expression)
     }
     c
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val n = ctx.freshName("n")
-      val m = ctx.freshName("m")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val c = ctx.freshName("c")
-      val xv = ctx.freshName("xv")
-      val yv = ctx.freshName("yv")
-      s"""
-         |int $n = $x.numElements();
-         |int $m = $y.numElements();
-         |int $i = 0; int $j = 0; long $c = 0L;
-         |while ($i < $n && $j < $m) {
-         |  long $xv = $x.getLong($i);
-         |  long $yv = $y.getLong($j);
-         |  if ($xv < $yv) { $i++; } else if ($xv > $yv) { $j++; }
-         |  else { $c++; $i++; $j++; }
-         |}
-         |${ev.value} = $c;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 object SetExpressions {

@@ -264,8 +264,9 @@ case class Gpt2Pretokens(child: Expression) extends UnaryExpression {
 }
 
 /** Native Viterbi subword segmentation — the whole-stage-codegen
-  * replacement for [[graft.operators.Unigram]]'s per-row
-  * `aggregate`-fold DP + backtrace (HOFs are CodegenFallback; they made
+  * replacement for the per-row `aggregate`-fold DP + backtrace (test-side
+  * reference `graft.plans.References.segmentedHof`; HOFs are
+  * CodegenFallback; they made
   * q_unigram_doc_ids the board's most expensive batch row — the
   * [[TrigramClassSums]] / NearestCentroid precedent, third instance).
   *

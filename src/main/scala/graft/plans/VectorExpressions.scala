@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -13,19 +14,15 @@ import org.apache.spark.sql.types._
   *
   * The higher-order-function formulation (`aggregate(zip_with(...))`) is a
   * CodegenFallback: each pair evaluation allocates a zipped array and runs an
-  * interpreted fold. This expression compiles to a primitive Java loop over
-  * the two `ArrayData` buffers — the hot path of every cosine/kNN operator
-  * in `graft.operators.Similarity`.
+  * interpreted fold. Both eval modes of this expression run one primitive
+  * loop ([[VectorKernels.dot]]) over the two `ArrayData` buffers — the hot
+  * path of every cosine/kNN operator in `graft.operators.Similarity`.
   */
 case class FloatDot(left: Expression, right: Expression) extends BinaryExpression {
 
-  private def isSupported(dt: DataType): Boolean = dt match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-
   override def checkInputDataTypes(): TypeCheckResult =
-    if (isSupported(left.dataType) && isSupported(right.dataType)) TypeCheckResult.TypeCheckSuccess
+    if (VectorKernels.isVector(left.dataType) && VectorKernels.isVector(right.dataType))
+      TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
       s"float_dot requires array<float>/array<double> inputs, got " +
         s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
@@ -34,55 +31,32 @@ case class FloatDot(left: Expression, right: Expression) extends BinaryExpressio
 
   override def prettyName: String = "float_dot"
 
-  private def elemIsFloat(e: Expression): Boolean =
-    e.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
   // Null result when lengths mismatch (a dimension bug should surface, not
   // silently truncate) or when any element is null — matching what the
   // aggregate(zip_with(...)) formulation would produce.
   override def nullable: Boolean = true
 
+  private def leftFloat: Boolean = VectorKernels.isFloatVector(left)
+  private def rightFloat: Boolean = VectorKernels.isFloatVector(right)
+
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    if (n != y.numElements()) return null
-    val lf = elemIsFloat(left)
-    val rf = elemIsFloat(right)
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null
-      val xv = if (lf) x.getFloat(i).toDouble else x.getDouble(i)
-      val yv = if (rf) y.getFloat(i).toDouble else y.getDouble(i)
-      s += xv * yv
-      i += 1
-    }
-    s
+    if (VectorKernels.dotDefined(x, y))
+      VectorKernels.dot(x, leftFloat, y, rightFloat)
+    else null
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val lGet = if (elemIsFloat(left)) "getFloat" else "getDouble"
-    val rGet = if (elemIsFloat(right)) "getFloat" else "getDouble"
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (x, y) =>
       s"""
-         |int $n = $x.numElements();
-         |if ($n != $y.numElements()) {
-         |  ${ev.isNull} = true;
+         |if (graft.plans.VectorKernels.dotDefined($x, $y)) {
+         |  ${ev.value} = graft.plans.VectorKernels.dot(
+         |    $x, $leftFloat, $y, $rightFloat);
          |} else {
-         |  double $s = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($x.isNullAt($i) || $y.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    $s += (double) $x.$lGet($i) * (double) $y.$rGet($i);
-         |  }
-         |  if (!${ev.isNull}) ${ev.value} = $s;
+         |  ${ev.isNull} = true;
          |}
-       """.stripMargin
-    })
-  }
+       """.stripMargin)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -99,9 +73,10 @@ case class FloatDot(left: Expression, right: Expression) extends BinaryExpressio
   * over per-centroid folds (same IEEE op order, same tie rule — the
   * [[graft.operators.KMeans]] replay contract), but those higher-order
   * functions are CodegenFallback: at k=196, D=64 the interpreted argmin
-  * dominated the sf10 SemDeDup decade. This compiles to two nested
-  * primitive loops over the `ArrayData` buffer and a `double[][]` model —
-  * n·k·D multiply-adds with no allocation per row.
+  * dominated the sf10 SemDeDup decade. Both eval modes run
+  * [[VectorKernels.nearest]]: one read of the vector into a `double[]`,
+  * then primitive loops over it and a `double[][]` model — n·k·D
+  * multiply-adds.
   *
   * Nulls: a null vector, a dimension mismatch with any centroid, a null
   * element, or a NaN distance sum (NaN/±Inf elements — NaN fails every
@@ -117,93 +92,33 @@ case class NearestCentroid(
   require(cells.nonEmpty && cells.length == centroids.length,
     "need one cell id per centroid, at least one centroid")
 
-  private def isSupported(dt: DataType): Boolean = dt match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-
   override def checkInputDataTypes(): TypeCheckResult =
-    if (isSupported(child.dataType)) TypeCheckResult.TypeCheckSuccess
+    if (VectorKernels.isVector(child.dataType)) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
       s"nearest_centroid requires an array<float>/array<double> input, got " +
         child.dataType.simpleString)
 
-  override def dataType: DataType = StructType(Seq(
-    StructField("d2", DoubleType, nullable = false),
-    StructField("cell", LongType, nullable = false)))
+  override def dataType: DataType = VectorKernels.NearestType
 
   override def nullable: Boolean = true
 
   override def prettyName: String = "nearest_centroid"
 
-  private def elemIsFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
+  private def elemIsFloat: Boolean = VectorKernels.isFloatVector(child)
 
-  override def nullSafeEval(input: Any): Any = {
-    val vec = input.asInstanceOf[ArrayData]
-    val n = vec.numElements()
-    val isF = elemIsFloat
-    var best = Double.PositiveInfinity
-    var bestCell = 0L
-    var k = 0
-    while (k < centroids.length) {
-      val c = centroids(k)
-      if (c.length != n) return null
-      var s = 0.0
-      var i = 0
-      while (i < n) {
-        if (vec.isNullAt(i)) return null
-        val x = if (isF) vec.getFloat(i).toDouble else vec.getDouble(i)
-        val d = x - c(i)
-        s += d * d
-        i += 1
-      }
-      // a non-finite sum (NaN or ±Inf elements) either fails every strict-<
-      // comparison or pins +Infinity at cell 0 — surface it as null instead,
-      // the same rule as a null element
-      if (!java.lang.Double.isFinite(s)) return null
-      // strict < + ascending-cell iteration == array_min's (d2, cell) order
-      if (s < best) { best = s; bestCell = cells(k) }
-      k += 1
-    }
-    org.apache.spark.sql.catalyst.InternalRow(best, bestCell)
-  }
+  override def nullSafeEval(input: Any): Any =
+    VectorKernels.nearest(input.asInstanceOf[ArrayData], elemIsFloat,
+      cells, centroids, 0, centroids.length)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val get = if (elemIsFloat) "getFloat" else "getDouble"
     val cellsRef = ctx.addReferenceObj("ncCells", cells, "long[]")
     val centRef = ctx.addReferenceObj("ncCentroids", centroids, "double[][]")
-    nullSafeCodeGen(ctx, ev, v => {
-      val n = ctx.freshName("n")
-      val k = ctx.freshName("k")
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      val d = ctx.freshName("d")
-      val best = ctx.freshName("best")
-      val bestCell = ctx.freshName("bestCell")
-      val c = ctx.freshName("c")
+    nullSafeCodeGen(ctx, ev, v =>
       s"""
-         |int $n = $v.numElements();
-         |double $best = Double.POSITIVE_INFINITY;
-         |long $bestCell = 0L;
-         |for (int $k = 0; $k < $centRef.length && !${ev.isNull}; $k++) {
-         |  double[] $c = $centRef[$k];
-         |  if ($c.length != $n) { ${ev.isNull} = true; break; }
-         |  double $s = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($v.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    double $d = (double) $v.$get($i) - $c[$i];
-         |    $s += $d * $d;
-         |  }
-         |  if (!${ev.isNull} && !Double.isFinite($s)) { ${ev.isNull} = true; }
-         |  if (!${ev.isNull} && $s < $best) { $best = $s; $bestCell = $cellsRef[$k]; }
-         |}
-         |if (!${ev.isNull}) {
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-         |    new Object[] { $best, $bestCell });
-         |}
-       """.stripMargin
-    })
+         |${ev.value} = graft.plans.VectorKernels.nearest(
+         |  $v, $elemIsFloat, $cellsRef, $centRef, 0, $centRef.length);
+         |${ev.isNull} = ${ev.value} == null;
+       """.stripMargin)
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -243,107 +158,150 @@ case class NearestCentroidIn(
     cells.length == centroids.length,
     "need sorted group offsets delimiting one non-empty slice per group")
 
-  private def vecSupported(dt: DataType): Boolean = dt match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-
   override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == LongType && vecSupported(right.dataType))
+    if (left.dataType == LongType && VectorKernels.isVector(right.dataType))
       TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
       s"nearest_centroid_in requires (bigint group, array<float>/array<double> vec), got " +
         s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
 
-  override def dataType: DataType = StructType(Seq(
-    StructField("d2", DoubleType, nullable = false),
-    StructField("cell", LongType, nullable = false)))
+  override def dataType: DataType = VectorKernels.NearestType
 
   override def nullable: Boolean = true
 
   override def prettyName: String = "nearest_centroid_in"
 
-  private def elemIsFloat: Boolean =
-    right.dataType.asInstanceOf[ArrayType].elementType == FloatType
+  private def elemIsFloat: Boolean = VectorKernels.isFloatVector(right)
 
-  override def nullSafeEval(g: Any, v: Any): Any = {
-    val gi = java.util.Arrays.binarySearch(groupIds, g.asInstanceOf[Long])
-    if (gi < 0) return null
-    val vec = v.asInstanceOf[ArrayData]
-    val n = vec.numElements()
-    val isF = elemIsFloat
-    var best = Double.PositiveInfinity
-    var bestCell = 0L
-    var k = starts(gi)
-    val end = starts(gi + 1)
-    while (k < end) {
-      val c = centroids(k)
-      if (c.length != n) return null
-      var s = 0.0
-      var i = 0
-      while (i < n) {
-        if (vec.isNullAt(i)) return null
-        val x = if (isF) vec.getFloat(i).toDouble else vec.getDouble(i)
-        val d = x - c(i)
-        s += d * d
-        i += 1
-      }
-      if (!java.lang.Double.isFinite(s)) return null
-      if (s < best) { best = s; bestCell = cells(k) }
-      k += 1
-    }
-    org.apache.spark.sql.catalyst.InternalRow(best, bestCell)
-  }
+  override def nullSafeEval(g: Any, v: Any): Any =
+    VectorKernels.nearestInGroup(g.asInstanceOf[Long], v.asInstanceOf[ArrayData],
+      elemIsFloat, groupIds, starts, cells, centroids)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val get = if (elemIsFloat) "getFloat" else "getDouble"
     val gidsRef = ctx.addReferenceObj("nciGroups", groupIds, "long[]")
     val startsRef = ctx.addReferenceObj("nciStarts", starts, "int[]")
     val cellsRef = ctx.addReferenceObj("nciCells", cells, "long[]")
     val centRef = ctx.addReferenceObj("nciCentroids", centroids, "double[][]")
-    nullSafeCodeGen(ctx, ev, (g, v) => {
-      val gi = ctx.freshName("gi")
-      val n = ctx.freshName("n")
-      val k = ctx.freshName("k")
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      val d = ctx.freshName("d")
-      val end = ctx.freshName("end")
-      val best = ctx.freshName("best")
-      val bestCell = ctx.freshName("bestCell")
-      val c = ctx.freshName("c")
+    nullSafeCodeGen(ctx, ev, (g, v) =>
       s"""
-         |int $gi = java.util.Arrays.binarySearch($gidsRef, $g);
-         |if ($gi < 0) { ${ev.isNull} = true; }
-         |int $n = $v.numElements();
-         |double $best = Double.POSITIVE_INFINITY;
-         |long $bestCell = 0L;
-         |if (!${ev.isNull}) {
-         |  int $end = $startsRef[$gi + 1];
-         |  for (int $k = $startsRef[$gi]; $k < $end && !${ev.isNull}; $k++) {
-         |    double[] $c = $centRef[$k];
-         |    if ($c.length != $n) { ${ev.isNull} = true; break; }
-         |    double $s = 0.0;
-         |    for (int $i = 0; $i < $n; $i++) {
-         |      if ($v.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |      double $d = (double) $v.$get($i) - $c[$i];
-         |      $s += $d * $d;
-         |    }
-         |    if (!${ev.isNull} && !Double.isFinite($s)) { ${ev.isNull} = true; }
-         |    if (!${ev.isNull} && $s < $best) { $best = $s; $bestCell = $cellsRef[$k]; }
-         |  }
-         |}
-         |if (!${ev.isNull}) {
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-         |    new Object[] { $best, $bestCell });
-         |}
-       """.stripMargin
-    })
+         |${ev.value} = graft.plans.VectorKernels.nearestInGroup(
+         |  $g, $v, $elemIsFloat, $gidsRef, $startsRef, $cellsRef, $centRef);
+         |${ev.isNull} = ${ev.value} == null;
+       """.stripMargin)
   }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+/** The vector kernels, one implementation each: every expression above
+  * calls the same method from `nullSafeEval` and from its generated code.
+  */
+object VectorKernels {
+
+  /** The vector input types every kernel here accepts. */
+  def isVector(dt: DataType): Boolean = dt match {
+    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
+    case _ => false
+  }
+
+  def isFloatVector(e: Expression): Boolean =
+    e.dataType.asInstanceOf[ArrayType].elementType == FloatType
+
+  /** `struct(d2, cell)`, the result of both centroid argmins. */
+  val NearestType: StructType = StructType(Seq(
+    StructField("d2", DoubleType, nullable = false),
+    StructField("cell", LongType, nullable = false)))
+
+  private def elem(a: ArrayData, i: Int, isFloat: Boolean): Double =
+    if (isFloat) a.getFloat(i).toDouble else a.getDouble(i)
+
+  /** Whether [[FloatDot]] has a value: equal lengths and no null element. */
+  def dotDefined(x: ArrayData, y: ArrayData): Boolean = {
+    val n = x.numElements()
+    if (n != y.numElements()) return false
+    var i = 0
+    while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) return false
+      i += 1
+    }
+    true
+  }
+
+  /** Sequential dot-product fold over two [[dotDefined]] arrays, each
+    * element widened to double before the multiply. */
+  def dot(x: ArrayData, xFloat: Boolean, y: ArrayData, yFloat: Boolean): Double = {
+    val n = x.numElements()
+    var s = 0.0
+    var i = 0
+    while (i < n) {
+      s += elem(x, i, xFloat) * elem(y, i, yFloat)
+      i += 1
+    }
+    s
+  }
+
+  /** Nearest centroid among `centroids[from, until)` as `(d2, cell)`, or
+    * null on a dimension mismatch, a null element or a non-finite distance
+    * sum — the [[NearestCentroid]] contract. */
+  def nearest(
+      vec: ArrayData,
+      isFloat: Boolean,
+      cells: Array[Long],
+      centroids: Array[Array[Double]],
+      from: Int,
+      until: Int): InternalRow = {
+    var best = Double.PositiveInfinity
+    var bestCell = 0L
+    // an empty slice scans nothing, so nothing can be null: (+Inf, 0)
+    if (from == until) return InternalRow(best, bestCell)
+    // read the vector once, so the k·n fold runs over a primitive array
+    // rather than through k virtual ArrayData reads per element
+    val n = vec.numElements()
+    val x = new Array[Double](n)
+    var i = 0
+    while (i < n) {
+      if (vec.isNullAt(i)) return null
+      x(i) = elem(vec, i, isFloat)
+      i += 1
+    }
+    var k = from
+    while (k < until) {
+      val c = centroids(k)
+      if (c.length != n) return null
+      var s = 0.0
+      i = 0
+      while (i < n) {
+        val d = x(i) - c(i)
+        s += d * d
+        i += 1
+      }
+      // a non-finite sum (NaN or ±Inf elements) either fails every strict-<
+      // comparison or pins +Infinity at cell 0 — surface it as null instead,
+      // the same rule as a null element
+      if (!java.lang.Double.isFinite(s)) return null
+      // strict < + ascending-cell iteration == array_min's (d2, cell) order
+      if (s < best) { best = s; bestCell = cells(k) }
+      k += 1
+    }
+    InternalRow(best, bestCell)
+  }
+
+  /** [[nearest]] over group `g`'s slice of the [[NearestCentroidIn]]
+    * model; null for an unknown group. */
+  def nearestInGroup(
+      g: Long,
+      vec: ArrayData,
+      isFloat: Boolean,
+      groupIds: Array[Long],
+      starts: Array[Int],
+      cells: Array[Long],
+      centroids: Array[Array[Double]]): InternalRow = {
+    val gi = java.util.Arrays.binarySearch(groupIds, g)
+    if (gi < 0) null
+    else nearest(vec, isFloat, cells, centroids, starts(gi), starts(gi + 1))
+  }
 }
 
 object VectorExpressions {

@@ -3,7 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
-/** Write-side helpers: partitioned and bucketed parquet layouts.
+/** Write-side helpers: partitioned and sharded parquet layouts (bucketed
+  * tables: [[graft.operators.Bucketing]]).
   *
   * The reference materializes incremental dbt models with `cluster_by`
   * (e.g. models/intermediate/int_transactions.sql config) so downstream
@@ -23,22 +24,6 @@ object Sink {
       partitionCols: Seq[String],
       mode: SaveMode = SaveMode.Overwrite): Unit =
     df.write.mode(mode).partitionBy(partitionCols: _*).parquet(path)
-
-  /** Hash-bucketed table (requires the session catalog/warehouse). Joins and
-    * aggregations on `bucketCols` between tables with the same bucket spec
-    * run shuffle-free.
-    */
-  def writeBucketed(
-      df: DataFrame,
-      table: String,
-      bucketCols: Seq[String],
-      numBuckets: Int,
-      mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.write.mode(mode)
-      .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
-      .sortBy(bucketCols.head, bucketCols.tail: _*)
-      .format("parquet")
-      .saveAsTable(table)
 
   /** Training-data shard layout: rows land in `shard=K` directories by a
     * DETERMINISTIC hash of `idCol` — the same corpus always produces the

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import TsMicros.micros
 
 /** Streaming last-touch attribution — the live twin of
   * `graft.operators.Attribution.lastTouch`: conversions are credited as
@@ -40,11 +41,6 @@ object StreamAttribution {
       touch_type: Option[String],
       age_us: Option[Long],
       n_touches_window: Long)
-
-  private def micros(t: java.sql.Timestamp): Long = {
-    val i = t.toInstant
-    i.getEpochSecond * 1000000L + i.getNano / 1000L
-  }
 
   def attributed(
       ds: Dataset[TouchStreamEvent],

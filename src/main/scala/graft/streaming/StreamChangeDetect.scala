@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import TsMicros.micros
 
 /** Stateful streaming change detection — the streaming counterpart of
   * `graft.operators.ChangeDetect`. The reference re-reads a lag buffer each
@@ -20,13 +21,6 @@ object StreamChangeDetect {
   case class StatusChange(
       key: Long, ts: java.sql.Timestamp, status: String, previous_status: Option[String])
   case class LastStatus(status: String, tsMicros: Long)
-
-  /** Full microsecond epoch — `Timestamp.getTime` is millis and would
-    * collapse sub-millisecond event ordering (Spark timestamps carry µs). */
-  private def micros(t: java.sql.Timestamp): Long = {
-    val i = t.toInstant
-    i.getEpochSecond * 1000000L + i.getNano / 1000L
-  }
 
   /** Emit one row per status transition (first observation counts as a
     * transition from None). Events inside a micro-batch are ordered by ts

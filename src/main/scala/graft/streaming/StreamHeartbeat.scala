@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import TsMicros.{micros, tsFromMicros}
 
 /** Streaming heartbeat-gap (offline outage) detection — the streaming
   * counterpart of `graft.operators.Intervals.heartbeatGaps` and of the
@@ -48,20 +49,6 @@ object StreamHeartbeat {
   case class Gap(
       key: Long, from_ts: java.sql.Timestamp, to_ts: java.sql.Timestamp, closed: Boolean)
   case class LastSeen(tsMicros: Long, emittedOpenUntil: Long)
-
-  /** Full microsecond epoch — `Timestamp.getTime` is millis and would
-    * collapse sub-millisecond event ordering (Spark timestamps carry µs). */
-  private def micros(t: java.sql.Timestamp): Long = {
-    val i = t.toInstant
-    i.getEpochSecond * 1000000L + i.getNano / 1000L
-  }
-
-  /** Inverse of [[micros]]: a Timestamp carrying the full µs fraction. */
-  private def tsFromMicros(us: Long): java.sql.Timestamp = {
-    val t = new java.sql.Timestamp(Math.floorDiv(us, 1000000L) * 1000L)
-    t.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
-    t
-  }
 
   /** @param watermark max event lateness (e.g. "1 minute") — drives the
     *                   event-time timeouts that surface silent entities.

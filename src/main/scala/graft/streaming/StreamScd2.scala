@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import TsMicros.{micros, tsFromMicros}
 
 /** Streaming type-2 slowly-changing dimension — the live twin of
   * `graft.operators.ChangeDetect.scd2`: dimension history maintained as
@@ -30,17 +31,6 @@ object StreamScd2 {
 
   case class CurrentVersion(status: String, validFromMicros: Long, version: Long)
 
-  private def micros(t: java.sql.Timestamp): Long = {
-    val i = t.toInstant
-    i.getEpochSecond * 1000000L + i.getNano / 1000L
-  }
-
-  private def tsOf(us: Long): java.sql.Timestamp = {
-    val s = Math.floorDiv(us, 1000000L)
-    val ns = Math.floorMod(us, 1000000L) * 1000L
-    java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(s, ns))
-  }
-
   /** Open/close version emissions per the contract above. Events inside a
     * micro-batch are ordered by (ts, event_id) before applying state;
     * same-status events extend the open version silently; events older
@@ -65,7 +55,7 @@ object StreamScd2 {
                 cur = Some(CurrentVersion(e.status, em, 1L))
                 out += Scd2Version(key, e.status, e.ts, None, 1L, is_current = true)
               case Some(c) if c.status != e.status =>
-                out += Scd2Version(key, c.status, tsOf(c.validFromMicros),
+                out += Scd2Version(key, c.status, tsFromMicros(c.validFromMicros),
                   Some(e.ts), c.version, is_current = false)
                 cur = Some(CurrentVersion(e.status, em, c.version + 1L))
                 out += Scd2Version(key, e.status, e.ts, None, c.version + 1L,

@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.SparkSpec
+import graft.plans.References
 import org.apache.spark.sql.functions._
 
 class TextSpec extends SparkSpec {
@@ -73,7 +74,7 @@ class TextSpec extends SparkSpec {
     val df = samples.toDF("text")
       .select(
         Text.regexTokens("text").as("native"),
-        Text.regexTokensRegexp("text").as("re"))
+        References.regexTokensRegexp("text").as("re"))
       .as[(Seq[String], Seq[String])].collect()
     df.foreach { case (n, r) => assert(n == r, s"mismatch: $n vs $r") }
   }
@@ -85,9 +86,9 @@ class TextSpec extends SparkSpec {
     val df = samples.toDF("text")
       .select(
         Text.wordShingles($"text", 3).as("native"),
-        Text.wordShinglesHof($"text", 3).as("hof"),
+        References.wordShinglesHof($"text", 3).as("hof"),
         Text.wordShingles($"text", 1).as("native1"),
-        Text.wordShinglesHof($"text", 1).as("hof1"))
+        References.wordShinglesHof($"text", 1).as("hof1"))
       .as[(Seq[String], Seq[String], Seq[String], Seq[String])].collect()
     df.foreach { case (n3, h3, n1, h1) =>
       assert(n3 == h3, s"3-gram mismatch: $n3 vs $h3")

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.plans.References
 import org.apache.spark.sql.functions._
 
 /** Deletion-neighborhood matching: equality with the exhaustive answer over
@@ -62,11 +63,11 @@ class EntityResolutionSpec extends SparkSpec {
 
   test("deletion keys: string itself plus each single deletion, deduped") {
     val keys = Seq(Tuple1("abc")).toDF("n")
-      .select(array_distinct(EntityResolution.deletionKeys($"n"))).as[Seq[String]].head()
+      .select(array_distinct(References.deletionKeys($"n"))).as[Seq[String]].head()
     assert(keys.toSet == Set("abc", "bc", "ac", "ab"))
     // repeated chars dedupe ("aa" -> deleting either char gives "a" once)
     val dup = Seq(Tuple1("aa")).toDF("n")
-      .select(array_distinct(EntityResolution.deletionKeys($"n"))).as[Seq[String]].head()
+      .select(array_distinct(References.deletionKeys($"n"))).as[Seq[String]].head()
     assert(dup.toSet == Set("aa", "a"))
   }
 
@@ -76,7 +77,7 @@ class EntityResolutionSpec extends SparkSpec {
     // stay tiny because the discriminating suffix enters every key
     val canon = (1 to 2000).map(i => (i.toLong, f"SHARED-PREFIX-$i%06d")).toDF("cid", "cname")
     val blocks = canon
-      .select(explode(array_distinct(EntityResolution.deletionKeys($"cname"))).as("k"))
+      .select(explode(array_distinct(References.deletionKeys($"cname"))).as("k"))
       .groupBy($"k").count()
     val maxBlock = blocks.agg(max($"count")).as[Long].head()
     // a key is shared only by names one deletion apart in the varying part
@@ -91,7 +92,7 @@ class EntityResolutionSpec extends SparkSpec {
 
   test("depth-2 neighborhood: up to two deletions, deduped") {
     val keys = Seq(Tuple1("abcd")).toDF("n")
-      .select(EntityResolution.deletionNeighborhood($"n", 2)).as[Seq[String]].head()
+      .select(References.deletionNeighborhood($"n", 2)).as[Seq[String]].head()
     val want = Set("abcd",
       "bcd", "acd", "abd", "abc",
       "cd", "bd", "bc", "ad", "ac", "ab")
@@ -236,7 +237,7 @@ class EntityResolutionSpec extends SparkSpec {
     for (depth <- Seq(1, 2); n <- names) {
       val df = Seq(Tuple1(n)).toDF("n")
       val hof = df.select(transform(
-          EntityResolution.deletionNeighborhood($"n", depth), s => xxhash64(s)))
+          References.deletionNeighborhood($"n", depth), s => xxhash64(s)))
         .as[Seq[Long]].head()
       val kernel = df.select(EntityExpressions.deletionKeyHashes($"n", depth))
         .as[Seq[Long]].head()

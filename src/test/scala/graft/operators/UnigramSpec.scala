@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.plans.References
 import org.apache.spark.sql.functions._
 
 class UnigramSpec extends SparkSpec {
@@ -83,7 +84,7 @@ class UnigramSpec extends SparkSpec {
       df.select($"word", $"pieces").as[(String, Seq[String])]
         .collect().toMap
     val native = byWord(Unigram.segmented(apply, art))
-    val hof = byWord(Unigram.segmentedHof(apply, art))
+    val hof = byWord(References.segmentedHof(apply, art))
     assert(native == hof, s"kernel/HOF divergence:\n$native\nvs\n$hof")
     // and the kernel plan stays inside whole-stage codegen (the point)
     val plan = Unigram.segmented(apply, art)

@@ -1,7 +1,6 @@
 package graft.plans
 
 import graft.SparkSpec
-import graft.functions.Vectors
 import org.apache.spark.sql.functions._
 
 class RewriteHofDotSpec extends SparkSpec {
@@ -13,7 +12,7 @@ class RewriteHofDotSpec extends SparkSpec {
       // parquet-backed so ConvertToLocalRelation can't fold the projection
       // away before we can inspect the optimized plan
       val df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      val hof = df.select(Vectors.dotHof($"embedding", $"embedding").as("d"))
+      val hof = df.select(References.dotHof($"embedding", $"embedding").as("d"))
       val optimized = hof.queryExecution.optimizedPlan.toString
       assert(optimized.contains("float_dot"),
         s"expected HOF dot rewritten to float_dot:\n$optimized")

@@ -36,7 +36,7 @@ class TokenizerKernelFuzzSpec extends SparkSpec {
       df.select($"word", $"pieces").as[(String, Seq[String])]
         .collect().toMap
     val native = run(Unigram.segmented(vocab, scores))
-    val hof = run(Unigram.segmentedHof(vocab, scores))
+    val hof = run(References.segmentedHof(vocab, scores))
     assert(native == hof,
       s"kernel/HOF divergence on ${native.size} random words")
     // every segmentation concatenates back to its word

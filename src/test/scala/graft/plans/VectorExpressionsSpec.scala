@@ -1,7 +1,6 @@
 package graft.plans
 
 import graft.SparkSpec
-import graft.functions.Vectors
 import org.apache.spark.sql.functions._
 
 class VectorExpressionsSpec extends SparkSpec {
@@ -14,7 +13,7 @@ class VectorExpressionsSpec extends SparkSpec {
     ).toDF("a", "b")
     val out = df.select(
       VectorExpressions.floatDot($"a", $"b").as("native"),
-      Vectors.dotHof($"a", $"b").as("hof")).as[(Double, Double)].collect()
+      References.dotHof($"a", $"b").as("hof")).as[(Double, Double)].collect()
     out.foreach { case (n, h) => assert(n == h) }
     assert(out(0)._1 == 32.0)
   }

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.SparkSpec
+import graft.operators.Bucketing
 import org.apache.spark.sql.functions._
 
 class SinkSpec extends SparkSpec {
@@ -17,29 +18,27 @@ class SinkSpec extends SparkSpec {
   }
 
   test("bucketed tables join without a shuffle on the bucket key") {
-    Seq("bucketed_a", "bucketed_b").foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new java.io.File(s"spark-warehouse/$t")
-      if (loc.exists()) {
-        loc.listFiles().foreach(_.delete()); loc.delete()
-      }
-    }
+    val dir = java.nio.file.Files.createTempDirectory("graft_bucket").toString
     val a = (1L to 100L).map(i => (i, s"a$i")).toDF("k", "va")
     val b = (1L to 100L).map(i => (i, i * 2.0)).toDF("k", "vb")
-    Sink.writeBucketed(a, "bucketed_a", Seq("k"), 4)
-    Sink.writeBucketed(b, "bucketed_b", Seq("k"), 4)
-    // force a sort-merge join so the plan demonstrates bucketing (broadcast
-    // would win at this toy size and hide it)
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
+      Bucketing.writeBucketed(a, "sinkspec_bucketed_a", s"$dir/a", "k", 4)
+      Bucketing.writeBucketed(b, "sinkspec_bucketed_b", s"$dir/b", "k", 4)
+      // force a sort-merge join so the plan demonstrates bucketing
+      // (broadcast would win at this toy size and hide it)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = spark.table("bucketed_a").join(spark.table("bucketed_b"), "k")
+      val joined = spark.table("sinkspec_bucketed_a")
+        .join(spark.table("sinkspec_bucketed_b"), "k")
       val plan = joined.queryExecution.executedPlan.toString
       assert(!plan.contains("ShuffleExchange"),
         s"expected shuffle-free bucketed join, got:\n$plan")
       assert(plan.contains("Bucketed: true"), s"bucketing not used:\n$plan")
       assert(joined.count() == 100L)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    } finally {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+      Bucketing.dropPrefixed(spark, "sinkspec_bucketed_")
+    }
   }
 
   test("writeShards: deterministic membership, complete manifest, pruned reads") {
