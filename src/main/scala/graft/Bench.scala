@@ -11,6 +11,7 @@ object Bench {
     // unstable order made round-over-round per-query deltas pure noise:
     // cold cache lands on whichever query happens to run first)
     val queryOrder = SparkEntry.selected(args.headOption)
+    val cpus = Sessions.cpus.toInt
     val spark = Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warm the session (parquet footers, codegen, JIT) so per-query numbers
@@ -62,23 +63,32 @@ object Bench {
       // MAX — a phantom regression for any query that drops one pass
       name -> (if (ok.size < 2) -1.0 else ok((ok.size - 1) / 2))
     }
-    // driver contract fix (r18, VERDICT r17 item 2): the full-precision
-    // line was ~8 KB — longer than the driver's tail-capture window, so
-    // the driver parsed nothing for four rounds (BENCH_r14..r17
-    // parsed:null). Values rounded to 3 decimals (ms resolution — far
-    // below the board's ±8% run-to-run noise, so no information is
-    // lost), the line printed LAST (after spark.stop(), past the
-    // shutdown log noise), and the same JSON written to BENCH_LOCAL.json
-    // so it is robustly parseable even if the tail still clips stdout.
-    def r3(v: Double): String = f"$v%.3f"
+    // the full record (per-query seconds, rounded to ms — far below the
+    // board's ±8% run-to-run noise) goes to BENCH_LOCAL.json and stdout;
+    // the short total line is printed LAST (after spark.stop(), past the
+    // shutdown log noise) so a reader keeping only the output's tail
+    // still parses the total
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum
     val line =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${r3(total(results))},"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
     spark.stop()
     java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LOCAL.json"),
       (line + "\n").getBytes("UTF-8"))
     println(line)
+    println(totalLine(results, cpus))
   }
+
+  private def r3(v: Double): String = f"$v%.3f"
+
+  /** Seconds summed over the queries that ran; a failed query (−1) adds 0. */
+  private def total(results: Seq[(String, Double)]): Double =
+    results.map(_._2).filter(_ >= 0).sum
+
+  /** The short total line: a fixed set of fields whatever the gate count.
+    * `failed` counts the queries recorded as −1, so a query that broke
+    * cannot hide inside a smaller total. */
+  def totalLine(results: Seq[(String, Double)], cpus: Int): String =
+    s"""{"metric":"total","value":${r3(total(results))},"unit":"sec",""" +
+      s""""n":${results.size},"failed":${results.count(_._2 < 0)},"cpus":$cpus}"""
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Bpe, Dedup, EntityResolution, Similarity}
+import graft.operators.{Dedup, EntityResolution, Similarity}
 import graft.sources.Tables
 import graft.sources.ZipfCorpus.u20
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -24,8 +24,7 @@ object Profile {
     "graphbuild" -> "[degree] [maxVecId]     NSW build at refineRounds 0, 1, 2",
     "graphinc" -> "                        q_knn_graph_inc index build vs probe leg",
     "dedupinc" -> "                        q_dedup_exact_inc split + merged-index round trip",
-    "fuzzy" -> "[eager|lean|sliced[:S]] edit-distance matcher on Zipf names",
-    "bpedocs" -> "[slices]                doc-grain byte BPE, single-pass (0) or sliced",
+    "fuzzy" -> "                        edit-distance matcher on Zipf names",
     "statestore" -> "                        big-state stream gates, HDFS vs RocksDB store")
 
   /** The headline gates `explain` audits when no names are given. */
@@ -59,8 +58,7 @@ object Profile {
         if (unknown.nonEmpty) usage(s"unknown gates: ${unknown.mkString(",")}")
       case "graphrecall" if rest.lift(1).exists(c => c != "uniform" && c != "clustered") =>
         usage(s"unknown graphrecall corpus: ${rest(1)}")
-      case "fuzzy" if fuzzyMatcher(fuzzyVariant(rest)).isEmpty =>
-        usage(s"unknown fuzzy variant: ${fuzzyVariant(rest)}")
+      case "fuzzy" if rest.nonEmpty => usage(s"fuzzy takes no arguments: ${rest.mkString(" ")}")
       case m if Modes.exists(_._1 == m) =>
       case m => usage(s"unknown mode: $m")
     }
@@ -83,8 +81,7 @@ object Profile {
       case "graphbuild" => graphBuild(spark, sfDir, rest)
       case "graphinc" => graphInc(spark, sfDir)
       case "dedupinc" => dedupInc(spark, sfDir)
-      case "fuzzy" => fuzzy(spark, sfDir, fuzzyVariant(rest))
-      case "bpedocs" => bpeDocs(spark, sfDir, rest)
+      case "fuzzy" => fuzzy(spark, sfDir)
       case "statestore" => stateStore(spark, sfDir)
     } finally spark.stop()
   }
@@ -305,29 +302,6 @@ object Profile {
       "merged index disagrees with a from-scratch rebuild")
   }
 
-  private def fuzzyVariant(rest: Array[String]): String = rest.headOption.getOrElse("eager")
-
-  private val SlicedVariant = "sliced(?::([1-9][0-9]*))?".r
-
-  /** The matcher a `fuzzy` variant names, None for an unknown variant:
-    * `eager` (the shipped row-grain blocking), `lean` (distinct-name-grain
-    * blocking), `sliced[:S]` (lean in S bounded-scratch passes, default 4). */
-  private def fuzzyMatcher(variant: String): Option[(DataFrame, DataFrame) => DataFrame] =
-    variant match {
-      case "eager" => Some((dirty: DataFrame, canon: DataFrame) =>
-        EntityResolution.matchByEditDistance(dirty, "dirty_id", "dirty_name",
-          canon, "c_custkey", "canon_name", maxDist = 2))
-      case "lean" => Some((dirty: DataFrame, canon: DataFrame) =>
-        EntityResolution.matchByEditDistanceLean(dirty, "dirty_id", "dirty_name",
-          canon, "c_custkey", "canon_name", maxDist = 2))
-      case SlicedVariant(s) => Some((dirty: DataFrame, canon: DataFrame) =>
-        EntityResolution.matchByEditDistanceSliced(dirty, "dirty_id", "dirty_name",
-          canon, "c_custkey", "canon_name", maxDist = 2,
-          slices = Option(s).fold(4)(_.toInt),
-          scratchDir = Files.createTempDirectory("graft_fuzzy_sliced").toString))
-      case _ => None
-    }
-
   /** The edit-distance matcher on a realistic name distribution. The
     * gate's `NATION-custkey` names give every name ~81 distance-1 digit
     * neighbours (that is the data, not the plan); here names are three
@@ -335,7 +309,7 @@ object Profile {
     * draw), so collisions within distance 2 are O(1) per name like real
     * name feeds. Dirty side: 50 % of names with 1–2 planted character
     * deletions, the gate's construction. */
-  private def fuzzy(spark: SparkSession, sfDir: String, variant: String): Unit = {
+  private def fuzzy(spark: SparkSession, sfDir: String): Unit = {
     val ck = col("c_custkey").cast("string")
     def ztok(salt: String, vocab: Long): Column = {
       val u = u20(concat(lit(s"$salt:"), ck))
@@ -362,33 +336,13 @@ object Profile {
         when(pmod(u20(concat(lit("fn:"), ck)), lit(3L)) === 0L, n1)
           .otherwise(n2).as("dirty_name"))
     val t0 = System.nanoTime()
-    val m = fuzzyMatcher(variant).get(dirty, canon)
+    val m = EntityResolution.matchByEditDistance(dirty, "dirty_id", "dirty_name",
+        canon, "c_custkey", "canon_name", maxDist = 2)
       .groupBy().agg(count(lit(1)), countDistinct(col("dirty_id"))).head()
-    println(f"[fuzzy] zipf-names variant=$variant canon=$nCanon " +
+    println(f"[fuzzy] zipf-names canon=$nCanon " +
       f"matches=${m.getLong(0)} dirty_matched=${m.getLong(1)} " +
       f"density=${m.getLong(0).toDouble / math.max(1L, m.getLong(1))}%.2f " +
       f"wall=${since(t0)}%.1fs")
-  }
-
-  /** Doc-grain byte tokenization at scale: the single-pass form's
-    * collect_list exchange carries the corpus's whole hex-token volume
-    * (spill-bound at sf100 — SURVEY §6 r13: 181.9 s, 14.4×/decade); the
-    * sliced form bounds peak shuffle scratch at 1/slices. args: slices
-    * (0 = single-pass). */
-  private def bpeDocs(spark: SparkSession, sfDir: String, rest: Array[String]): Unit = {
-    val slices = rest.headOption.map(_.toInt).getOrElse(0)
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val t0 = System.nanoTime()
-    val merges = Bpe.trainBytes(docs, "text", m = 8)
-    println(f"[bpedocs] train m=8 ${since(t0)}%.1fs")
-    val t1 = System.nanoTime()
-    val out =
-      if (slices <= 0) Bpe.docByteTokens(docs, "doc_id", "text", merges)
-      else Bpe.docByteTokensSliced(docs, "doc_id", "text", merges, slices,
-        scratchDir = Files.createTempDirectory("graft_bpedocs_sliced").toString)
-    val agg = out.agg(count(lit(1)), sum(col("n_tokens"))).head()
-    println(f"[bpedocs] variant=${if (slices <= 0) "single" else s"sliced-$slices"} " +
-      f"docs=${agg.getLong(0)} tokens=${agg.getLong(1)} wall=${since(t1)}%.1fs")
   }
 
   /** RocksDB vs the default HDFS-backed state store for the big-state

@@ -1213,10 +1213,7 @@ private[graft] object MiscGates {
               g => xxhash64(g))).as("sh"))
           .groupBy(col("doc_id"), col("sh")).agg(count(lit(1)).as("c"))
           .groupBy(col("doc_id")).agg((max(col("c")) * n).as(s"_top$n"))
-      val iw = Window.partitionBy(col("doc_id")).orderBy(col("start"), col("end"))
-      val prevMax = max(col("end"))
-        .over(iw.rowsBetween(Window.unboundedPreceding, -1))
-      val cover5 = docs.select(col("doc_id"),
+      val dup5 = docs.select(col("doc_id"),
           posexplode(transform(Text.wordShinglesAll(col("text"), 5),
             g => xxhash64(g))).as(Seq("pos", "sh")))
         .withColumn("c",
@@ -1224,12 +1221,8 @@ private[graft] object MiscGates {
         .filter(col("c") >= 2)
         .select(col("doc_id"), col("pos").cast("long").as("start"),
           (col("pos") + 5).cast("long").as("end"))
-        .withColumn("new_isl",
-          when(prevMax.isNull || prevMax < col("start"), 1L).otherwise(0L))
-        .withColumn("isl", sum(col("new_isl")).over(iw))
-        .groupBy(col("doc_id"), col("isl"))
-        .agg(min(col("start")).as("s"), max(col("end")).as("e"))
-        .groupBy(col("doc_id")).agg(sum(col("e") - col("s")).as("_cov5"))
+      val cover5 = Intervals.mergeIntervals(dup5, Seq("doc_id"), "start", "end")
+        .groupBy(col("doc_id")).agg(sum(col("end") - col("start")).as("_cov5"))
       def frac(c: Column) =
         when(col("n_tokens") > 0,
           least(lit(1.0), c.cast("double") / col("n_tokens").cast("double")))

@@ -356,44 +356,4 @@ object Bpe {
       .select(col(idCol), col("_r.n_tokens").as("n_tokens"),
         col("_r.token_ids").as("token_hex"))
   }
-
-  /** [[docByteTokens]] in `slices` BOUNDED-SCRATCH doc-space passes — the
-    * grace-hash answer to the one-box spill bound (SURVEY §6 r13/r14: the
-    * doc-grain token exchange is the corpus's entire hex-token volume
-    * through ONE collect_list shuffle — 14.4×/decade at sf100, spill-
-    * bound; the [[graft.operators.EntityResolution.matchByEditDistanceSliced]]
-    * precedent). The doc-id space is hash-partitioned into `slices`; pass
-    * s explodes, segments and reassembles ONLY docs with
-    * pmod(xxhash64(id), slices) = s — a 1/slices share of the token
-    * exchange — and materializes that slice's finished doc rows to
-    * `scratchDir` (output-sized parquet, columnar-compressed an order
-    * below the shuffle's row format). Completeness: every doc lands in
-    * exactly one slice and segmentation is a pure per-word function, so
-    * the union of passes is row-identical to the single-pass form
-    * (spec-pinned). Peak shuffle scratch = single-pass ÷ slices. At
-    * cluster scale set slices = 1 (the exchange spreads across
-    * executors); slices > 1 is the single-node / few-node mode.
-    */
-  def docByteTokensSliced(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      merges: Array[(Int, String, String, Long)],
-      slices: Int,
-      scratchDir: String): DataFrame = {
-    require(slices >= 1, "need at least one slice")
-    val spark = docs.sparkSession
-    // this pass owns scratchDir (the matchByEditDistanceSliced guard):
-    // stale slice=N dirs from a prior run would union into the result;
-    // refuses to clear a directory holding anything but slices
-    Scratch.claimSliceDir(spark, scratchDir)
-    (0 until slices).foreach { s =>
-      docByteTokens(
-          docs.filter(pmod(xxhash64(col(idCol)), lit(slices.toLong)) === s.toLong),
-          idCol, textCol, merges)
-        .write.mode("overwrite").parquet(s"$scratchDir/slice=$s")
-    }
-    spark.read.parquet(s"$scratchDir/slice=*")
-      .select(col(idCol), col("n_tokens"), col("token_hex"))
-  }
 }

@@ -888,7 +888,6 @@ object Dedup {
       minOccurrences: Long = 2L): DataFrame = {
     require(windowTokens > 0, s"windowTokens must be positive, got $windowTokens")
     require(minOccurrences > 1, s"minOccurrences must be > 1, got $minOccurrences")
-    val wlen = lit(windowTokens.toLong)
     val posting = df.select(
         col(idCol).as("id"),
         posexplode(Text.wordShinglesAll(col(textCol), windowTokens))
@@ -905,16 +904,11 @@ object Dedup {
     val cut = posting.join(occ, Seq("win"))
       .filter(!(col("id") === col("_fid") && col("pos") === col("_fpos")))
       .select(col("id"), col("pos"))
-    // gaps-and-islands on window position → maximal disjoint token spans
-    val w = Window.partitionBy(col("id")).orderBy(col("pos"))
-    val spans = cut
-      .withColumn("_prev", lag(col("pos"), 1).over(w))
-      .withColumn("_brk",
-        when(col("_prev").isNull || col("pos") - col("_prev") > wlen, 1L).otherwise(0L))
-      .withColumn("_isl",
-        sum(col("_brk")).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy(col("id"), col("_isl"))
-      .agg(min(col("pos")).as("s"), (max(col("pos")) + wlen - 1L).as("e"))
+    // maximal disjoint token spans: windows p < q share or abut tokens
+    // iff q − p ≤ W, exactly when [p, p+W] and [q, q+W] merge
+    val spans = Intervals.mergeIntervals(
+        cut.withColumn("_to", col("pos") + windowTokens.toLong), Seq("id"), "pos", "_to")
+      .select(col("id"), col("pos").as("s"), (col("_to") - 1L).as("e"))
     val spanStats = spans.groupBy(col("id")).agg(
       count(lit(1)).as("_n_spans"),
       sum(col("e") - col("s") + 1L).as("_n_removed"))
@@ -982,7 +976,6 @@ object Dedup {
       minOccurrences: Long = 2L): DataFrame = {
     require(minLen > 0, s"minLen must be positive, got $minLen")
     require(minOccurrences > 1, s"minOccurrences must be > 1, got $minOccurrences")
-    val wlen = lit(minLen.toLong)
     val posting = df.select(
         col(idCol).as("id"),
         posexplode(Text.wordShinglesAll(col(textCol), minLen))
@@ -994,16 +987,11 @@ object Dedup {
       .select(col("win"))
     val cov = posting.join(dup, Seq("win"), "left_semi")
       .select(col("id"), col("pos"))
-    val w = Window.partitionBy(col("id")).orderBy(col("pos"))
-    cov
-      .withColumn("_prev", lag(col("pos"), 1).over(w))
-      .withColumn("_brk",
-        when(col("_prev").isNull || col("pos") - col("_prev") > wlen, 1L).otherwise(0L))
-      .withColumn("_isl",
-        sum(col("_brk")).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy(col("id"), col("_isl"))
-      .agg(min(col("pos")).as("span_start"), (max(col("pos")) + wlen - 1L).as("span_end"))
-      .select(col("id").as(idCol), col("span_start"), col("span_end"),
-        (col("span_end") - col("span_start") + 1L).as("span_len"))
+    // islands: windows p < q overlap or abut iff q − p ≤ L, exactly when
+    // [p, p+L] and [q, q+L] merge
+    Intervals.mergeIntervals(
+        cov.withColumn("_to", col("pos") + minLen.toLong), Seq("id"), "pos", "_to")
+      .select(col("id").as(idCol), col("pos").as("span_start"),
+        (col("_to") - 1L).as("span_end"), (col("_to") - col("pos")).as("span_len"))
   }
 }

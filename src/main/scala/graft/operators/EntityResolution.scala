@@ -84,120 +84,4 @@ object EntityResolution {
       .where(col("edit_dist") >= 0) // thresholded form returns -1 past maxDist
       .select(col(idCol), col(canonIdCol), col("edit_dist"))
   }
-
-  /** [[matchByEditDistance]] at DISTINCT-NAME grain with id-only block
-    * keys — the disk-scale path for real name feeds (SURVEY §6 r14).
-    *
-    * Two scale problems of the eager form, both measured at 15M Zipf
-    * names on one box:
-    *   1. the block join carries the NAME STRINGS (≈40 bytes/key row ×
-    *      len²/2 keys per row at depth 2 — ~200 GB of shuffle);
-    *   2. IDENTICAL names (real feeds have thousands of each common
-    *      full name; Zipf gives ~1.6k copies of the head name at 15M
-    *      rows) share their entire deletion neighborhood, so each
-    *      duplicate GROUP contributes |group|²·keys candidate rows —
-    *      quadratic in N within every group.
-    * Fix: the FastSS dictionary is DISTINCT STRINGS. Block keys join at
-    * distinct-name grain as (xxhash64(name), xxhash64(key)) — 16-byte
-    * rows, map-side-combinable distinct — the levenshtein verify runs
-    * ONCE per distinct name pair, and ids expand only on the verified
-    * matches (the output's own size, irreducible). Identical-name
-    * multiplicity never enters the join. Same key-cover completeness
-    * proof; the spec pins row-identical output vs [[matchByEditDistance]].
-    * (Name-hash collisions: a 2⁻⁶⁴ collision merely adds one candidate
-    * name pair that the exact verify discards.)
-    */
-  def matchByEditDistanceLean(dirty: DataFrame, idCol: String, nameCol: String,
-      canon: DataFrame, canonIdCol: String, canonNameCol: String,
-      maxDist: Int = 1): DataFrame = {
-    def names(df: DataFrame, name: String, h: String): DataFrame =
-      df.select(col(name)).distinct()
-        .select(col(name), xxhash64(col(name)).as(h))
-    val dn = names(dirty, nameCol, "_ha")
-    val cn = names(canon, canonNameCol, "_hb")
-    def keyed(df: DataFrame, name: String, h: String): DataFrame =
-      df.select(col(h),
-        explode(graft.plans.EntityExpressions.deletionKeyHashes(
-          col(name), maxDist)).as("_bk"))
-    val candidates = keyed(dn, nameCol, "_ha")
-      .join(keyed(cn, canonNameCol, "_hb"), "_bk")
-      .select(col("_ha"), col("_hb"))
-      .distinct()
-    val verified = candidates
-      .join(dn, Seq("_ha"))
-      .join(cn, Seq("_hb"))
-      .withColumn("edit_dist",
-        levenshtein(col(nameCol), col(canonNameCol), maxDist))
-      .where(col("edit_dist") >= 0)
-      .select(col(nameCol), col(canonNameCol), col("edit_dist"))
-    // the join-back projections are distinct'd: the eager form's distinct
-    // collapses exactly-duplicate (id, name) input rows, and row-identity
-    // with it (the spec's contract) requires the id expansion to do the
-    // same — the distinct is id-grain, output-sized, not corpus-sized
-    verified
-      .join(dirty.select(col(idCol), col(nameCol)).distinct(), Seq(nameCol))
-      .join(canon.select(col(canonIdCol), col(canonNameCol)).distinct(),
-        Seq(canonNameCol))
-      .select(col(idCol), col(canonIdCol), col("edit_dist"))
-  }
-
-  /** [[matchByEditDistanceLean]] in `slices` BOUNDED-SCRATCH passes — the
-    * grace-hash-join answer to the one-box disk bound (SURVEY §6 r14: the
-    * single-pass lean join at 15M names needs ≈150 GB of shuffle scratch;
-    * a box has what it has). The block-key space is hash-partitioned into
-    * `slices`; pass s shuffles ONLY keys with pmod(key, slices) = s — a
-    * 1/slices share of the volume, the explode itself is scan-side and
-    * free — verifies that slice's distinct name pairs, and materializes
-    * the verified pairs (output-sized, tiny) to `scratchDir`. Completeness:
-    * every shared key lands in exactly ONE slice, and one shared key
-    * witnesses the pair, so the union of per-slice verified pairs covers
-    * every ≤ maxDist pair; a pair sharing keys in several slices verifies
-    * in each and the final distinct collapses it. Peak scratch =
-    * single-pass ÷ slices (+ the verified-pair parquet). At cluster scale
-    * set slices = 1 (the shuffle spreads across executors); slices > 1 is
-    * the single-node / few-node mode.
-    */
-  def matchByEditDistanceSliced(dirty: DataFrame, idCol: String, nameCol: String,
-      canon: DataFrame, canonIdCol: String, canonNameCol: String,
-      maxDist: Int = 1, slices: Int = 4, scratchDir: String): DataFrame = {
-    require(slices >= 1, "need at least one slice")
-    val spark = dirty.sparkSession
-    // this pass OWNS scratchDir: stale slice=N directories from a prior
-    // run with a different slice count (or different inputs) would be
-    // silently unioned into the result by the slice=* read below, so the
-    // directory is cleared before the first pass writes — but only if it
-    // holds nothing except slices (Scratch.claimSliceDir)
-    Scratch.claimSliceDir(spark, scratchDir)
-    def names(df: DataFrame, name: String, h: String): DataFrame =
-      df.select(col(name)).distinct()
-        .select(col(name), xxhash64(col(name)).as(h))
-    val dn = names(dirty, nameCol, "_ha")
-    val cn = names(canon, canonNameCol, "_hb")
-    def keyed(df: DataFrame, name: String, h: String, s: Int): DataFrame =
-      df.select(col(h),
-          explode(graft.plans.EntityExpressions.deletionKeyHashes(
-            col(name), maxDist)).as("_bk"))
-        .filter(pmod(col("_bk"), lit(slices.toLong)) === s.toLong)
-    (0 until slices).foreach { s =>
-      keyed(dn, nameCol, "_ha", s)
-        .join(keyed(cn, canonNameCol, "_hb", s), "_bk")
-        .select(col("_ha"), col("_hb"))
-        .distinct()
-        .join(dn, Seq("_ha"))
-        .join(cn, Seq("_hb"))
-        .withColumn("edit_dist",
-          levenshtein(col(nameCol), col(canonNameCol), maxDist))
-        .where(col("edit_dist") >= 0)
-        .select(col(nameCol), col(canonNameCol), col("edit_dist"))
-        .write.mode("overwrite").parquet(s"$scratchDir/slice=$s")
-    }
-    spark.read.parquet(s"$scratchDir/slice=*")
-      .distinct() // a pair witnessed in several slices verified in each
-      // distinct'd join-back: row-identity with the eager form on inputs
-      // carrying exactly-duplicate (id, name) rows (same as the lean path)
-      .join(dirty.select(col(idCol), col(nameCol)).distinct(), Seq(nameCol))
-      .join(canon.select(col(canonIdCol), col(canonNameCol)).distinct(),
-        Seq(canonNameCol))
-      .select(col(idCol), col(canonIdCol), col("edit_dist"))
-  }
 }

@@ -594,8 +594,8 @@ object Similarity {
     // runs S SEQUENTIAL jobs (the per-slice localCheckpoint forces each
     // before the next plans), so the periodic cleaner reclaims a slice's
     // dead shuffle generations before the next slice writes its own —
-    // peak scratch ≈ 1/S of the single-job build, the
-    // docByteTokensSliced pattern applied to the graph build. The result
+    // peak scratch ≈ 1/S of the single-job build (grace-hash style: each
+    // pass shuffles only its own hash slice of the key space). The result
     // is BIT-IDENTICAL to the unsliced leg: topDegree ranks per src, and
     // filter / distinct / rescore / carried-cosine rows are all src-local,
     // so slicing the src space partitions every per-src candidate set

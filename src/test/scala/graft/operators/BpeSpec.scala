@@ -90,26 +90,4 @@ class BpeSpec extends SparkSpec {
       assert(decoded == expected, s"doc $id decoded '$decoded'")
     }
   }
-
-  test("sliced doc byte tokens are row-identical to the single-pass form") {
-    val docs = (0L until 60L)
-      .map(i => (i, s"doc $i says to to ${"x" * (i % 7).toInt} the end"))
-      .toDF("doc_id", "text")
-    val merges = Bpe.trainBytes(docs, "text", m = 4)
-    val scratch = java.nio.file.Files.createTempDirectory("graft_bpe_sliced").toString
-    try {
-      // stale-scratch guard: pre-seed a slice dir a prior run left behind
-      Seq((999L, 1L, "FF")).toDF("doc_id", "n_tokens", "token_hex")
-        .write.parquet(s"$scratch/slice=9")
-      val plain = Bpe.docByteTokens(docs, "doc_id", "text", merges)
-        .as[(Long, Long, String)].collect().sorted.toSeq
-      val sliced = Bpe.docByteTokensSliced(docs, "doc_id", "text", merges,
-          slices = 3, scratchDir = scratch)
-        .as[(Long, Long, String)].collect().sorted.toSeq
-      assert(sliced == plain, "doc-space slicing must not change any row")
-      assert(plain.size == 60)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(scratch))
-    }
-  }
 }

@@ -23,13 +23,35 @@ class EntityResolutionSpec extends SparkSpec {
     d(a.length)(b.length)
   }
 
+  /** The blocked match equals the distinct brute-force answer, on the rows
+    * as given and again with exactly-duplicate (id, name) rows on both
+    * sides, which must not multiply the output. Returns the answer. */
+  private def assertExhaustive(canon: Seq[(Long, String)], dirty: Seq[(Long, String)],
+      maxDist: Int): Seq[(Long, Long, Int)] = {
+    val want = (for {
+      (did, dn) <- dirty.distinct; (cid, cn) <- canon.distinct
+      d = lev(dn, cn) if d <= maxDist
+    } yield (did, cid, d)).sorted
+    for ((c, d) <- Seq((canon, dirty), (canon ++ canon.take(5), dirty ++ dirty.take(7)))) {
+      val got = EntityResolution.matchByEditDistance(
+          d.toDF("did", "dname"), "did", "dname", c.toDF("cid", "cname"), "cid", "cname",
+          maxDist = maxDist)
+        .select($"did", $"cid", $"edit_dist").as[(Long, Long, Int)]
+        .collect().sorted
+      assert(got.toSeq == want,
+        s"blocked != exhaustive (${c.size} canon, ${d.size} dirty rows):\n" +
+          s" got ${got.mkString(", ")}\nwant ${want.mkString(", ")}")
+    }
+    want
+  }
+
   test("blocked match equals exhaustive match across all edit kinds") {
     val canon = Seq(
       "alpha-1", "alpha-2", "beta-12", "gamma-123", "delta-1234",
       "abcdefgh", "abcdefghi", "abcdeXgh",
       "shorty", "shor", "sh", "a",
       "verylongname-42", "verylongname-43").zipWithIndex
-      .map { case (n, i) => (i.toLong, n) }.toDF("cid", "cname")
+      .map { case (n, i) => (i.toLong, n) }
     val dirty = Seq(
       "alpha-",         // tail deletion
       "lpha-1",         // head deletion
@@ -42,20 +64,8 @@ class EntityResolutionSpec extends SparkSpec {
       "b",              // single char vs "a": substitution dist 1
       "verylongname-4", // deletion matching both -42 and -43
       "zzzzzzzzzz")     // no match
-      .zipWithIndex.map { case (n, i) => (100L + i, n) }.toDF("did", "dname")
-
-    val got = EntityResolution.matchByEditDistance(
-        dirty, "did", "dname", canon, "cid", "cname", maxDist = 1)
-      .select($"did", $"cid", $"edit_dist").as[(Long, Long, Int)]
-      .collect().sorted
-    val cs = canon.as[(Long, String)].collect()
-    val ds = dirty.as[(Long, String)].collect()
-    val want = (for {
-      (did, dn) <- ds; (cid, cn) <- cs
-      d = lev(dn, cn) if d <= 1
-    } yield (did, cid, d)).sorted
-    assert(got.toSeq == want.toSeq,
-      s"blocked != exhaustive:\n got ${got.mkString(", ")}\nwant ${want.mkString(", ")}")
+      .zipWithIndex.map { case (n, i) => (100L + i, n) }
+    val want = assertExhaustive(canon, dirty, maxDist = 1)
     assert(!want.exists { case (did, _, _) => did == 110L }, "zzz… must not match")
     assert(want.exists { case (did, cid, d) => did == 108L && d == 1 },
       "single-char substitution must match")
@@ -106,7 +116,7 @@ class EntityResolutionSpec extends SparkSpec {
       "abcdefgh", "abcdefghi", "abcdeXgh",
       "shorty", "shor", "sh",
       "verylongname-42", "verylongname-43").zipWithIndex
-      .map { case (n, i) => (i.toLong, n) }.toDF("cid", "cname")
+      .map { case (n, i) => (i.toLong, n) }
     val dirty = Seq(
       "alpha",          // two tail deletions of alpha-1/-2
       "lpha1",          // head + middle deletion
@@ -118,20 +128,9 @@ class EntityResolutionSpec extends SparkSpec {
       "s",              // vs "sh": d=1
       "verylongname-",  // matches -42/-43 at d=2
       "zzzzzzzzzz")     // no match
-      .zipWithIndex.map { case (n, i) => (100L + i, n) }.toDF("did", "dname")
-    val got = EntityResolution.matchByEditDistance(
-        dirty, "did", "dname", canon, "cid", "cname", maxDist = 2)
-      .select($"did", $"cid", $"edit_dist").as[(Long, Long, Int)]
-      .collect().sorted
-    val cs = canon.as[(Long, String)].collect()
-    val ds = dirty.as[(Long, String)].collect()
-    val want = (for {
-      (did, dn) <- ds; (cid, cn) <- cs
-      d = lev(dn, cn) if d <= 2
-    } yield (did, cid, d)).sorted
-    assert(got.toSeq == want.toSeq,
-      s"blocked != exhaustive:\n got ${got.mkString(", ")}\nwant ${want.mkString(", ")}")
-    assert(got.exists(_._3 == 1) && got.exists(_._3 == 2),
+      .zipWithIndex.map { case (n, i) => (100L + i, n) }
+    val want = assertExhaustive(canon, dirty, maxDist = 2)
+    assert(want.exists(_._3 == 1) && want.exists(_._3 == 2),
       "corpus must exercise both distances")
     assert(!want.exists { case (did, _, _) => did == 109L }, "zzz… must not match")
   }
@@ -155,62 +154,6 @@ class EntityResolutionSpec extends SparkSpec {
     } yield (did, cid, d)).toSet
     assert(got == want, s"missing: ${(want -- got).take(5)}; extra: ${(got -- want).take(5)}")
     assert(want.nonEmpty, "small alphabet should produce close pairs")
-  }
-
-  test("lean (id-only blocking) variant is row-identical to the eager form") {
-    val rnd = new scala.util.Random(11)
-    val alphabet = "abcdef"
-    def word(): String =
-      (0 until (4 + rnd.nextInt(6))).map(_ => alphabet(rnd.nextInt(alphabet.length))).mkString
-    // exactly-duplicate (id, name) rows included on BOTH sides: the eager
-    // form's distinct collapses them, and row-identity requires the lean
-    // id expansion to collapse them too (the r14 advice finding)
-    val canonRows = (1 to 80).map(i => (i.toLong, word())).distinct
-    val dirtyRows = (1 to 80).map(i => (1000L + i, word())).distinct
-    val canon = (canonRows ++ canonRows.take(7)).toDF("cid", "cname")
-    val dirty = (dirtyRows ++ dirtyRows.take(9)).toDF("did", "dname")
-    for (d <- Seq(1, 2)) {
-      val eager = EntityResolution.matchByEditDistance(
-          dirty, "did", "dname", canon, "cid", "cname", maxDist = d)
-        .select($"did", $"cid", $"edit_dist").as[(Long, Long, Int)].collect().sorted.toSeq
-      val lean = EntityResolution.matchByEditDistanceLean(
-          dirty, "did", "dname", canon, "cid", "cname", maxDist = d)
-        .select($"did", $"cid", $"edit_dist").as[(Long, Long, Int)].collect().sorted.toSeq
-      assert(lean == eager, s"lean != eager at maxDist=$d")
-      assert(eager.nonEmpty, "small alphabet should produce close pairs")
-    }
-  }
-
-  test("sliced (bounded-scratch passes) variant is row-identical to the eager form") {
-    val rnd = new scala.util.Random(13)
-    val alphabet = "abcdef"
-    def word(): String =
-      (0 until (4 + rnd.nextInt(6))).map(_ => alphabet(rnd.nextInt(alphabet.length))).mkString
-    val canonRows = (1 to 70).map(i => (i.toLong, word())).distinct
-    val dirtyRows = (1 to 70).map(i => (1000L + i, word())).distinct
-    val canon = (canonRows ++ canonRows.take(5)).toDF("cid", "cname")
-    val dirty = (dirtyRows ++ dirtyRows.take(5)).toDF("did", "dname")
-    val scratch = java.nio.file.Files.createTempDirectory("graft_er_sliced").toString
-    try {
-      // stale-scratch guard (the r14 advice finding): pre-seed the scratch
-      // dir with a slice directory a PREVIOUS larger-slice-count run would
-      // have left behind; the pass must clear it, not union it in
-      Seq((999999L, 999999L, 0)).toDF("did", "cid", "edit_dist")
-        .withColumn("dname", lit("stale")).withColumn("cname", lit("stale"))
-        .select($"dname", $"cname", $"edit_dist")
-        .write.parquet(s"$scratch/slice=7")
-      val eager = EntityResolution.matchByEditDistance(
-          dirty, "did", "dname", canon, "cid", "cname", maxDist = 2)
-        .select($"did", $"cid", $"edit_dist").as[(Long, Long, Int)].collect().sorted.toSeq
-      val sliced = EntityResolution.matchByEditDistanceSliced(
-          dirty, "did", "dname", canon, "cid", "cname", maxDist = 2,
-          slices = 3, scratchDir = scratch)
-        .select($"did", $"cid", $"edit_dist").as[(Long, Long, Int)].collect().sorted.toSeq
-      assert(sliced == eager, "slicing the key space must not change the match set")
-      assert(eager.nonEmpty)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(scratch))
-    }
   }
 
   test("plan: block keys shuffle as int64 hashes from the native kernel") {
