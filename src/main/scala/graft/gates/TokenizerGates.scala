@@ -341,12 +341,13 @@ private[graft] object TokenizerGates {
     // deterministic engine-portable FnvMix uniform — rates broadcast, the
     // corpus is never shuffled. Report: achieved per-domain counts plus an
     // id checksum proving the exact row selection.
-    // §2#36f distributed BPE tokenizer TRAINING: one corpus scan builds
-    // the word-count vocab; every merge round runs on the VOCAB table
-    // (corpus never rescanned — the classic trainer trick) with a 1-row
-    // parameter collect per round. Merge = one literal sentinel-delimited
-    // replace (left-to-right non-overlap = BPE greedy semantics = SQL
-    // replace semantics), so the full 6-round trajectory hash-matches.
+    // §2#36f BPE tokenizer TRAINING: one corpus scan builds the
+    // word-count vocab; every merge round runs on the VOCAB (corpus never
+    // rescanned — the classic trainer trick), on the driver when the
+    // vocab fits `MergeLoop`'s row bound. Merge = one literal
+    // sentinel-delimited replace (left-to-right non-overlap = BPE greedy
+    // semantics = SQL replace semantics), so the full 6-round trajectory
+    // hash-matches.
     Gate("q_bpe_train", (s, dir) =>
       Bpe.mergeTable(s, Bpe.train(Tables.documents(s, dir), "text", m = 6)),
       // BPE trajectory replay: m rounds of (pair count over the delimited
@@ -407,8 +408,8 @@ private[graft] object TokenizerGates {
     // EXACT GPT-2 pre-tokenizer (native scanner kernel) chunks raw text,
     // the alphabet is UTF-8 BYTES as hex symbols (any input tokenizes,
     // no unknown symbol), then the same vocab-table merge discipline —
-    // corpus scanned once, each round one vocab-sized pair count + a
-    // 1-row argmax + one literal replace
+    // corpus scanned once, each round a vocab-wide pair count, argmax
+    // and one literal replace
     Gate("q_bpe_bytes_train", (s, dir) =>
       Bpe.mergeTable(s, Bpe.trainBytes(Tables.documents(s, dir), "text", m = 8)),
       // byte-level BPE trajectory replay: regex pre-tokens, hex byte
@@ -528,7 +529,7 @@ private[graft] object TokenizerGates {
     // ilog2q(cnt_a) − ilog2q(cnt_b) (NOT the raw pair count — BPE's one
     // differing rule), non-initial symbols carry the ## continuation
     // prefix. The Bpe vocab-table discipline: corpus scanned once, each
-    // round one vocab-sized pair count + symbol count + 1-row argmax +
+    // round a vocab-wide pair count + symbol count + scored argmax +
     // literal replace
     Gate("q_wordpiece_train", (s, dir) =>
       WordPiece.mergeTable(s,

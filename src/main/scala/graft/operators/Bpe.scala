@@ -9,14 +9,15 @@ import org.apache.spark.sql.functions._
   * pipeline runs before token counting/packing: repeatedly merge the most
   * frequent adjacent symbol pair, starting from characters.
   *
-  * Scale shape (the Hugging-Face-trainer recipe, declaratively): ONE corpus
-  * scan builds the (word, count) vocabulary via a map-side-combined
-  * groupBy; every merge round then runs on the VOCABULARY table (≪ corpus —
-  * this is the classic trick: BPE statistics are word-count-weighted, so
-  * the corpus is never rescanned), and the chosen pair per round is a
-  * 1-row parameter collect. Round cost: one vocab-sized pair explode +
-  * aggregation; m merges ⇒ m bounded rounds, `localCheckpoint` pins each
-  * round's vocab so plans don't nest.
+  * Scale shape (the Hugging-Face-trainer recipe): ONE corpus scan builds
+  * the (word, count) vocabulary via a map-side-combined groupBy; every
+  * merge round then runs on the VOCABULARY (≪ corpus — BPE statistics are
+  * word-count-weighted, so the corpus is never rescanned). A vocab of at
+  * most [[MergeLoop.InMemoryRows]] rows is collected once and all merge
+  * rounds run on the driver ([[MergeLoop]]): one Spark job per training,
+  * whatever m is. A larger vocab falls back to the distributed loop, one
+  * vocab-sized pair explode + aggregation and a 1-row argmax collect per
+  * round. Both paths apply the same rules and give the same merge table.
   *
   * Engine-exactness: a word's symbol sequence is encoded as a
   * sentinel-delimited string (`<D>sym<D>` per symbol, D = U+0001, so
@@ -88,12 +89,37 @@ object Bpe {
   def trainOnWords(
       vocab: DataFrame,
       m: Int): Array[(Int, String, String, Long)] =
-    trainOnVocab(vocab.select(symStr(col("word")).as("s"), col("cnt")), m)
+    trainOnWords(vocab, m, MergeLoop.InMemoryRows)
 
-  /** The merge loop over any sentinel-delimited (s, cnt) vocab frame —
-    * shared by the char-grain [[train]] and byte-grain
-    * [[trainBytes]] paths. Each round: one vocab-sized pair
-    * count + a 1-row argmax collect.
+  /** [[trainOnWords]] with the in-memory row bound as an argument: the
+    * seam specs use to run the distributed loop on a small vocab. */
+  private[operators] def trainOnWords(
+      vocab: DataFrame,
+      m: Int,
+      bound: Int): Array[(Int, String, String, Long)] =
+    trainOnVocab(vocab.select(symStr(col("word")).as("s"), col("cnt")), m, bound)
+
+  /** The merges of any sentinel-delimited (s, cnt) vocab frame — shared
+    * by the char-grain [[train]] and byte-grain [[trainBytes]] paths. A
+    * vocab of at most `bound` rows trains in memory ([[MergeLoop]]: one
+    * collect, then every round on the driver, the score being the pair
+    * count); a larger one runs [[distributedMerges]].
+    */
+  private def trainOnVocab(
+      vocab: DataFrame,
+      m: Int,
+      bound: Int): Array[(Int, String, String, Long)] = {
+    require(m > 0, s"need at least one merge, got $m")
+    MergeLoop.collect(vocab, bound) match {
+      case Some(rows) =>
+        MergeLoop.train(rows, m, (pcnt, _, _) => pcnt, _ + _)
+          .map { case (step, a, b, pcnt, _) => (step, a, b, pcnt) }
+      case None => distributedMerges(vocab, m)
+    }
+  }
+
+  /** The merge loop for a vocab too large for the driver. Each round:
+    * one vocab-sized pair count + a 1-row argmax collect.
     *
     * The vocab is materialized ONCE (`localCheckpoint`); each round's
     * merge is then a CHAINED literal `replace` over that base, so a
@@ -109,10 +135,9 @@ object Bpe {
     * materialize-every-round form.
     */
   private[operators] val CheckpointEvery = 16
-  private def trainOnVocab(
+  private def distributedMerges(
       vocab0: DataFrame,
       m: Int): Array[(Int, String, String, Long)] = {
-    require(m > 0, s"need at least one merge, got $m")
     var base = vocab0.localCheckpoint(true)
     var sym: Column = col("s")
     var depth = 0
@@ -279,7 +304,15 @@ object Bpe {
   def trainBytesOnWords(
       vocab: DataFrame,
       m: Int): Array[(Int, String, String, Long)] =
-    trainOnVocab(vocab.select(byteSymStr(col("word")).as("s"), col("cnt")), m)
+    trainBytesOnWords(vocab, m, MergeLoop.InMemoryRows)
+
+  /** [[trainBytesOnWords]] with the in-memory row bound as an argument
+    * (the [[trainOnWords]] seam at the byte grain). */
+  private[operators] def trainBytesOnWords(
+      vocab: DataFrame,
+      m: Int,
+      bound: Int): Array[(Int, String, String, Long)] =
+    trainOnVocab(vocab.select(byteSymStr(col("word")).as("s"), col("cnt")), m, bound)
 
   /** Apply a byte-grain merge list: per-subword corpus frequencies, the
     * subword as its hex byte sequence (top `k` by count, ties to the

@@ -1,0 +1,151 @@
+package graft.operators
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
+import org.apache.spark.unsafe.types.UTF8String
+import scala.collection.mutable
+
+/** The merge rounds of subword training, run on the driver: the one
+  * in-memory loop behind [[Bpe]] (char and byte grain) and [[WordPiece]].
+  *
+  * A merge round needs the whole vocabulary's pair statistics, and the
+  * vocabulary (distinct words with counts) is small next to the corpus:
+  * thousands to hundreds of thousands of rows. When it fits under
+  * [[InMemoryRows]] the sentinel-delimited `(s, cnt)` vocab is collected
+  * ONCE and all `m` rounds run here, so a training costs one Spark job
+  * (a few incremental scan jobs on a many-partition vocab) whatever `m`
+  * is; the distributed loops cost one job plus one set of generated
+  * classes per round. A larger vocab falls back to the trainer's
+  * distributed loop, the only path that handles a vocab too large for the
+  * driver.
+  *
+  * The rules are the distributed loops' own, so both paths give the same
+  * merge table (pinned by `MergeLoopSpec`): pair counts over every
+  * adjacent pair weighted by `cnt`; argmax by `(score desc, a, b)` with
+  * strings in UTF-8 byte order (Spark's string order); the merge a greedy
+  * left-to-right non-overlapping scan, which is what one literal `replace`
+  * of `<D>a<D><D>b<D>` does on the sentinel encoding; stop when no pair
+  * is left.
+  */
+private[operators] object MergeLoop {
+
+  /** The largest vocab, in rows, trained in memory. A row of a word of
+    * ~10 symbols takes ~200 bytes of driver heap (its delimited string,
+    * its count and its interned symbol ids), so 2^20 rows stay near
+    * 200 MB — room on any driver that runs Spark. Word and GPT-2
+    * pre-token vocabularies of large corpora are in the 10^5–10^6 range,
+    * so they train in memory; past the bound the collect itself would
+    * risk the driver's heap, and the distributed loop takes over.
+    */
+  val InMemoryRows: Int = 1 << 20
+
+  /** One merge: (step, sym_a, sym_b, pair_cnt, score). */
+  type Merge = (Int, String, String, Long, Long)
+
+  /** The `(s, cnt)` vocab's rows when it has at most `bound` of them,
+    * else `None`: `limit(bound + 1).collect()`, one job over the
+    * projection the distributed loop would checkpoint. */
+  def collect(vocab: DataFrame, bound: Int): Option[Array[(String, Long)]] = {
+    val rows = vocab.select(col("s"), col("cnt").cast("long"))
+      .limit(bound + 1).collect()
+    if (rows.length > bound) None
+    else Some(rows.map(r => (r.getString(0), r.getLong(1))))
+  }
+
+  /** Symbols of a delimited string — [[Bpe.symsOf]] on the driver: strip
+    * the outer sentinels, split on the doubled inner one (Spark's `split`
+    * keeps trailing empties, as `limit = -1` does). */
+  private def symbols(s: String): Array[String] =
+    s.substring(1, s.length - 1).split(Bpe.D + Bpe.D, -1)
+
+  /** Run up to `m` merge rounds over collected `(s, cnt)` rows. `score`
+    * maps `(pair_cnt, cnt_a, cnt_b)` to the argmax key, where `cnt_a` and
+    * `cnt_b` are the count-weighted symbol frequencies; `merged` names the
+    * merged symbol of a pair. Stops early when no pair is left.
+    */
+  def train(
+      vocab: Array[(String, Long)],
+      m: Int,
+      score: (Long, Long, Long) => Long,
+      merged: (String, String) => String): Array[Merge] = {
+    val names = mutable.ArrayBuffer.empty[String]
+    val keys = mutable.ArrayBuffer.empty[UTF8String]
+    val ids = mutable.HashMap.empty[String, Int]
+    def intern(s: String): Int = ids.getOrElseUpdate(s, {
+      names += s
+      keys += UTF8String.fromString(s)
+      names.length - 1
+    })
+    val words = vocab.map { case (s, _) => symbols(s).map(intern) }
+    val cnts = vocab.map(_._2)
+    val out = Array.newBuilder[Merge]
+    var step = 1
+    var done = false
+    while (step <= m && !done) {
+      val symCnt = new Array[Long](names.length)
+      val pairCnt = mutable.LongMap.empty[Long]
+      var w = 0
+      while (w < words.length) {
+        val syms = words(w)
+        val c = cnts(w)
+        var i = 0
+        while (i < syms.length) {
+          symCnt(syms(i)) += c
+          if (i + 1 < syms.length) {
+            val k = (syms(i).toLong << 32) | syms(i + 1).toLong
+            pairCnt(k) = pairCnt.getOrElse(k, 0L) + c
+          }
+          i += 1
+        }
+        w += 1
+      }
+      if (pairCnt.isEmpty) done = true
+      else {
+        var bestA = -1
+        var bestB = -1
+        var bestCnt = 0L
+        var bestScore = 0L
+        pairCnt.foreachEntry { (k, pc) =>
+          val (a, b) = ((k >>> 32).toInt, k.toInt)
+          val sc = score(pc, symCnt(a), symCnt(b))
+          val wins = bestA < 0 || sc > bestScore || (sc == bestScore && {
+            val byA = keys(a).binaryCompare(keys(bestA))
+            byA < 0 || (byA == 0 && keys(b).binaryCompare(keys(bestB)) < 0)
+          })
+          if (wins) { bestA = a; bestB = b; bestCnt = pc; bestScore = sc }
+        }
+        out += ((step, names(bestA), names(bestB), bestCnt, bestScore))
+        val ab = intern(merged(names(bestA), names(bestB)))
+        w = 0
+        while (w < words.length) {
+          words(w) = mergePair(words(w), bestA, bestB, ab)
+          w += 1
+        }
+        step += 1
+      }
+    }
+    out.result()
+  }
+
+  /** `syms` with every (a, b) occurrence, scanned left to right without
+    * overlap, replaced by `ab`; `syms` itself when the pair is absent. */
+  private def mergePair(syms: Array[Int], a: Int, b: Int, ab: Int): Array[Int] = {
+    var i = 0
+    while (i + 1 < syms.length && !(syms(i) == a && syms(i + 1) == b)) i += 1
+    if (i + 1 >= syms.length) syms
+    else {
+      val out = Array.newBuilder[Int]
+      out.addAll(syms, 0, i)
+      while (i < syms.length) {
+        if (i + 1 < syms.length && syms(i) == a && syms(i + 1) == b) {
+          out += ab
+          i += 2
+        } else {
+          out += syms(i)
+          i += 1
+        }
+      }
+      out.result()
+    }
+  }
+}

@@ -71,6 +71,13 @@ object Unigram {
         call_function("shiftleft", c - p, lit(16)), e)
   }
 
+  /** [[ilog2q]] on the driver: the same shifts on a `Long`, so a score
+    * computed in memory equals the Catalyst expression's. */
+  private[operators] def ilog2q(c: Long): Long = {
+    val e = 63 - java.lang.Long.numberOfLeadingZeros(c)
+    e.toLong * 65536L + (((c - (1L << e)) << 16) >>> e)
+  }
+
   /** Every substring of `word` with length 1..maxLen, multiplicity kept
     * (the seed-count weighting). */
   private def allSubstrings(word: Column, maxLen: Int): Column =

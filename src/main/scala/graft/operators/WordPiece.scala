@@ -13,10 +13,13 @@ import org.apache.spark.sql.functions._
   * a word with any unmatchable remainder becomes one `[UNK]` token.
   *
   * Scale shape — the [[Bpe]] vocab-table discipline end to end: ONE
-  * corpus scan builds the (word, cnt) vocabulary; each merge round runs
-  * a vocab-sized pair count + a vocab-sized symbol count + a 1-row
-  * argmax collect + one literal scan-side `replace`
-  * (`localCheckpoint` per round, plans never nest). Application never
+  * corpus scan builds the (word, cnt) vocabulary; a vocab of at most
+  * [[MergeLoop.InMemoryRows]] rows is collected once and every merge
+  * round — pair counts, symbol counts, the scored argmax — runs on the
+  * driver ([[MergeLoop]], the loop BPE trains with), one Spark job per
+  * training. A larger vocab falls back to the distributed loop: per round
+  * a vocab-sized pair count + a vocab-sized symbol count + a 1-row argmax
+  * collect + one literal scan-side `replace`. Application never
   * joins: the final vocabulary is BOUNDED (alphabet + one symbol per
   * merge), rides into the scan as a reference object of the native
   * whole-stage-codegen kernel [[graft.plans.WordPieceEncode]], and each
@@ -76,22 +79,45 @@ object WordPiece {
       m: Int): Array[(Int, String, String, Long, Long)] =
     trainOnWords(Bpe.wordVocab(docs, textCol), m)
 
-  /** [[train]] over a prepared `(word, cnt)` vocab frame. The symbol
+  /** [[train]] over a prepared `(word, cnt)` vocab frame. */
+  def trainOnWords(
+      wordVocab: DataFrame,
+      m: Int): Array[(Int, String, String, Long, Long)] =
+    trainOnWords(wordVocab, m, MergeLoop.InMemoryRows)
+
+  /** [[trainOnWords]] with the in-memory row bound as an argument: the
+    * seam specs use to run the distributed loop on a small vocab. A vocab
+    * of at most `bound` rows trains in [[MergeLoop]] with the score
+    * `ilog2q(pcnt) − ilog2q(ca) − ilog2q(cb)` and [[mergedSym]]. */
+  private[operators] def trainOnWords(
+      wordVocab: DataFrame,
+      m: Int,
+      bound: Int): Array[(Int, String, String, Long, Long)] = {
+    require(m > 0, s"need at least one merge, got $m")
+    val vocab = wordVocab.select(symStrWp(col("word")).as("s"), col("cnt"))
+    MergeLoop.collect(vocab, bound) match {
+      case Some(rows) =>
+        MergeLoop.train(rows, m,
+          (pcnt, ca, cb) =>
+            Unigram.ilog2q(pcnt) - Unigram.ilog2q(ca) - Unigram.ilog2q(cb),
+          mergedSym)
+      case None => distributedMerges(vocab, m)
+    }
+  }
+
+  /** The merge loop for a vocab too large for the driver. The symbol
     * vocab is materialized ONCE; each round's merge is a CHAINED literal
-    * `replace` over that base (the [[Bpe]] trainOnVocab discipline:
+    * `replace` over that base (the [[Bpe]] distributed-loop discipline:
     * one Spark job per round — the argmax — instead of two; identical
     * pair/symbol statistics, so the merge trajectory is bit-identical),
     * with the chain folded into a fresh checkpoint every
     * [[Bpe.CheckpointEvery]] merges so expression depth stays bounded
     * for production-sized m (shared constant: the two merge loops must
     * not drift if the fold interval is retuned). */
-  def trainOnWords(
-      wordVocab: DataFrame,
+  private def distributedMerges(
+      vocab: DataFrame,
       m: Int): Array[(Int, String, String, Long, Long)] = {
-    require(m > 0, s"need at least one merge, got $m")
-    var base = wordVocab
-      .select(symStrWp(col("word")).as("s"), col("cnt"))
-      .localCheckpoint(true)
+    var base = vocab.localCheckpoint(true)
     var sym: org.apache.spark.sql.Column = col("s")
     var depth = 0
     val merges = Array.newBuilder[(Int, String, String, Long, Long)]

@@ -24,6 +24,14 @@ class UnigramSpec extends SparkSpec {
     assert(out(3L) == 65536L + 32768L)
   }
 
+  test("ilog2q on a Long equals the Catalyst expression, past 2^47 too") {
+    val vals = Seq(1L, 2L, 3L, 5L, 6L, 1000L, 65535L, 65537L, (1L << 47) + 12345L,
+      (1L << 50) + (1L << 49) + 7L, Long.MaxValue)
+    val out = vals.toDF("c").select($"c", Unigram.ilog2q($"c").as("lg"))
+      .as[(Long, Long)].collect().toMap
+    vals.foreach(c => assert(Unigram.ilog2q(c) == out(c), s"c = $c"))
+  }
+
   test("viterbi segmentation prefers high-score pieces and backtraces them") {
     // corpus: 'abab' dominant => piece 'ab' should absorb it
     val docs = Seq.fill(50)((1L, "abab")).zipWithIndex
