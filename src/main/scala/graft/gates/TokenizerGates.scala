@@ -361,9 +361,10 @@ private[graft] object TokenizerGates {
             .mkString("", "\nUNION ALL\n", "")}""".stripMargin),
 
     // §2#36g the trained tokenizer APPLIED: segmentation on the word vocab
-    // (per-word cost, weighted by count), global top-40 subwords.
-    // ONE checkpointed vocab feeds training AND application (r17: the
-    // corpus scan + vocab groupBy was paid twice)
+    // (Bpe.segment, per-word cost, weighted by count), global top-40
+    // subwords (Subwords.counts) — the call perfbench's tokenize step
+    // makes. ONE checkpointed vocab feeds training AND application (r17:
+    // the corpus scan + vocab groupBy was paid twice)
     Gate("q_bpe_tokenize", (s, dir) => {
       val vocab = Bpe.wordVocab(Tables.documents(s, dir), "text")
         .localCheckpoint(true)
@@ -422,12 +423,13 @@ private[graft] object TokenizerGates {
             .mkString("", "\nUNION ALL\n", "")}""".stripMargin),
 
     // §2#36l the byte-level tokenizer APPLIED: segmentation on the
-    // pre-token vocab, global top-40 subword byte sequences (hex)
+    // pre-token vocab (Bpe.segmentBytes), global top-40 subword byte
+    // sequences (hex) by the shared Subwords.counts
     Gate("q_bpe_bytes_tokenize", (s, dir) => {
       val vocab = Bpe.byteVocab(Tables.documents(s, dir), "text")
         .localCheckpoint(true)
-      Bpe.byteSubwordCountsOnWords(vocab,
-        Bpe.trainBytesOnWords(vocab, m = 8), k = 40)
+      Subwords.counts(
+        Bpe.segmentBytes(vocab, Bpe.trainBytesOnWords(vocab, m = 8)), k = 40)
     },
       s"""WITH ${bpeBytesOracleCtes(8)},
          |bsw AS (SELECT unnest(string_split(substring(s, 2, length(s) - 2),
@@ -440,6 +442,7 @@ private[graft] object TokenizerGates {
     // §2#36m doc-grain byte tokenization — what packing consumes at the
     // GPT-2 grain: each DISTINCT pre-token segments once (vocab-table
     // trick), documents re-assemble into ordered hex-token sequences
+    // (Bpe.docByteTokensOnVocab → the shared Subwords.docTokens)
     Gate("q_bpe_bytes_doc_ids", (s, dir) => {
       val docs = Tables.documents(s, dir)
       // the training vocab IS the distinct pre-token set the doc-grain
@@ -477,14 +480,14 @@ private[graft] object TokenizerGates {
         "cast(score AS bigint) AS score FROM u3scr"),
 
     // §2#36i applying the trained unigram artifact: Viterbi-segment the
-    // corpus vocab under the final piece scores, emit the top-40 subword
-    // corpus frequencies (the q_bpe_tokenize twin — same output shape,
-    // different learned vocabulary)
+    // corpus vocab under the final piece scores (Unigram.segment), emit
+    // the top-40 subword corpus frequencies (Subwords.counts, as
+    // q_bpe_tokenize — same output shape, different learned vocabulary)
     Gate("q_unigram_tokenize", (s, dir) => {
       val vocab = Bpe.wordVocab(Tables.documents(s, dir), "text")
         .localCheckpoint(true)
       val art = Unigram.trainArtifactOnVocab(vocab, rounds = 2, keepK = 48)
-      Unigram.subwordCountsOnVocab(vocab, art, k = 40)
+      Subwords.counts(Unigram.segment(vocab, art), k = 40)
     },
       // application replay: round-3 segmentation counts under the artifact
       "WITH RECURSIVE " + unigramOracleCtes +
@@ -495,7 +498,7 @@ private[graft] object TokenizerGates {
     // what packing consumes: every eligible word Viterbi-segments ONCE
     // (vocab-table trick), pieces map to dense ids, documents re-assemble
     // into their ordered token-id sequences (comma-joined — a string
-    // sequence hashes engine-portably)
+    // sequence hashes engine-portably) by the shared Subwords.docTokens
     Gate("q_unigram_doc_ids", (s, dir) => {
       val docs = Tables.documents(s, dir)
       val art = Unigram.trainArtifact(docs, "text", rounds = 2, keepK = 48)
@@ -547,15 +550,16 @@ private[graft] object TokenizerGates {
     // §2#36o the WordPiece tokenizer APPLIED — greedy longest-match-first
     // against the BOUNDED final vocabulary (alphabet + one symbol per
     // merge; no merge replay): each DISTINCT word encodes once through
-    // the native whole-stage-codegen kernel (plans/TextExpressions.scala:
-    // WordPieceEncode — the vocab rides as a reference object, never a
-    // join), unmatchable words collapse to one [UNK]; top-40 subwords
+    // the native whole-stage-codegen kernel (WordPiece.segment;
+    // plans/TextExpressions.scala: WordPieceEncode — the vocab rides as a
+    // reference object, never a join), unmatchable words collapse to one
+    // [UNK]; top-40 subwords by the shared Subwords.counts
     Gate("q_wordpiece_tokenize", (s, dir) => {
       val vocab = Bpe.wordVocab(Tables.documents(s, dir), "text")
         .localCheckpoint(true)
       val merges = WordPiece.trainOnWords(vocab, m = 8)
-      WordPiece.subwordCountsOnWords(vocab,
-        WordPiece.finalVocabOnWords(vocab, merges), k = 40)
+      Subwords.counts(
+        WordPiece.segment(vocab, WordPiece.finalVocabOnWords(vocab, merges)), k = 40)
     },
       // greedy longest-match-first replay: recursive position walk per
       // vocab word against the final vocabulary (list_max over matching
@@ -568,6 +572,7 @@ private[graft] object TokenizerGates {
     // §2#36p doc-grain WordPiece tokenization — the packing consumable
     // at the BERT grain: greedy pieces map to dense ids (rank over the
     // bounded vocab), documents re-assemble into ordered id sequences
+    // (WordPiece.docTokenIds → the shared Subwords.docTokens)
     Gate("q_wordpiece_doc_ids", (s, dir) => {
       val docs = Tables.documents(s, dir)
       val vocab = Bpe.wordVocab(docs, "text").localCheckpoint(true)
@@ -597,7 +602,8 @@ private[graft] object TokenizerGates {
     // four families train on the corpus and report exact integer totals
     // (unit occurrences, count-weighted chars, tokens) over their own
     // eligible universe (word-grain for char-BPE/unigram/WordPiece;
-    // raw pre-tokens for byte-BPE — its n_chars is its own basis).
+    // raw pre-tokens for byte-BPE — its n_chars is its own basis), each
+    // family's segment function feeding the one Subwords.totals.
     // Pure integers, no division — consumers compute chars/token
     Gate("q_tokenizer_eval", (s, dir) => {
       val docs = Tables.documents(s, dir)
@@ -637,14 +643,14 @@ private[graft] object TokenizerGates {
         val byteMerges = Await.result(fBytes, bound)
         val uniArtifact = Await.result(fUni, bound)
         val wpMerges = Await.result(fWp, bound)
-        row("bpe_char", Bpe.charTokenTotalsOnWords(vocab, charMerges))
+        row("bpe_char", Subwords.totals(Bpe.segment(vocab, charMerges)))
           .unionByName(row("bpe_bytes",
-            Bpe.byteTokenTotalsOnWords(bvocab, byteMerges)))
+            Subwords.totals(Bpe.segmentBytes(bvocab, byteMerges))))
           .unionByName(row("unigram",
-            Unigram.tokenTotalsOnVocab(vocab, uniArtifact)))
+            Subwords.totals(Unigram.segment(vocab, uniArtifact))))
           .unionByName(row("wordpiece",
-            WordPiece.tokenTotalsOnWords(vocab,
-              WordPiece.finalVocabOnWords(vocab, wpMerges))))
+            Subwords.totals(WordPiece.segment(vocab,
+              WordPiece.finalVocabOnWords(vocab, wpMerges)))))
       } finally pool.shutdown()
     },
       // tokenizer comparison: all four trajectory replays in one statement,

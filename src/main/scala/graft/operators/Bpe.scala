@@ -40,14 +40,16 @@ object Bpe {
       .groupBy(col("word"))
       .agg(count(lit(1)).as("cnt"))
 
+  /** The sentinel encoding of a word of `n` symbols,
+    * `<D>sym(1)<D><D>sym(2)<D>…<D>sym(n)<D>`, `sym` giving the symbol at
+    * 1-based position `i`: the skeleton of the char, byte and WordPiece
+    * encoders. */
+  private[operators] def delimited(n: Column)(sym: Column => Column): Column =
+    concat(lit(D), concat_ws(D + D, transform(sequence(lit(1), n), sym)), lit(D))
+
   /** Sentinel-delimited character-symbol encoding of `word`. */
   private def symStr(word: Column): Column =
-    concat(lit(D),
-      concat_ws(D + D,
-        transform(
-          sequence(lit(1), length(word)),
-          i => substring(word, i, lit(1)))),
-      lit(D))
+    delimited(length(word))(i => substring(word, i, lit(1)))
 
   /** Symbols of a delimited string: strip the outer sentinels, split on the
     * doubled inner sentinel.
@@ -71,6 +73,23 @@ object Bpe {
       .agg(sum(col("cnt")).as("pcnt"))
   }
 
+  /** `encoded` with each merge `(a, b, ab)` applied in order: ONE literal
+    * `replace` of `<D>a<D><D>b<D>` with `<D>ab<D>` per merge — BPE's
+    * greedy left-to-right non-overlapping merge, and `replace()`'s
+    * semantics in any SQL engine. */
+  private[operators] def applyMerges(
+      encoded: Column,
+      merges: Seq[(String, String, String)]): Column =
+    merges.foldLeft(encoded) { case (s, (a, b, ab)) =>
+      replace(s, lit(D + a + D + D + b + D), lit(D + ab + D))
+    }
+
+  /** The pieces of an encoded word under a trained merge table. */
+  private def piecesOf(
+      encoded: Column,
+      merges: Array[(Int, String, String, Long)]): Column =
+    symsOf(applyMerges(encoded, merges.map { case (_, a, b, _) => (a, b, a + b) }))
+
   /** Train `m` merges. Returns the ordered merge table
     * (step, sym_a, sym_b, pair_cnt) — the tokenizer artifact. Stops early
     * if no pair remains.
@@ -83,9 +102,8 @@ object Bpe {
 
   /** [[train]] over a prepared `(word, cnt)` vocab frame — gates that
     * also apply/score the tokenizer pass ONE (checkpointed) vocab here
-    * and to the apply-side `*OnWords` twins, so the corpus scan +
-    * vocab groupBy is paid once per gate instead of once per call
-    * (guide §2.4: share the exchange). */
+    * and to [[segment]], so the corpus scan + vocab groupBy is paid once
+    * per gate instead of once per call (guide §2.4: share the exchange). */
   def trainOnWords(
       vocab: DataFrame,
       m: Int): Array[(Int, String, String, Long)] =
@@ -100,71 +118,16 @@ object Bpe {
     trainOnVocab(vocab.select(symStr(col("word")).as("s"), col("cnt")), m, bound)
 
   /** The merges of any sentinel-delimited (s, cnt) vocab frame — shared
-    * by the char-grain [[train]] and byte-grain [[trainBytes]] paths. A
-    * vocab of at most `bound` rows trains in memory ([[MergeLoop]]: one
-    * collect, then every round on the driver, the score being the pair
-    * count); a larger one runs [[distributedMerges]].
-    */
+    * by the char-grain [[train]] and byte-grain [[trainBytes]] paths:
+    * [[MergeLoop]] with the pair count as the score. */
   private def trainOnVocab(
       vocab: DataFrame,
       m: Int,
-      bound: Int): Array[(Int, String, String, Long)] = {
-    require(m > 0, s"need at least one merge, got $m")
-    MergeLoop.collect(vocab, bound) match {
-      case Some(rows) =>
-        MergeLoop.train(rows, m, (pcnt, _, _) => pcnt, _ + _)
-          .map { case (step, a, b, pcnt, _) => (step, a, b, pcnt) }
-      case None => distributedMerges(vocab, m)
-    }
-  }
-
-  /** The merge loop for a vocab too large for the driver. Each round:
-    * one vocab-sized pair count + a 1-row argmax collect.
-    *
-    * The vocab is materialized ONCE (`localCheckpoint`); each round's
-    * merge is then a CHAINED literal `replace` over that base, so a
-    * round costs exactly one Spark job (the argmax) instead of two —
-    * the per-round eager re-checkpoint this loop used to pay was a full
-    * extra job per merge for a vocab-sized table (guide §1.2: the
-    * sequential-job count IS the wall clock of a driver loop). The
-    * replace chain is re-applied scan-side each round (O(step) cheap
-    * string ops per vocab row); every [[CheckpointEvery]] merges the
-    * chain is folded back into a fresh checkpoint so expression depth
-    * stays bounded for large-m production trainings. Pair statistics,
-    * and therefore the merge trajectory, are bit-identical to the
-    * materialize-every-round form.
-    */
-  private[operators] val CheckpointEvery = 16
-  private def distributedMerges(
-      vocab0: DataFrame,
-      m: Int): Array[(Int, String, String, Long)] = {
-    var base = vocab0.localCheckpoint(true)
-    var sym: Column = col("s")
-    var depth = 0
-    val merges = Array.newBuilder[(Int, String, String, Long)]
-    var step = 1
-    var done = false
-    while (step <= m && !done) {
-      val best = pairCounts(base.select(sym.as("s"), col("cnt")))
-        .orderBy(col("pcnt").desc, col("a"), col("b"))
-        .limit(1)
-        .collect()
-      if (best.isEmpty) done = true
-      else {
-        val (a, b, c) = (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
-        merges += ((step, a, b, c))
-        sym = replace(sym, lit(D + a + D + D + b + D), lit(D + a + b + D))
-        depth += 1
-        if (depth >= CheckpointEvery) {
-          base = base.select(sym.as("s"), col("cnt")).localCheckpoint(true)
-          sym = col("s")
-          depth = 0
-        }
-        step += 1
-      }
-    }
-    merges.result()
-  }
+      bound: Int): Array[(Int, String, String, Long)] =
+    MergeLoop.train(vocab, m, bound, (pcnt, _, _) => pcnt,
+      v => pairCounts(v).select(col("a"), col("b"), col("pcnt"), col("pcnt").as("score")),
+      _ + _)
+      .map { case (step, a, b, pcnt, _) => (step, a, b, pcnt) }
 
   /** The merge table as a DataFrame (for gates/persistence). */
   def mergeTable(
@@ -176,76 +139,21 @@ object Bpe {
         col("pair_cnt"))
   }
 
-  /** Apply a trained merge list to the corpus and return per-subword
-    * corpus frequencies (top `k` by count, ties to the smaller subword):
-    * segmentation happens on the word VOCAB (corpus scanned once for
-    * counts), each merge is one literal scan-side `replace`.
-    */
-  def subwordCounts(
-      docs: DataFrame,
-      textCol: String,
-      merges: Array[(Int, String, String, Long)],
-      k: Int): DataFrame =
-    subwordCountsOnWords(wordVocab(docs, textCol), merges, k)
+  /** A `(word, cnt)` vocab segmented under a trained char-grain merge
+    * list: each merge is one literal scan-side `replace`, so the corpus
+    * is scanned once, for the vocab. */
+  def segment(
+      vocab: DataFrame,
+      merges: Array[(Int, String, String, Long)]): Subwords.Segmented =
+    Subwords.Segmented(vocab, piecesOf(symStr(col("word")), merges))
 
-  /** [[subwordCounts]] over a prepared `(word, cnt)` vocab frame. */
+  /** Top `k` subword corpus frequencies under a char-grain merge list
+    * ([[Subwords.counts]] of [[segment]]). */
   def subwordCountsOnWords(
       vocab: DataFrame,
       merges: Array[(Int, String, String, Long)],
-      k: Int): DataFrame = {
-    val applied = merges.foldLeft(symStr(col("word"))) { case (s, (_, a, b, _)) =>
-      replace(s, lit(D + a + D + D + b + D), lit(D + a + b + D))
-    }
-    vocab
-      .select(col("cnt"), explode(symsOf(applied)).as("subword"))
-      .groupBy(col("subword"))
-      .agg(sum(col("cnt")).as("n_occurrences"))
-      .orderBy(col("n_occurrences").desc, col("subword"))
-      .limit(k)
-  }
-
-  /** Corpus token TOTALS under a trained char-grain merge list — the
-    * tokenizer-comparison row: units = eligible word occurrences,
-    * chars/tokens count-weighted. One vocab-sized pass. */
-  def charTokenTotals(
-      docs: DataFrame,
-      textCol: String,
-      merges: Array[(Int, String, String, Long)]): DataFrame =
-    charTokenTotalsOnWords(wordVocab(docs, textCol), merges)
-
-  /** [[charTokenTotals]] over a prepared `(word, cnt)` vocab frame. */
-  def charTokenTotalsOnWords(
-      vocab: DataFrame,
-      merges: Array[(Int, String, String, Long)]): DataFrame = {
-    val applied = merges.foldLeft(symStr(col("word"))) { case (s, (_, a, b, _)) =>
-      replace(s, lit(D + a + D + D + b + D), lit(D + a + b + D))
-    }
-    vocab.agg(
-      sum(col("cnt")).cast("long").as("n_units"),
-      sum(length(col("word")) * col("cnt")).cast("long").as("n_chars"),
-      sum(size(symsOf(applied)) * col("cnt")).cast("long").as("n_tokens"))
-  }
-
-  /** [[charTokenTotals]] at the byte grain (pre-token universe — raw
-    * text incl. case/punctuation, so n_chars is its own basis). */
-  def byteTokenTotals(
-      docs: DataFrame,
-      textCol: String,
-      merges: Array[(Int, String, String, Long)]): DataFrame =
-    byteTokenTotalsOnWords(byteVocab(docs, textCol), merges)
-
-  /** [[byteTokenTotals]] over a prepared `(word, cnt)` pre-token vocab. */
-  def byteTokenTotalsOnWords(
-      vocab: DataFrame,
-      merges: Array[(Int, String, String, Long)]): DataFrame = {
-    val applied = merges.foldLeft(byteSymStr(col("word"))) { case (s, (_, a, b, _)) =>
-      replace(s, lit(D + a + D + D + b + D), lit(D + a + b + D))
-    }
-    vocab.agg(
-      sum(col("cnt")).cast("long").as("n_units"),
-      sum(length(col("word")) * col("cnt")).cast("long").as("n_chars"),
-      sum(size(symsOf(applied)) * col("cnt")).cast("long").as("n_tokens"))
-  }
+      k: Int): DataFrame =
+    Subwords.counts(segment(vocab, merges), k)
 
   // ---------------------------------------------------------------------
   // Byte-level BPE (the GPT-2/tiktoken shape, Radford et al. 2019): the
@@ -283,12 +191,7 @@ object Bpe {
     * precondition — and hex strings hash engine-portably. */
   private def byteSymStr(word: Column): Column = {
     val hx = hex(encode(word, "UTF-8"))
-    concat(lit(D),
-      concat_ws(D + D,
-        transform(
-          sequence(lit(1), (length(hx) / 2).cast("int")),
-          i => substring(hx, i * 2 - 1, lit(2)))),
-      lit(D))
+    delimited((length(hx) / 2).cast("int"))(i => substring(hx, i * 2 - 1, lit(2)))
   }
 
   /** Train `m` byte-grain merges over the pre-token vocabulary. Merge
@@ -314,79 +217,29 @@ object Bpe {
       bound: Int): Array[(Int, String, String, Long)] =
     trainOnVocab(vocab.select(byteSymStr(col("word")).as("s"), col("cnt")), m, bound)
 
-  /** Apply a byte-grain merge list: per-subword corpus frequencies, the
-    * subword as its hex byte sequence (top `k` by count, ties to the
-    * smaller hex string). Segmentation runs on the pre-token VOCAB —
-    * the corpus is scanned once for counts. */
-  def byteSubwordCounts(
-      docs: DataFrame,
-      textCol: String,
-      merges: Array[(Int, String, String, Long)],
-      k: Int): DataFrame =
-    byteSubwordCountsOnWords(byteVocab(docs, textCol), merges, k)
-
-  /** [[byteSubwordCounts]] over a prepared `(word, cnt)` pre-token vocab. */
-  def byteSubwordCountsOnWords(
+  /** A `(word, cnt)` pre-token vocab segmented under a byte-grain merge
+    * list, each piece its hex byte sequence. */
+  def segmentBytes(
       vocab: DataFrame,
-      merges: Array[(Int, String, String, Long)],
-      k: Int): DataFrame = {
-    val applied = merges.foldLeft(byteSymStr(col("word"))) { case (s, (_, a, b, _)) =>
-      replace(s, lit(D + a + D + D + b + D), lit(D + a + b + D))
-    }
-    vocab
-      .select(col("cnt"), explode(symsOf(applied)).as("subword"))
-      .groupBy(col("subword"))
-      .agg(sum(col("cnt")).as("n_occurrences"))
-      .orderBy(col("n_occurrences").desc, col("subword"))
-      .limit(k)
-  }
+      merges: Array[(Int, String, String, Long)]): Subwords.Segmented =
+    Subwords.Segmented(vocab, piecesOf(byteSymStr(col("word")), merges))
 
-  /** Doc-grain byte tokenization — the packing-stage consumable, the
-    * [[Unigram.docTokenIds]] twin at the byte-BPE grain: each document's
-    * pre-token sequence segments under the merges (each DISTINCT
-    * pre-token once, the vocab-table trick) and the document becomes its
-    * ordered comma-joined hex-token sequence plus a token count. */
-  def docByteTokens(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      merges: Array[(Int, String, String, Long)]): DataFrame = {
-    val words = docs.select(col(idCol),
-      posexplode(pretokens(col(textCol))).as(Seq("wpos", "word")))
-    docByteTokensFromWords(words, idCol, merges,
-      words.select(col("word")).distinct())
-  }
-
-  /** [[docByteTokens]] with the distinct pre-token set supplied — a gate
-    * that already built the `(word, cnt)` pre-token vocab (for training)
-    * passes it here so the doc-grain distinct is not recomputed. */
+  /** Doc-grain byte tokenization — the packing-stage consumable at the
+    * byte-BPE grain: each document's pre-token sequence segments under
+    * the merges and becomes its ordered comma-joined hex-token sequence
+    * plus a token count, `(idCol, n_tokens, token_hex)`. `vocab` is the
+    * `(word, cnt)` pre-token vocab of `docs` ([[byteVocab]]), so a gate
+    * that trained on it does not recompute the distinct pre-token set. */
   def docByteTokensOnVocab(
       docs: DataFrame,
       idCol: String,
       textCol: String,
       merges: Array[(Int, String, String, Long)],
-      vocab: DataFrame): DataFrame =
-    docByteTokensFromWords(
+      vocab: DataFrame): DataFrame = {
+    val seg = segmentBytes(vocab, merges)
+    Subwords.docTokens(
       docs.select(col(idCol),
         posexplode(pretokens(col(textCol))).as(Seq("wpos", "word"))),
-      idCol, merges, vocab.select(col("word")))
-
-  private def docByteTokensFromWords(
-      words: DataFrame,
-      idCol: String,
-      merges: Array[(Int, String, String, Long)],
-      wordSet: DataFrame): DataFrame = {
-    val applied = merges.foldLeft(byteSymStr(col("word"))) { case (s, (_, a, b, _)) =>
-      replace(s, lit(D + a + D + D + b + D), lit(D + a + b + D))
-    }
-    val wordToks = wordSet
-      .select(col("word"), symsOf(applied).as("toks"))
-    words.join(wordToks, "word")
-      .groupBy(col(idCol))
-      .agg(collect_list(struct(col("wpos"), col("toks"))).as("_t"))
-      .select(col(idCol),
-        graft.plans.TextExpressions.tokenSeqJoin(col("_t")).as("_r"))
-      .select(col(idCol), col("_r.n_tokens").as("n_tokens"),
-        col("_r.token_ids").as("token_hex"))
+      idCol, seg.vocab.select(col("word"), seg.pieces.as("toks")), "token_hex")
   }
 }

@@ -1,31 +1,31 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.unsafe.types.UTF8String
 import scala.collection.mutable
 
-/** The merge rounds of subword training, run on the driver: the one
-  * in-memory loop behind [[Bpe]] (char and byte grain) and [[WordPiece]].
+/** The merge rounds of subword training: the one loop behind [[Bpe]]
+  * (char and byte grain) and [[WordPiece]], in memory or distributed.
   *
   * A merge round needs the whole vocabulary's pair statistics, and the
   * vocabulary (distinct words with counts) is small next to the corpus:
   * thousands to hundreds of thousands of rows. When it fits under
   * [[InMemoryRows]] the sentinel-delimited `(s, cnt)` vocab is collected
-  * ONCE and all `m` rounds run here, so a training costs one Spark job
-  * (a few incremental scan jobs on a many-partition vocab) whatever `m`
-  * is; the distributed loops cost one job plus one set of generated
-  * classes per round. A larger vocab falls back to the trainer's
+  * ONCE and all `m` rounds run on the driver, so a training costs one
+  * Spark job (a few incremental scan jobs on a many-partition vocab)
+  * whatever `m` is; the distributed loop costs one job plus one set of
+  * generated classes per round. A larger vocab falls back to the
   * distributed loop, the only path that handles a vocab too large for the
   * driver.
   *
-  * The rules are the distributed loops' own, so both paths give the same
-  * merge table (pinned by `MergeLoopSpec`): pair counts over every
-  * adjacent pair weighted by `cnt`; argmax by `(score desc, a, b)` with
-  * strings in UTF-8 byte order (Spark's string order); the merge a greedy
-  * left-to-right non-overlapping scan, which is what one literal `replace`
-  * of `<D>a<D><D>b<D>` does on the sentinel encoding; stop when no pair
-  * is left.
+  * Both paths apply the same rules and give the same merge table (pinned
+  * by `MergeLoopSpec`): pair counts over every adjacent pair weighted by
+  * `cnt`; argmax by `(score desc, a, b)` with strings in UTF-8 byte order
+  * (Spark's string order); the merge a greedy left-to-right
+  * non-overlapping scan, which is what one literal `replace` of
+  * `<D>a<D><D>b<D>` does on the sentinel encoding ([[Bpe.applyMerges]]);
+  * stop when no pair is left.
   */
 private[operators] object MergeLoop {
 
@@ -41,6 +41,29 @@ private[operators] object MergeLoop {
 
   /** One merge: (step, sym_a, sym_b, pair_cnt, score). */
   type Merge = (Int, String, String, Long, Long)
+
+  /** Up to `m` merges of the sentinel-delimited `(s, cnt)` vocab: in
+    * memory when it has at most `bound` rows, else by the distributed
+    * loop. Each round scores its pairs by the trainer's rule, given twice:
+    * `score` maps `(pair_cnt, cnt_a, cnt_b)` to the argmax key on the
+    * driver, where `cnt_a` and `cnt_b` are the count-weighted symbol
+    * frequencies, and `scored` maps a round's `(s, cnt)` frame to its
+    * scored pairs `(a, b, pcnt, score)`. `merged` names the merged symbol
+    * of a pair.
+    */
+  def train(
+      vocab: DataFrame,
+      m: Int,
+      bound: Int,
+      score: (Long, Long, Long) => Long,
+      scored: DataFrame => DataFrame,
+      merged: (String, String) => String): Array[Merge] = {
+    require(m > 0, s"need at least one merge, got $m")
+    collect(vocab, bound) match {
+      case Some(rows) => inMemory(rows, m, score, merged)
+      case None => distributed(vocab, m, scored, merged)
+    }
+  }
 
   /** The `(s, cnt)` vocab's rows when it has at most `bound` of them,
     * else `None`: `limit(bound + 1).collect()`, one job over the
@@ -58,12 +81,8 @@ private[operators] object MergeLoop {
   private def symbols(s: String): Array[String] =
     s.substring(1, s.length - 1).split(Bpe.D + Bpe.D, -1)
 
-  /** Run up to `m` merge rounds over collected `(s, cnt)` rows. `score`
-    * maps `(pair_cnt, cnt_a, cnt_b)` to the argmax key, where `cnt_a` and
-    * `cnt_b` are the count-weighted symbol frequencies; `merged` names the
-    * merged symbol of a pair. Stops early when no pair is left.
-    */
-  def train(
+  /** Up to `m` merge rounds over collected `(s, cnt)` rows. */
+  private def inMemory(
       vocab: Array[(String, Long)],
       m: Int,
       score: (Long, Long, Long) => Long,
@@ -120,6 +139,58 @@ private[operators] object MergeLoop {
         while (w < words.length) {
           words(w) = mergePair(words(w), bestA, bestB, ab)
           w += 1
+        }
+        step += 1
+      }
+    }
+    out.result()
+  }
+
+  /** Merges the distributed loop chains before folding them into a fresh
+    * checkpoint, so the expression depth of a round stays bounded for
+    * large-m trainings. */
+  private val FoldEvery = 16
+
+  /** The merge loop for a vocab too large for the driver. Each round:
+    * one vocab-sized scored pair count + a 1-row argmax collect.
+    *
+    * The vocab is materialized ONCE (`localCheckpoint`); each round's
+    * merge is then a CHAINED literal `replace` over that base, so a round
+    * costs exactly one Spark job (the argmax) instead of two — an eager
+    * re-checkpoint per round would be a full extra job per merge for a
+    * vocab-sized table (guide §1.2: the sequential-job count IS the wall
+    * clock of a driver loop). The replace chain is re-applied scan-side
+    * each round (O(step) cheap string ops per vocab row) and folded back
+    * into a fresh checkpoint every [[FoldEvery]] merges. Pair statistics,
+    * and therefore the merge trajectory, are bit-identical to the
+    * materialize-every-round form.
+    */
+  private def distributed(
+      vocab: DataFrame,
+      m: Int,
+      scored: DataFrame => DataFrame,
+      merged: (String, String) => String): Array[Merge] = {
+    var base = vocab.localCheckpoint(true)
+    var sym: Column = col("s")
+    var depth = 0
+    val out = Array.newBuilder[Merge]
+    var step = 1
+    var done = false
+    while (step <= m && !done) {
+      val best = scored(base.select(sym.as("s"), col("cnt")))
+        .orderBy(col("score").desc, col("a"), col("b"))
+        .limit(1)
+        .collect()
+      if (best.isEmpty) done = true
+      else {
+        val (a, b) = (best(0).getString(0), best(0).getString(1))
+        out += ((step, a, b, best(0).getLong(2), best(0).getLong(3)))
+        sym = Bpe.applyMerges(sym, Seq((a, b, merged(a, b))))
+        depth += 1
+        if (depth >= FoldEvery) {
+          base = base.select(sym.as("s"), col("cnt")).localCheckpoint(true)
+          sym = col("s")
+          depth = 0
         }
         step += 1
       }

@@ -204,6 +204,11 @@ object Unigram {
       .select(col("piece"), col("used").as("used_cnt"), col("score"))
   }
 
+  /** A `(word, cnt)` vocab Viterbi-segmented under a trained artifact's
+    * final piece scores ([[segmented]]). */
+  def segment(vocab: DataFrame, artifact: DataFrame): Subwords.Segmented =
+    Subwords.Segmented(segmented(vocab, artifact), col("pieces"))
+
   /** Doc-grain tokenization under a trained artifact — what a packing
     * stage actually consumes: each document's eligible words (the
     * tokenizer's `[a-z0-9]+` universe) Viterbi-segment under the final
@@ -233,10 +238,7 @@ object Unigram {
       textCol: String,
       artifact: DataFrame,
       maxLen: Int = MaxPieceLen): DataFrame = {
-    import graft.functions.Text
-    val words = docs.select(col(idCol),
-        posexplode(Text.tokens(col(textCol))).as(Seq("wpos", "word")))
-      .filter(col("word").rlike("^[a-z0-9]+$"))
+    val words = Subwords.docWords(docs, idCol, textCol)
     val vocab = words.select(col("word")).distinct()
       .withColumn("cnt", lit(1L))
     // dense ids: rank over the BOUNDED artifact table (keepK + singles)
@@ -257,56 +259,8 @@ object Unigram {
       .groupBy(col("word"))
       .agg(transform(
         array_sort(collect_list(struct(col("ppos"), col("tid")))),
-        x => coalesce(x.getField("tid"), lit(0L))).as("ids"))
-    words.join(wordIds, Seq("word"), "left")
-      .withColumn("ids", coalesce(col("ids"), array(lit(0L))))
-      .groupBy(col(idCol))
-      .agg(collect_list(struct(col("wpos"), col("ids"))).as("_t"))
-      .select(col(idCol),
-        graft.plans.TextExpressions.tokenSeqJoin(col("_t")).as("_r"))
-      .select(col(idCol), col("_r.n_tokens").as("n_tokens"),
-        col("_r.token_ids").as("token_ids"))
-  }
-
-  /** Corpus token TOTALS under a trained artifact — the
-    * tokenizer-comparison row ([[Bpe.charTokenTotals]] twin). */
-  def tokenTotals(
-      docs: DataFrame,
-      textCol: String,
-      artifact: DataFrame,
-      maxLen: Int = MaxPieceLen): DataFrame =
-    tokenTotalsOnVocab(Bpe.wordVocab(docs, textCol), artifact, maxLen)
-
-  /** [[tokenTotals]] over a prepared `(word, cnt)` vocab frame. */
-  def tokenTotalsOnVocab(
-      vocab: DataFrame,
-      artifact: DataFrame,
-      maxLen: Int = MaxPieceLen): DataFrame =
-    segmented(vocab, artifact, maxLen).agg(
-      sum(col("cnt")).cast("long").as("n_units"),
-      sum(length(col("word")) * col("cnt")).cast("long").as("n_chars"),
-      sum(size(col("pieces")) * col("cnt")).cast("long").as("n_tokens"))
-
-  /** Apply a trained artifact: segment the corpus vocab under the final
-    * scores and return the top `k` subword corpus frequencies — the
-    * [[Bpe.subwordCounts]] twin. */
-  def subwordCounts(
-      docs: DataFrame,
-      textCol: String,
-      artifact: DataFrame,
-      k: Int,
-      maxLen: Int = MaxPieceLen): DataFrame =
-    subwordCountsOnVocab(Bpe.wordVocab(docs, textCol), artifact, k, maxLen)
-
-  /** [[subwordCounts]] over a prepared `(word, cnt)` vocab frame. */
-  def subwordCountsOnVocab(
-      vocab: DataFrame,
-      artifact: DataFrame,
-      k: Int,
-      maxLen: Int = MaxPieceLen): DataFrame = {
-    pieceCounts(segmented(vocab, artifact, maxLen))
-      .select(col("piece").as("subword"), col("used").as("n_occurrences"))
-      .orderBy(col("n_occurrences").desc, col("subword"))
-      .limit(k)
+        x => coalesce(x.getField("tid"), lit(0L))).as("toks"))
+    Subwords.docTokens(words, idCol, wordIds, "token_ids",
+      unknown = Some(array(lit(0L))))
   }
 }

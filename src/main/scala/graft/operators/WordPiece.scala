@@ -43,18 +43,13 @@ object WordPiece {
   /** The unknown-word token greedy application falls back to. */
   val Unk = "[UNK]"
 
-  import Bpe.{D, symsOf}
+  import Bpe.symsOf
 
   /** Sentinel-delimited WordPiece symbol encoding: first char plain,
     * every later char `##`-prefixed — `abc` → `⟨a⟩⟨##b⟩⟨##c⟩`. */
   private def symStrWp(word: Column): Column =
-    concat(lit(D),
-      concat_ws(D + D,
-        transform(
-          sequence(lit(1), length(word)),
-          i => when(i === 1, substring(word, 1, 1))
-            .otherwise(concat(lit(Cont), word.substr(i, lit(1)))))),
-      lit(D))
+    Bpe.delimited(length(word))(i => when(i === 1, substring(word, 1, 1))
+      .otherwise(concat(lit(Cont), word.substr(i, lit(1)))))
 
   /** Per-symbol corpus frequencies over a (s, cnt) vocab frame. */
   private[operators] def symCounts(vocab: DataFrame): DataFrame =
@@ -86,71 +81,28 @@ object WordPiece {
     trainOnWords(wordVocab, m, MergeLoop.InMemoryRows)
 
   /** [[trainOnWords]] with the in-memory row bound as an argument: the
-    * seam specs use to run the distributed loop on a small vocab. A vocab
-    * of at most `bound` rows trains in [[MergeLoop]] with the score
+    * seam specs use to run the distributed loop on a small vocab. Trains
+    * in [[MergeLoop]] with the score
     * `ilog2q(pcnt) − ilog2q(ca) − ilog2q(cb)` and [[mergedSym]]. */
   private[operators] def trainOnWords(
       wordVocab: DataFrame,
       m: Int,
-      bound: Int): Array[(Int, String, String, Long, Long)] = {
-    require(m > 0, s"need at least one merge, got $m")
-    val vocab = wordVocab.select(symStrWp(col("word")).as("s"), col("cnt"))
-    MergeLoop.collect(vocab, bound) match {
-      case Some(rows) =>
-        MergeLoop.train(rows, m,
-          (pcnt, ca, cb) =>
-            Unigram.ilog2q(pcnt) - Unigram.ilog2q(ca) - Unigram.ilog2q(cb),
-          mergedSym)
-      case None => distributedMerges(vocab, m)
-    }
-  }
+      bound: Int): Array[(Int, String, String, Long, Long)] =
+    MergeLoop.train(wordVocab.select(symStrWp(col("word")).as("s"), col("cnt")),
+      m, bound,
+      (pcnt, ca, cb) => Unigram.ilog2q(pcnt) - Unigram.ilog2q(ca) - Unigram.ilog2q(cb),
+      scoredPairs, mergedSym)
 
-  /** The merge loop for a vocab too large for the driver. The symbol
-    * vocab is materialized ONCE; each round's merge is a CHAINED literal
-    * `replace` over that base (the [[Bpe]] distributed-loop discipline:
-    * one Spark job per round — the argmax — instead of two; identical
-    * pair/symbol statistics, so the merge trajectory is bit-identical),
-    * with the chain folded into a fresh checkpoint every
-    * [[Bpe.CheckpointEvery]] merges so expression depth stays bounded
-    * for production-sized m (shared constant: the two merge loops must
-    * not drift if the fold interval is retuned). */
-  private def distributedMerges(
-      vocab: DataFrame,
-      m: Int): Array[(Int, String, String, Long, Long)] = {
-    var base = vocab.localCheckpoint(true)
-    var sym: org.apache.spark.sql.Column = col("s")
-    var depth = 0
-    val merges = Array.newBuilder[(Int, String, String, Long, Long)]
-    var step = 1
-    var done = false
-    while (step <= m && !done) {
-      val vocab = base.select(sym.as("s"), col("cnt"))
-      val syms = symCounts(vocab)
-      val best = Bpe.pairCounts(vocab)
-        .join(syms.select(col("sym").as("a"), col("scnt").as("ca")), "a")
-        .join(syms.select(col("sym").as("b"), col("scnt").as("cb")), "b")
-        .select(col("a"), col("b"), col("pcnt"),
-          (Unigram.ilog2q(col("pcnt")) - Unigram.ilog2q(col("ca")) -
-            Unigram.ilog2q(col("cb"))).as("score_q"))
-        .orderBy(col("score_q").desc, col("a"), col("b"))
-        .limit(1)
-        .collect()
-      if (best.isEmpty) done = true
-      else {
-        val (a, b) = (best(0).getString(0), best(0).getString(1))
-        merges += ((step, a, b, best(0).getLong(2), best(0).getLong(3)))
-        sym = replace(sym, lit(D + a + D + D + b + D),
-          lit(D + mergedSym(a, b) + D))
-        depth += 1
-        if (depth >= Bpe.CheckpointEvery) {
-          base = base.select(sym.as("s"), col("cnt")).localCheckpoint(true)
-          sym = col("s")
-          depth = 0
-        }
-        step += 1
-      }
-    }
-    merges.result()
+  /** A distributed round's scored pairs over its `(s, cnt)` frame: the
+    * pair counts joined to both symbols' counts → (a, b, pcnt, score). */
+  private def scoredPairs(vocab: DataFrame): DataFrame = {
+    val syms = symCounts(vocab)
+    Bpe.pairCounts(vocab)
+      .join(syms.select(col("sym").as("a"), col("scnt").as("ca")), "a")
+      .join(syms.select(col("sym").as("b"), col("scnt").as("cb")), "b")
+      .select(col("a"), col("b"), col("pcnt"),
+        (Unigram.ilog2q(col("pcnt")) - Unigram.ilog2q(col("ca")) -
+          Unigram.ilog2q(col("cb"))).as("score"))
   }
 
   /** The merge table as a DataFrame (the training gate's output). */
@@ -164,17 +116,11 @@ object WordPiece {
   }
 
   /** The final vocabulary greedy application matches against: the
-    * corpus alphabet (every initial and `##`-continuation single char)
-    * plus one merged symbol per training step. BOUNDED — ≤ 2·|alphabet|
-    * + m entries — so it collects as kernel parameters, never a join.
+    * corpus alphabet (every initial and `##`-continuation single char of
+    * the `(word, cnt)` vocab) plus one merged symbol per training step.
+    * BOUNDED — ≤ 2·|alphabet| + m entries — so it collects as kernel
+    * parameters, never a join.
     */
-  def finalVocab(
-      docs: DataFrame,
-      textCol: String,
-      merges: Array[(Int, String, String, Long, Long)]): Array[String] =
-    finalVocabOnWords(Bpe.wordVocab(docs, textCol), merges)
-
-  /** [[finalVocab]] over a prepared `(word, cnt)` vocab frame. */
   def finalVocabOnWords(
       wordVocab: DataFrame,
       merges: Array[(Int, String, String, Long, Long)]): Array[String] = {
@@ -188,83 +134,32 @@ object WordPiece {
       .distinct
   }
 
-  /** Greedy longest-match-first encoding of every corpus vocab word —
-    * each DISTINCT word encodes once through the native kernel — with
-    * per-subword corpus frequencies (top `k` by count, ties to the
-    * smaller subword), the [[Bpe.subwordCounts]] /
-    * [[Unigram.subwordCounts]] twin.
-    */
-  def subwordCounts(
-      docs: DataFrame,
-      textCol: String,
-      vocab: Array[String],
-      k: Int): DataFrame =
-    subwordCountsOnWords(Bpe.wordVocab(docs, textCol), vocab, k)
+  /** A `(word, cnt)` vocab greedy longest-match-first encoded against the
+    * final vocabulary: each DISTINCT word encodes once through the native
+    * kernel. */
+  def segment(wordVocab: DataFrame, vocab: Array[String]): Subwords.Segmented =
+    Subwords.Segmented(wordVocab,
+      graft.plans.TextExpressions.wordPieceEncode(col("word"), vocab, Unk))
 
-  /** [[subwordCounts]] over a prepared `(word, cnt)` vocab frame. */
-  def subwordCountsOnWords(
-      wordVocab: DataFrame,
-      vocab: Array[String],
-      k: Int): DataFrame =
-    wordVocab
-      .select(col("cnt"),
-        explode(graft.plans.TextExpressions.wordPieceEncode(
-          col("word"), vocab, Unk)).as("subword"))
-      .groupBy(col("subword"))
-      .agg(sum(col("cnt")).as("n_occurrences"))
-      .orderBy(col("n_occurrences").desc, col("subword"))
-      .limit(k)
-
-  /** Corpus token TOTALS under a final vocabulary — the
-    * tokenizer-comparison row ([[Bpe.charTokenTotals]] twin; greedy
-    * encode per DISTINCT word, one vocab-sized pass). */
-  def tokenTotals(
-      docs: DataFrame,
-      textCol: String,
-      vocab: Array[String]): DataFrame =
-    tokenTotalsOnWords(Bpe.wordVocab(docs, textCol), vocab)
-
-  /** [[tokenTotals]] over a prepared `(word, cnt)` vocab frame. */
-  def tokenTotalsOnWords(
-      wordVocab: DataFrame,
-      vocab: Array[String]): DataFrame =
-    wordVocab.agg(
-      sum(col("cnt")).cast("long").as("n_units"),
-      sum(length(col("word")) * col("cnt")).cast("long").as("n_chars"),
-      sum(size(graft.plans.TextExpressions.wordPieceEncode(
-        col("word"), vocab, Unk)) * col("cnt")).cast("long").as("n_tokens"))
-
-  /** Doc-grain WordPiece tokenization — the packing-stage consumable,
-    * the [[Bpe.docByteTokens]] / [[Unigram.docTokenIds]] twin: each
-    * DISTINCT eligible word greedy-encodes once, pieces map to dense
-    * ids (rank over the bounded final vocab, `[UNK]` included),
-    * documents re-assemble into ordered comma-joined id sequences.
-    * Two vocab-sized joins + one doc-grain aggregation.
+  /** Doc-grain WordPiece tokenization — the packing-stage consumable:
+    * each DISTINCT eligible word greedy-encodes once, pieces map to dense
+    * ids (rank over the bounded final vocab, `[UNK]` included), and
+    * documents re-assemble into ordered comma-joined id sequences,
+    * `(idCol, n_tokens, token_ids)`. Two vocab-sized joins + one
+    * doc-grain aggregation.
     */
   def docTokenIds(
       docs: DataFrame,
       idCol: String,
       textCol: String,
       vocab: Array[String]): DataFrame = {
-    import graft.functions.Text
-    val words = docs.select(col(idCol),
-        posexplode(Text.tokens(col(textCol))).as(Seq("wpos", "word")))
-      .filter(col("word").rlike("^[a-z0-9]+$"))
+    val words = Subwords.docWords(docs, idCol, textCol)
     val ids = (vocab :+ Unk).distinct.sorted.zipWithIndex
       .map { case (p, i) => (p, i.toLong + 1L) }
     val idOf = map(ids.flatMap { case (p, i) => Seq(lit(p), lit(i)) }: _*)
-    val wordIds = words.select(col("word")).distinct()
-      .select(col("word"),
-        transform(
-          graft.plans.TextExpressions.wordPieceEncode(
-            col("word"), vocab, Unk),
-          p => element_at(idOf, p)).as("ids"))
-    words.join(wordIds, Seq("word"))
-      .groupBy(col(idCol))
-      .agg(collect_list(struct(col("wpos"), col("ids"))).as("_t"))
-      .select(col(idCol),
-        graft.plans.TextExpressions.tokenSeqJoin(col("_t")).as("_r"))
-      .select(col(idCol), col("_r.n_tokens").as("n_tokens"),
-        col("_r.token_ids").as("token_ids"))
+    val seg = segment(words.select(col("word")).distinct(), vocab)
+    Subwords.docTokens(words, idCol,
+      seg.vocab.select(col("word"), transform(seg.pieces, p => element_at(idOf, p)).as("toks")),
+      "token_ids")
   }
 }

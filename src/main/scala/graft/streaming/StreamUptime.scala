@@ -49,9 +49,10 @@ object StreamUptime {
       .start()
 
   /** Current daily downtime: sum of the per-batch deltas per (key, day).
-    * Before any micro-batch has committed there are no `batch_id=N`
-    * directories yet — return an empty daily table instead of letting the
-    * glob read throw a path-not-found AnalysisException.
+    * `deltaDir` itself is read: partition discovery finds its
+    * `batch_id=N` directories. Before any micro-batch has committed there
+    * are none yet — return an empty daily table instead of letting the
+    * read fail to infer a schema.
     */
   def readDailyDowntime(spark: org.apache.spark.sql.SparkSession, deltaDir: String): DataFrame = {
     val root = new org.apache.hadoop.fs.Path(deltaDir)
@@ -64,7 +65,7 @@ object StreamUptime {
         org.apache.spark.sql.types.StructType.fromDDL(
           "key bigint, date_id date, downtime_minutes double"))
     } else {
-      spark.read.option("basePath", deltaDir).parquet(s"$deltaDir/batch_id=*")
+      spark.read.parquet(deltaDir)
         .groupBy(col("key"), col("date_id"))
         .agg((sum(col("downtime_us")) / lit(60000000.0)).as("downtime_minutes"))
     }

@@ -22,7 +22,7 @@ class BpeSpec extends SparkSpec {
     val docs = Seq("aaaa aaaa").toDF("text")
     val merges = Bpe.train(docs, "text", m = 1)
     assert(merges(0)._2 == "a" && merges(0)._3 == "a")
-    val subs = Bpe.subwordCounts(docs, "text", merges, k = 10)
+    val subs = Bpe.subwordCountsOnWords(Bpe.wordVocab(docs, "text"), merges, k = 10)
       .as[(String, Long)].collect().toMap
     // one vocab word "aaaa" (count 2 collapses to one vocab entry of cnt 2)
     // → two "aa" symbols per word occurrence: 2 words × 2 = 4
@@ -33,7 +33,7 @@ class BpeSpec extends SparkSpec {
     val docs = Seq("ab ab Über 42x").toDF("text")
     val merges = Bpe.train(docs, "text", m = 1)
     assert(merges(0) == ((1, "a", "b", 2L)))
-    val subs = Bpe.subwordCounts(docs, "text", merges, k = 10)
+    val subs = Bpe.subwordCountsOnWords(Bpe.wordVocab(docs, "text"), merges, k = 10)
       .as[(String, Long)].collect().toMap
     // "über" (non-ascii after lowering) is filtered; "42x" contributes chars
     assert(subs("ab") == 2L)
@@ -68,8 +68,8 @@ class BpeSpec extends SparkSpec {
     val merges = Bpe.trainBytes(Seq.fill(5)("to to to").toDF("text"), "text", m = 2)
     // 't'=0x74 'o'=0x6F: first merge is (74, 6F) -> "746F"
     assert(merges(0)._2 == "74" && merges(0)._3 == "6F")
-    val subs = Bpe.byteSubwordCounts(
-      Seq.fill(5)("to to to").toDF("text"), "text", merges, k = 10)
+    val subs = Subwords.counts(Bpe.segmentBytes(
+      Bpe.byteVocab(Seq.fill(5)("to to to").toDF("text"), "text"), merges), k = 10)
       .as[(String, Long)].collect().toMap
     assert(subs.contains("746F") || subs.contains("20746F"), s"got ${subs.keys}")
   }
@@ -77,7 +77,8 @@ class BpeSpec extends SparkSpec {
   test("doc byte tokens decode back to the original text bytes") {
     val docs = Seq((1L, "Hi there!"), (2L, "x 42")).toDF("doc_id", "text")
     val merges = Bpe.trainBytes(docs, "text", m = 3)
-    val out = Bpe.docByteTokens(docs, "doc_id", "text", merges)
+    val out = Bpe.docByteTokensOnVocab(docs, "doc_id", "text", merges,
+        Bpe.byteVocab(docs, "text"))
       .as[(Long, Long, String)].collect().sortBy(_._1)
     assert(out.map(_._1).toSeq == Seq(1L, 2L))
     out.foreach { case (id, n, hexCsv) =>

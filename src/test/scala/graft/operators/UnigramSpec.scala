@@ -45,8 +45,8 @@ class UnigramSpec extends SparkSpec {
     assert(pieces.contains("abab"), s"expected 'abab' to survive pruning: $pieces")
     assert(pieces.contains("a") && pieces.contains("b"),
       s"single chars must never be pruned: $pieces")
-    val toks = Unigram.subwordCounts(docs.toDF("doc_id", "text"), "text",
-        art, k = 10)
+    val toks = Subwords.counts(
+        Unigram.segment(Bpe.wordVocab(docs.toDF("doc_id", "text"), "text"), art), k = 10)
       .as[(String, Long)].collect().toMap
     // 'abab' segments into high-scoring pieces covering the corpus; 50
     // copies dominate the counts (exact split depends on learned scores,
@@ -60,8 +60,8 @@ class UnigramSpec extends SparkSpec {
     // s(aa) < 2·s(a) is possible; instead verify determinism: two runs
     // produce identical segmentations
     val docs = Seq((1L, "aaa bbb aaa")).toDF("doc_id", "text")
-    def run() = Unigram.subwordCounts(docs, "text",
-        Unigram.trainArtifact(docs, "text", rounds = 1, keepK = 8), k = 10)
+    def run() = Subwords.counts(Unigram.segment(Bpe.wordVocab(docs, "text"),
+        Unigram.trainArtifact(docs, "text", rounds = 1, keepK = 8)), k = 10)
       .as[(String, Long)].collect().toSeq
     assert(run() == run())
   }
@@ -70,7 +70,7 @@ class UnigramSpec extends SparkSpec {
     val docs = Seq((1L, "zq xv jw kq mzz qqj")).toDF("doc_id", "text")
     // keepK=1 prunes almost everything; singles guarantee coverage
     val art = Unigram.trainArtifact(docs, "text", rounds = 2, keepK = 1)
-    val segs = Unigram.subwordCounts(docs, "text", art, k = 50)
+    val segs = Subwords.counts(Unigram.segment(Bpe.wordVocab(docs, "text"), art), k = 50)
       .agg(sum($"n_occurrences")).as[Long].collect().head
     // total subword occurrences must cover all 6 words (each ≥ 1 piece)
     assert(segs >= 6L)

@@ -43,8 +43,9 @@ class WordPieceSpec extends SparkSpec {
       (3L, "thematic cats sat 42")).toDF("doc_id", "text")
     val merges = WordPiece.train(docs, "text", m = 6)
     assert(merges.length == 6)
-    val vocab = WordPiece.finalVocab(docs, "text", merges)
-    val subs = WordPiece.subwordCounts(docs, "text", vocab, k = 100)
+    val vocab = WordPiece.finalVocabOnWords(Bpe.wordVocab(docs, "text"), merges)
+    val subs = Subwords.counts(
+        WordPiece.segment(Bpe.wordVocab(docs, "text"), vocab), k = 100)
       .as[(String, Long)].collect()
     assert(subs.nonEmpty && !subs.exists(_._1 == WordPiece.Unk),
       s"self-corpus must have no UNK: ${subs.mkString(",")}")
@@ -60,7 +61,7 @@ class WordPieceSpec extends SparkSpec {
   test("doc token ids: ordered, dense, decodable; kernel stays codegen'd") {
     val docs = Seq((1L, "aa ab aa"), (2L, "ab ba")).toDF("doc_id", "text")
     val merges = WordPiece.train(docs, "text", m = 2)
-    val vocab = WordPiece.finalVocab(docs, "text", merges)
+    val vocab = WordPiece.finalVocabOnWords(Bpe.wordVocab(docs, "text"), merges)
     val df = WordPiece.docTokenIds(docs, "doc_id", "text", vocab)
     val byDoc = df.collect().map(r =>
       r.getLong(0) -> (r.getLong(1), r.getString(2))).toMap

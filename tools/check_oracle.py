@@ -6,9 +6,13 @@ value compare (floats reported with max abs diff on mismatch). Every gate in
 oracle_sql.json is checked; one without an output dir counts as MISSING.
 Exits non-zero when any check fails.
 
+DuckDB spills to a fresh directory under the system temp dir, removed at
+exit, capped at half of that filesystem's free space: an oracle too large
+for the host fails as that gate's ORACLE-ERROR and the run goes on.
+
 Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
 """
-import json, sys, glob, os
+import atexit, json, sys, glob, os, shutil, tempfile
 import duckdb
 import pandas as pd
 
@@ -35,10 +39,21 @@ def canon(df):
             df[c] = s.astype("float64")
     return df.sort_values(by=list(df.columns)).reset_index(drop=True)
 
+def connect():
+    """A DuckDB connection whose spill directory is a fresh temp dir
+    (removed at exit) capped at half of its filesystem's free space.
+    DuckDB's own default spills to ./.tmp with no cap."""
+    spill = tempfile.mkdtemp(prefix="check_oracle-")
+    atexit.register(shutil.rmtree, spill, ignore_errors=True)
+    con = duckdb.connect()
+    con.execute(f"SET temp_directory = '{spill}'")
+    con.execute(f"SET max_temp_directory_size = '{shutil.disk_usage(spill).free // 2}B'")
+    return con
+
 def check(sf_dir, out_dir):
     """Compare every gate named in oracle_sql.json; returns (n_pass, n_fail).
     A gate with no output dir (Verify could not run it) is a failure."""
-    con = duckdb.connect()
+    con = connect()
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.isdir(p):  # Spark-written table: directory of part files

@@ -5,6 +5,9 @@ oracle, one whose output differs in a value, and one with no output dir (a
 gate that threw in Verify writes none). The check must pass the first, fail
 the other two and exit non-zero.
 
+The tool's DuckDB connection must spill to a fresh directory under the
+system temp dir, capped at half of that filesystem's free space.
+
 Run from the repository root:  python3 -m unittest discover -s tools/tests
 """
 import json
@@ -18,6 +21,10 @@ import unittest
 import duckdb
 
 TOOLS = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, TOOLS)
+import check_oracle  # noqa: E402
+
+UNITS = {"bytes": 1, "KiB": 2 ** 10, "MiB": 2 ** 20, "GiB": 2 ** 30, "TiB": 2 ** 40}
 
 
 def _write(con, sql, path):
@@ -56,6 +63,22 @@ class CheckOracleTest(unittest.TestCase):
         self.assertTrue(any(l.startswith("q_value_diff") and "VALUE-DIFF" in l for l in lines))
         self.assertTrue(any(l.startswith("q_missing") and "MISSING" in l for l in lines))
         self.assertNotEqual(run.returncode, 0)
+
+
+class SpillSettingsTest(unittest.TestCase):
+
+    def test_spill_goes_to_a_capped_temp_dir(self):
+        con = check_oracle.connect()
+        temp_dir, cap = con.execute(
+            "SELECT current_setting('temp_directory'), "
+            "current_setting('max_temp_directory_size')").fetchone()
+        con.close()
+        self.assertTrue(os.path.isdir(temp_dir))
+        self.assertEqual(os.path.dirname(temp_dir), tempfile.gettempdir())
+        # DuckDB reports the cap rounded, e.g. '9.7 GiB'
+        value, unit = cap.split()
+        half_free = shutil.disk_usage(temp_dir).free / 2
+        self.assertAlmostEqual(float(value) * UNITS[unit] / half_free, 1.0, delta=0.05)
 
 
 if __name__ == "__main__":
