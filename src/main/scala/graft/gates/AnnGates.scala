@@ -45,9 +45,7 @@ private[graft] object AnnGates {
       |  WHERE rn <= ($kSql)
       |), d0 AS (
       |  SELECT e.vec_id, s.cell,
-      |    list_reduce(list_prepend(cast(0.0 AS double),
-      |      list_transform(range(1, len(e.v) + 1),
-      |        i -> (e.v[i] - s.w[i]) * (e.v[i] - s.w[i]))), (acc, x) -> acc + x) AS d2
+      |    ${d2Sql("e.v", "s.w")} AS d2
       |  FROM emb e, w0 s
       |), a0 AS (
       |  SELECT vec_id, cell FROM (SELECT vec_id, cell,
@@ -64,9 +62,7 @@ private[graft] object AnnGates {
       |  SELECT cell, list(m ORDER BY pos) AS w FROM c1 GROUP BY cell
       |), d1 AS (
       |  SELECT e.vec_id, s.cell,
-      |    list_reduce(list_prepend(cast(0.0 AS double),
-      |      list_transform(range(1, len(e.v) + 1),
-      |        i -> (e.v[i] - s.w[i]) * (e.v[i] - s.w[i]))), (acc, x) -> acc + x) AS d2
+      |    ${d2Sql("e.v", "s.w")} AS d2
       |  FROM emb e, w1 s
       |), a1 AS (
       |  SELECT vec_id, cell FROM (SELECT vec_id, cell,
@@ -83,9 +79,7 @@ private[graft] object AnnGates {
       |  SELECT cell, list(m ORDER BY pos) AS w FROM c2 GROUP BY cell
       |), dfin AS (
       |  SELECT e.vec_id, s.cell,
-      |    list_reduce(list_prepend(cast(0.0 AS double),
-      |      list_transform(range(1, len(e.v) + 1),
-      |        i -> (e.v[i] - s.w[i]) * (e.v[i] - s.w[i]))), (acc, x) -> acc + x) AS d2
+      |    ${d2Sql("e.v", "s.w")} AS d2
       |  FROM emb e, w2 s
       |), af AS (
       |  SELECT vec_id, cell, d2 FROM (SELECT vec_id, cell, d2,
@@ -108,14 +102,10 @@ private[graft] object AnnGates {
     * measured at 41×/decade).
     */
   private def kMeans2Ctes(kSql: String, srcWhere: String = "TRUE"): String = {
-    def fold(v: String, w: String): String =
-      s"""list_reduce(list_prepend(cast(0.0 AS double),
-         |      list_transform(range(1, len($v) + 1),
-         |        i -> ($v[i] - $w[i]) * ($v[i] - $w[i]))), (acc, x) -> acc + x)""".stripMargin
     def subRound(prev: String, dName: String, aName: String, xName: String,
         cName: String, wName: String): String =
       s"""$dName AS (
-         |  SELECT e.vec_id, e.ccell, s.cell, ${fold("e.v", "s.w")} AS d2
+         |  SELECT e.vec_id, e.ccell, s.cell, ${d2Sql("e.v", "s.w")} AS d2
          |  FROM ce e JOIN $prev s ON e.ccell = s.ccell
          |), $aName AS (
          |  SELECT vec_id, cell FROM (SELECT vec_id, cell,
@@ -150,7 +140,7 @@ private[graft] object AnnGates {
        |), ${subRound("sw0", "sd0", "sa0", "sx1", "sc1", "sw1")},
        |${subRound("sw1", "sd1", "sa1", "sx2", "sc2", "sw2")},
        |sdf AS (
-       |  SELECT e.vec_id, e.ccell, s.cell, ${fold("e.v", "s.w")} AS d2
+       |  SELECT e.vec_id, e.ccell, s.cell, ${d2Sql("e.v", "s.w")} AS d2
        |  FROM ce e JOIN sw2 s ON e.ccell = s.ccell
        |), saf AS (
        |  SELECT vec_id, ccell, cell, d2 FROM (SELECT vec_id, ccell, cell, d2,
@@ -159,32 +149,16 @@ private[graft] object AnnGates {
        |)""".stripMargin
   }
 
-  /** Exact sequential (e.v − s.v)² fold — the KMeans distance discipline,
-    * as one expression over correlated tables `e` and `s` (both with a
-    * double-list column `v`).
-    */
-  private val D2FoldSql =
-    "list_reduce(list_prepend(CAST(0.0 AS double), " +
-      "list_transform(range(1, len(e.v) + 1), " +
-      "i -> (e.v[i] - s.v[i]) * (e.v[i] - s.v[i]))), (acc, x) -> acc + x)"
-
   /** FnvMix-uniform draw replay over CTE `emb(vec_id, …)` with CTE-name
     * prefix `pfx`, ending in `${pfx}u(vec_id, u)` — one k-means|| round's
     * draws (the q_split_assign chain, parameterized so the q_kmeans_pp
     * oracle can instantiate it once per round with the round's seed).
     */
-  private def kmppDrawCtes(pfx: String, seed: Long): String = {
-    val seedGolden = (BigInt(seed) * GoldenB).mod(BigInt(2).pow(64))
+  private def kmppDrawCtes(pfx: String, seed: Long): String =
     s"""${pfx}h0 AS (SELECT vec_id, CAST(vec_id AS VARCHAR) AS shingle FROM emb),
-       |${pfx}f AS (SELECT vec_id, $FnvFoldSql AS h FROM ${pfx}h0),
-       |${pfx}z0 AS (SELECT vec_id, CAST((CAST(h AS HUGEINT) + $seedGolden)
-       |    % 18446744073709551616 AS UBIGINT) AS z FROM ${pfx}f),
-       |${pfx}z1 AS (SELECT vec_id, ${mulModSql("xor(z, z >> 30)", Mix1B)} AS z FROM ${pfx}z0),
-       |${pfx}z2 AS (SELECT vec_id, ${mulModSql("xor(z, z >> 27)", Mix2B)} AS z FROM ${pfx}z1),
-       |${pfx}hv AS (SELECT vec_id, xor(z, z >> 31) AS z FROM ${pfx}z2),
+       |${fnvMixCtes(pfx, "vec_id", s"${pfx}h0", seed.toString)},
        |${pfx}u AS (SELECT vec_id,
        |    CAST(z >> 24 AS double) / CAST(1099511627776 AS double) AS u FROM ${pfx}hv)""".stripMargin
-  }
 
   /** One PQ subspace's replay (q_pq_adc): subvector slice `[lo..hi]`,
     * k smallest-id seeds, ONE quantized-mean update, final assignment as
@@ -194,10 +168,7 @@ private[graft] object AnnGates {
     */
   private def pqSubspaceCtes(sub: Int, lo: Int, hi: Int, k: Int,
       src: String = "emb"): String = {
-    val fold =
-      "list_reduce(list_prepend(cast(0.0 AS double), " +
-        "list_transform(range(1, len(e.v) + 1), " +
-        "i -> (e.v[i] - s.w[i]) * (e.v[i] - s.w[i]))), (acc, x) -> acc + x)"
+    val fold = d2Sql("e.v", "s.w")
     s"""sv$sub AS (SELECT vec_id, v[$lo:$hi] AS v FROM $src),
        |w0$sub AS (SELECT vec_id AS cell, v AS w FROM (
        |    SELECT vec_id, v, row_number() OVER (ORDER BY vec_id) AS rn FROM sv$sub)
@@ -248,19 +219,6 @@ private[graft] object AnnGates {
     // clamped to ≥ k exactly as knnGraph's math.max(k, beamFor(deg))
     val degree = "(SELECT d FROM degs)"
     val beam = "(SELECT bm FROM degs)"
-    def cos(va: String, na: String, vb: String, nb: String) =
-      s"""CASE WHEN $na * $nb > 0 THEN
-         |      list_reduce(list_prepend(cast(0.0 AS double),
-         |        list_transform(range(1, len($va) + 1),
-         |          i -> cast($va[i] AS double) * cast($vb[i] AS double))),
-         |        (acc, x) -> acc + x) / ($na * $nb)
-         |    ELSE 0.0 END""".stripMargin
-    def planes(name: String, seedTimes: Long, bitsExpr: String) =
-      s"""$name AS (SELECT p, list_transform(
-         |    list_transform(range(0, 64), d -> (p * 64 + d + $seedTimes) % 1000003),
-         |    k -> cast((k * k % 1000003 * 73856093 + k * 19349663) % 1000003 AS double)
-         |      / 1000003.0 - 0.5) AS w
-         |  FROM (SELECT unnest(range(0, $bitsExpr)) AS p))""".stripMargin
     val sb = new StringBuilder
     sb.append(
       s"""WITH nn AS (SELECT count(*) AS n FROM embeddings WHERE $corpusWhere),
@@ -277,28 +235,13 @@ private[graft] object AnnGates {
          |      WHERE dg // (1 << j) >= 16
          |        AND n * (dg // (1 << j)) * (dg // (1 << j)) <= 2147483648),
          |    16) AS d)),
-         |${planes("pl", 42L * 83492791L, "(SELECT fb FROM fbits)")},
-         |${planes("cpl", 43L * 83492791L, "(SELECT greatest(1, fb // 2) FROM fbits)")},
-         |emb AS MATERIALIZED (SELECT vec_id, embedding,
-         |    sqrt(list_reduce(list_prepend(cast(0.0 AS double),
-         |      list_transform(range(1, len(embedding) + 1),
-         |        i -> cast(embedding[i] AS double) * cast(embedding[i] AS double))),
-         |      (acc, x) -> acc + x)) AS nv
-         |  FROM embeddings WHERE $corpusWhere),
-         |fd AS (SELECT e.vec_id, pl.p,
-         |    list_reduce(list_prepend(cast(0.0 AS double),
-         |      list_transform(range(1, len(e.embedding) + 1),
-         |        i -> cast(e.embedding[i] AS double) * pl.w[i])), (acc, x) -> acc + x) AS dp
-         |  FROM emb e, pl),
-         |fc AS (SELECT vec_id, cast(sum(CASE WHEN dp >= 0 THEN 1 << p ELSE 0 END)
-         |    AS bigint) AS fbk FROM fd GROUP BY 1),
-         |cd AS (SELECT e.vec_id, cpl.p,
-         |    list_reduce(list_prepend(cast(0.0 AS double),
-         |      list_transform(range(1, len(e.embedding) + 1),
-         |        i -> cast(e.embedding[i] AS double) * cpl.w[i])), (acc, x) -> acc + x) AS dp
-         |  FROM emb e, cpl),
-         |cc AS (SELECT vec_id, cast(sum(CASE WHEN dp >= 0 THEN 1 << p ELSE 0 END)
-         |    AS bigint) AS cbk FROM cd GROUP BY 1),
+         |${lshPlanesCte("pl", 42L, "(SELECT fb FROM fbits)")},
+         |${lshPlanesCte("cpl", 43L, "(SELECT greatest(1, fb // 2) FROM fbits)")},
+         |${embNormCte("emb", corpusWhere, materialized = true)},
+         |${signDotsCte("fd", "emb", "pl")},
+         |fc AS (SELECT vec_id, ${signCodeSql("p")} AS fbk FROM fd GROUP BY 1),
+         |${signDotsCte("cd", "emb", "cpl")},
+         |cc AS (SELECT vec_id, ${signCodeSql("p")} AS cbk FROM cd GROUP BY 1),
          |base AS MATERIALIZED (SELECT e.vec_id, e.embedding, e.nv, fc.fbk, cc.cbk
          |  FROM emb e JOIN fc USING (vec_id) JOIN cc USING (vec_id)),
          |hub AS MATERIALIZED (SELECT cbk, hub FROM (
@@ -312,7 +255,7 @@ private[graft] object AnnGates {
          |  UNION ALL SELECT id, hub FROM hp
          |  UNION ALL SELECT hub, id FROM hp),
          |sc0 AS (SELECT p.src, p.dst,
-         |    ${cos("a.embedding", "a.nv", "b.embedding", "b.nv")} AS cosine
+         |    ${cosineSql("a.embedding", "a.nv", "b.embedding", "b.nv")} AS cosine
          |  FROM seedp p JOIN base a ON a.vec_id = p.src JOIN base b ON b.vec_id = p.dst),
          |near0 AS MATERIALIZED (SELECT src, dst, cosine FROM (SELECT src, dst, cosine,
          |    row_number() OVER (PARTITION BY src ORDER BY cosine DESC, dst) AS nr
@@ -328,7 +271,7 @@ private[graft] object AnnGates {
            |  UNION ALL SELECT a.src, b.dst
            |    FROM $prev a JOIN $prev b ON a.dst = b.src WHERE a.src <> b.dst)),
            |sc$r AS (SELECT p.src, p.dst,
-           |    ${cos("a.embedding", "a.nv", "b.embedding", "b.nv")} AS cosine
+           |    ${cosineSql("a.embedding", "a.nv", "b.embedding", "b.nv")} AS cosine
            |  FROM cnd$r p JOIN base a ON a.vec_id = p.src JOIN base b ON b.vec_id = p.dst),
            |near$r AS MATERIALIZED (SELECT src, dst, cosine FROM (SELECT src, dst, cosine,
            |    row_number() OVER (PARTITION BY src ORDER BY cosine DESC, dst) AS nr
@@ -339,19 +282,9 @@ private[graft] object AnnGates {
          |adjs AS MATERIALIZED (SELECT DISTINCT src, dst FROM (
          |    SELECT src, dst FROM near$rounds
          |  UNION ALL SELECT id AS src, hub AS dst FROM hp)),
-         |pemb AS (SELECT vec_id, embedding,
-         |    sqrt(list_reduce(list_prepend(cast(0.0 AS double),
-         |      list_transform(range(1, len(embedding) + 1),
-         |        i -> cast(embedding[i] AS double) * cast(embedding[i] AS double))),
-         |      (acc, x) -> acc + x)) AS nv
-         |  FROM embeddings WHERE $probeWhere),
-         |pcd AS (SELECT e.vec_id, cpl.p,
-         |    list_reduce(list_prepend(cast(0.0 AS double),
-         |      list_transform(range(1, len(e.embedding) + 1),
-         |        i -> cast(e.embedding[i] AS double) * cpl.w[i])), (acc, x) -> acc + x) AS dp
-         |  FROM pemb e, cpl),
-         |pcc AS (SELECT vec_id, cast(sum(CASE WHEN dp >= 0 THEN 1 << p ELSE 0 END)
-         |    AS bigint) AS cbk FROM pcd GROUP BY 1),
+         |${embNormCte("pemb", probeWhere)},
+         |${signDotsCte("pcd", "pemb", "cpl")},
+         |pcc AS (SELECT vec_id, ${signCodeSql("p")} AS cbk FROM pcd GROUP BY 1),
          |pr AS MATERIALIZED (SELECT e.vec_id AS probe_id, e.embedding AS pv,
          |    e.nv AS pn, c.cbk
          |  FROM pemb e JOIN pcc c USING (vec_id)),
@@ -360,7 +293,7 @@ private[graft] object AnnGates {
          |      (SELECT vec_id AS nid FROM emb ORDER BY vec_id LIMIT $entries) g
          |  UNION ALL SELECT p.probe_id, h.hub AS nid FROM pr p JOIN hub h USING (cbk))),
          |best0 AS MATERIALIZED (SELECT e.probe_id, e.nid,
-         |    ${cos("c.embedding", "c.nv", "p.pv", "p.pn")} AS cosine
+         |    ${cosineSql("c.embedding", "c.nv", "p.pv", "p.pn")} AS cosine
          |  FROM ent e JOIN emb c ON c.vec_id = e.nid JOIN pr p USING (probe_id))""".stripMargin)
     for (h <- 1 to hops) {
       val prev = s"best${h - 1}"
@@ -374,7 +307,7 @@ private[graft] object AnnGates {
            |  WHERE NOT EXISTS (SELECT 1 FROM $prev b
            |    WHERE b.probe_id = f.probe_id AND b.nid = a.dst)),
            |s$h AS (SELECT x.probe_id, x.nid,
-           |    ${cos("c.embedding", "c.nv", "p.pv", "p.pn")} AS cosine
+           |    ${cosineSql("c.embedding", "c.nv", "p.pv", "p.pn")} AS cosine
            |  FROM e$h x JOIN emb c ON c.vec_id = x.nid
            |  JOIN pr p ON p.probe_id = x.probe_id),
            |best$h AS MATERIALIZED (SELECT * FROM $prev UNION ALL SELECT * FROM s$h)""".stripMargin)
@@ -455,19 +388,11 @@ private[graft] object AnnGates {
     * re-rank continuation).
     */
   private lazy val ivfPqAdcSqlCtes: String = {
-    val foldEW =
-      "list_reduce(list_prepend(cast(0.0 AS double), " +
-        "list_transform(range(1, len(e.v) + 1), " +
-        "i -> (e.v[i] - s.w[i]) * (e.v[i] - s.w[i]))), (acc, x) -> acc + x)"
-    val foldPW =
-      "list_reduce(list_prepend(cast(0.0 AS double), " +
-        "list_transform(range(1, len(p.v) + 1), " +
-        "i -> (p.v[i] - w.w[i]) * (p.v[i] - w.w[i]))), (acc, x) -> acc + x)"
     val subs = (0 until 4)
       .map(s2 => pqSubspaceCtes(s2, s2 * 16 + 1, (s2 + 1) * 16, 4, "res"))
     val prsTabs = (0 until 4).map(s2 =>
       s"""prs$s2 AS (SELECT cell, v[${s2 * 16 + 1}:${(s2 + 1) * 16}] AS v FROM pres),
-         |tb$s2 AS (SELECT p.cell AS pcell, w.cell AS code, $foldPW AS d
+         |tb$s2 AS (SELECT p.cell AS pcell, w.cell AS code, ${d2Sql("p.v", "w.w")} AS d
          |  FROM w1$s2 w, prs$s2 p)""".stripMargin)
     s"""WITH emb AS (
        |  SELECT vec_id, list_transform(embedding, x -> cast(x AS double)) AS v
@@ -476,7 +401,7 @@ private[graft] object AnnGates {
        |coarse AS (SELECT c AS cell, list_transform(range(0, 64),
        |    d -> CAST((c * 13 + d * 7) % 5 - 2 AS double)) AS w
        |  FROM range(0, 8) t(c)),
-       |cd AS (SELECT e.vec_id, s.cell, $foldEW AS d2 FROM emb e, coarse s),
+       |cd AS (SELECT e.vec_id, s.cell, ${d2Sql("e.v", "s.w")} AS d2 FROM emb e, coarse s),
        |ca AS (SELECT vec_id, cell FROM (SELECT vec_id, cell,
        |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, cell) AS rn FROM cd)
        |  WHERE rn = 1),
@@ -485,9 +410,7 @@ private[graft] object AnnGates {
        |  FROM emb e JOIN ca USING (vec_id) JOIN coarse w ON w.cell = ca.cell),
        |${subs.mkString(",\n")},
        |pv AS (SELECT v FROM emb ORDER BY vec_id LIMIT 1),
-       |pd AS (SELECT s.cell, list_reduce(list_prepend(cast(0.0 AS double),
-       |    list_transform(range(1, len(p.v) + 1),
-       |      i -> (p.v[i] - s.w[i]) * (p.v[i] - s.w[i]))), (acc, x) -> acc + x) AS d2
+       |pd AS (SELECT s.cell, ${d2Sql("p.v", "s.w")} AS d2
        |  FROM coarse s, pv p),
        |pcells AS (SELECT cell FROM (SELECT cell,
        |    row_number() OVER (ORDER BY d2, cell) AS rn FROM pd) WHERE rn <= 2),
@@ -524,29 +447,11 @@ private[graft] object AnnGates {
           "vec_id", "embedding", "vec_id", "embedding", k = 5)
         .withColumn("rank", col("rank").cast("long"))
     },
-      """WITH dots AS (
-        |  SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id,
-        |    list_reduce(list_transform(generate_series(1, len(c.embedding)),
-        |      i -> cast(c.embedding[i] AS double) * cast(p.embedding[i] AS double)),
-        |      (acc, x) -> acc + x) AS d,
-        |    sqrt(list_reduce(list_transform(generate_series(1, len(c.embedding)),
-        |      i -> cast(c.embedding[i] AS double) * cast(c.embedding[i] AS double)),
-        |      (acc, x) -> acc + x)) AS nc,
-        |    sqrt(list_reduce(list_transform(generate_series(1, len(p.embedding)),
-        |      i -> cast(p.embedding[i] AS double) * cast(p.embedding[i] AS double)),
-        |      (acc, x) -> acc + x)) AS np
-        |  FROM embeddings c, embeddings p
-        |  WHERE p.vec_id < 8 AND c.vec_id <> p.vec_id
-        |), cos AS (
-        |  SELECT probe_id, neighbor_id,
-        |    CASE WHEN nc * np > 0 THEN d / (nc * np) ELSE 0.0 END AS cosine
-        |  FROM dots
-        |), ranked AS (
-        |  SELECT *, cast(row_number() OVER (PARTITION BY probe_id
-        |    ORDER BY cosine DESC, neighbor_id) AS bigint) AS rank
-        |  FROM cos
-        |)
-        |SELECT probe_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= 5""".stripMargin),
+      s"""WITH ${embNormCte("emb")},
+        |cand AS (SELECT c.vec_id AS neighbor_id, p.vec_id AS probe_id,
+        |    c.embedding AS va, c.nv AS na, p.embedding AS vb, p.nv AS nb
+        |  FROM emb c, emb p WHERE p.vec_id < 8 AND c.vec_id <> p.vec_id),
+        |${probeTopKSql(5)}""".stripMargin),
 
     // §2#33b IVF-Flat ANN — k-means cells aren't SQL-replayable, so the
     // gate hash-checks the RECALL ENVELOPE instead of neighbor ids: the
@@ -618,27 +523,11 @@ private[graft] object AnnGates {
       // 3506697222, then (k²·A + k·B) mod M — see Similarity.hyperplanes for
       // why the linear fold is a correlated lattice); multi-probe = the
       // probe's bucket XOR each 1-bit flip
-      """WITH pl AS (
-        |  SELECT p, list_transform(
-        |    list_transform(range(0, 64), d -> (p * 64 + d + 3506697222) % 1000003),
-        |    k -> cast((k * k % 1000003 * 73856093 + k * 19349663) % 1000003 AS double)
-        |      / 1000003.0 - 0.5) AS w
-        |  FROM (SELECT unnest(range(0, 6)) AS p)
-        |), emb AS (
-        |  SELECT vec_id, embedding,
-        |    sqrt(list_reduce(list_prepend(cast(0.0 AS double),
-        |      list_transform(range(1, len(embedding) + 1),
-        |        i -> cast(embedding[i] AS double) * cast(embedding[i] AS double))),
-        |      (acc, x) -> acc + x)) AS nv
-        |  FROM embeddings
-        |), dots AS (
-        |  SELECT e.vec_id, pl.p,
-        |    list_reduce(list_prepend(cast(0.0 AS double),
-        |      list_transform(range(1, len(e.embedding) + 1),
-        |        i -> cast(e.embedding[i] AS double) * pl.w[i])), (acc, x) -> acc + x) AS dp
-        |  FROM emb e, pl
-        |), codes AS (
-        |  SELECT vec_id, cast(sum(CASE WHEN dp >= 0 THEN 1 << p ELSE 0 END) AS bigint) AS bucket
+      s"""WITH ${lshPlanesCte("pl", 42L, "6")},
+        |${embNormCte("emb")},
+        |${signDotsCte("dots", "emb", "pl")},
+        |codes AS (
+        |  SELECT vec_id, ${signCodeSql("p")} AS bucket
         |  FROM dots GROUP BY vec_id
         |), wemb AS (
         |  SELECT e.vec_id, e.embedding, e.nv, k.bucket FROM emb e JOIN codes k USING (vec_id)
@@ -650,20 +539,8 @@ private[graft] object AnnGates {
         |  SELECT a.vec_id AS neighbor_id, b.vec_id AS probe_id,
         |    a.embedding AS va, a.nv AS na, b.embedding AS vb, b.nv AS nb
         |  FROM wemb a JOIN probes b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
-        |), cos AS (
-        |  SELECT probe_id, neighbor_id,
-        |    CASE WHEN na * nb > 0 THEN
-        |      list_reduce(list_prepend(cast(0.0 AS double),
-        |        list_transform(range(1, len(va) + 1),
-        |          i -> cast(va[i] AS double) * cast(vb[i] AS double))), (acc, x) -> acc + x)
-        |      / (na * nb)
-        |    ELSE 0.0 END AS cosine
-        |  FROM cand
-        |), ranked AS (
-        |  SELECT *, cast(row_number() OVER (PARTITION BY probe_id
-        |    ORDER BY cosine DESC, neighbor_id) AS bigint) AS rank FROM cos
-        |)
-        |SELECT probe_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= 5""".stripMargin),
+        |),
+        |${probeTopKSql(5)}""".stripMargin),
 
     // §2#33c sign-LSH ANN with DETERMINISTIC integer hyperplanes
     // (component(p,d) = (p*31 + d*17) % 7 - 3): the exact bucket + rerank
@@ -679,25 +556,15 @@ private[graft] object AnnGates {
           multiProbe = false, hyperplanesOverride = Some(planes))
         .withColumn("rank", col("rank").cast("long"))
     },
-      """WITH pl AS (
+      s"""WITH pl AS (
         |  SELECT p, list_transform(range(0, 64),
         |    d -> cast((p * 31 + d * 17) % 7 - 3 AS double)) AS w
         |  FROM (SELECT unnest(range(0, 6)) AS p)
-        |), emb AS (
-        |  SELECT vec_id, embedding,
-        |    sqrt(list_reduce(list_prepend(cast(0.0 AS double),
-        |      list_transform(range(1, len(embedding) + 1),
-        |        i -> cast(embedding[i] AS double) * cast(embedding[i] AS double))),
-        |      (acc, x) -> acc + x)) AS nv
-        |  FROM embeddings
-        |), dots AS (
-        |  SELECT e.vec_id, pl.p,
-        |    list_reduce(list_prepend(cast(0.0 AS double),
-        |      list_transform(range(1, len(e.embedding) + 1),
-        |        i -> cast(e.embedding[i] AS double) * pl.w[i])), (acc, x) -> acc + x) AS dp
-        |  FROM emb e, pl
-        |), codes AS (
-        |  SELECT vec_id, cast(sum(CASE WHEN dp >= 0 THEN 1 << p ELSE 0 END) AS bigint) AS bucket
+        |),
+        |${embNormCte("emb")},
+        |${signDotsCte("dots", "emb", "pl")},
+        |codes AS (
+        |  SELECT vec_id, ${signCodeSql("p")} AS bucket
         |  FROM dots GROUP BY vec_id
         |), wemb AS (
         |  SELECT e.vec_id, e.embedding, e.nv, k.bucket FROM emb e JOIN codes k USING (vec_id)
@@ -706,20 +573,8 @@ private[graft] object AnnGates {
         |    a.embedding AS va, a.nv AS na, b.embedding AS vb, b.nv AS nb
         |  FROM wemb a JOIN wemb b
         |    ON a.bucket = b.bucket AND b.vec_id < 8 AND a.vec_id <> b.vec_id
-        |), cos AS (
-        |  SELECT probe_id, neighbor_id,
-        |    CASE WHEN na * nb > 0 THEN
-        |      list_reduce(list_prepend(cast(0.0 AS double),
-        |        list_transform(range(1, len(va) + 1),
-        |          i -> cast(va[i] AS double) * cast(vb[i] AS double))), (acc, x) -> acc + x)
-        |      / (na * nb)
-        |    ELSE 0.0 END AS cosine
-        |  FROM cand
-        |), ranked AS (
-        |  SELECT *, cast(row_number() OVER (PARTITION BY probe_id
-        |    ORDER BY cosine DESC, neighbor_id) AS bigint) AS rank FROM cos
-        |)
-        |SELECT probe_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= 5""".stripMargin),
+        |),
+        |${probeTopKSql(5)}""".stripMargin),
 
     // §2#33m GRAPH ANN (the HNSW family, rebuilt data-parallel — see
     // Similarity.nswIndex for the written decision against literal
@@ -833,21 +688,21 @@ private[graft] object AnnGates {
          |${kmppDrawCtes("u2", 31)},
          |c0 AS (SELECT vec_id FROM u0u ORDER BY u, vec_id LIMIT 1),
          |cand0 AS (SELECT e.vec_id, e.v FROM emb e JOIN c0 USING (vec_id)),
-         |d1 AS (SELECT e.vec_id, min($D2FoldSql) AS d2 FROM emb e, cand0 s GROUP BY 1),
+         |d1 AS (SELECT e.vec_id, min(${d2Sql("e.v", "s.v")}) AS d2 FROM emb e, cand0 s GROUP BY 1),
          |q1 AS (SELECT vec_id, floor(d2 * 1073741824) / 1073741824 AS qd FROM d1),
          |p1 AS (SELECT sum(qd) AS phi FROM q1),
          |s1 AS (SELECT q1.vec_id FROM q1 JOIN u1u USING (vec_id) CROSS JOIN p1
          |  WHERE u1u.u * p1.phi < CAST(16 AS double) * q1.qd),
          |cand1 AS (SELECT * FROM cand0 UNION ALL
          |  SELECT e.vec_id, e.v FROM emb e JOIN s1 USING (vec_id)),
-         |d2r AS (SELECT e.vec_id, min($D2FoldSql) AS d2 FROM emb e, cand1 s GROUP BY 1),
+         |d2r AS (SELECT e.vec_id, min(${d2Sql("e.v", "s.v")}) AS d2 FROM emb e, cand1 s GROUP BY 1),
          |q2 AS (SELECT vec_id, floor(d2 * 1073741824) / 1073741824 AS qd FROM d2r),
          |p2 AS (SELECT sum(qd) AS phi FROM q2),
          |s2 AS (SELECT q2.vec_id FROM q2 JOIN u2u USING (vec_id) CROSS JOIN p2
          |  WHERE u2u.u * p2.phi < CAST(16 AS double) * q2.qd),
          |cand2 AS (SELECT * FROM cand1 UNION ALL
          |  SELECT e.vec_id, e.v FROM emb e JOIN s2 USING (vec_id)),
-         |dfp AS (SELECT e.vec_id, s.vec_id AS cid, $D2FoldSql AS d2 FROM emb e, cand2 s),
+         |dfp AS (SELECT e.vec_id, s.vec_id AS cid, ${d2Sql("e.v", "s.v")} AS d2 FROM emb e, cand2 s),
          |af2 AS (SELECT vec_id, cid FROM (SELECT vec_id, cid,
          |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn FROM dfp)
          |  WHERE rn = 1),
@@ -887,14 +742,10 @@ private[graft] object AnnGates {
       // ADC = fixed-order ((t0+t1)+t2)+t3 sum — training, encoding and
       // search all hash-exact
       {
-        val probeFold =
-          "list_reduce(list_prepend(cast(0.0 AS double), " +
-            "list_transform(range(1, len(p.v) + 1), " +
-            "i -> (p.v[i] - w.w[i]) * (p.v[i] - w.w[i]))), (acc, x) -> acc + x)"
         val subs = (0 until 4).map(s => pqSubspaceCtes(s, s * 16 + 1, (s + 1) * 16, 4))
         val probes = (0 until 4).map(s =>
           s"""probe$s AS (SELECT v FROM sv$s ORDER BY vec_id LIMIT 1),
-             |tab$s AS (SELECT w.cell, $probeFold AS d FROM w1$s w, probe$s p)""".stripMargin)
+             |tab$s AS (SELECT w.cell, ${d2Sql("p.v", "w.w")} AS d FROM w1$s w, probe$s p)""".stripMargin)
         s"""WITH emb AS (
            |  SELECT vec_id, list_transform(embedding, x -> cast(x AS double)) AS v
            |  FROM embeddings
@@ -957,14 +808,11 @@ private[graft] object AnnGates {
       // Spark TakeOrdered rule), exact sequential-fold distances against the
       // ORIGINAL double-cast vectors, exact-ordered top-10
       ivfPqAdcSqlCtes +
-        """,
+        s""",
           |cand40 AS (SELECT vec_id, cell, adc_d2 FROM adc
           |  ORDER BY adc_d2, vec_id LIMIT 40),
           |rr AS (SELECT c.vec_id, c.cell, c.adc_d2,
-          |    list_reduce(list_prepend(cast(0.0 AS double),
-          |      list_transform(range(1, len(e.v) + 1),
-          |        i -> (e.v[i] - p.v[i]) * (e.v[i] - p.v[i]))),
-          |      (acc, x) -> acc + x) AS exact_d2
+          |    ${d2Sql("e.v", "p.v")} AS exact_d2
           |  FROM cand40 c JOIN emb e USING (vec_id) CROSS JOIN pv p)
           |SELECT vec_id, cast(cell AS bigint) AS cell, adc_d2, exact_d2
           |FROM rr ORDER BY exact_d2, vec_id LIMIT 10""".stripMargin),
@@ -998,9 +846,7 @@ private[graft] object AnnGates {
       (s"""WITH RECURSIVE ${kMeans2Ctes(
              "SELECT greatest(8, (count(*) + 1023) // 1024) FROM embeddings")},
          |nrm AS (
-         |  SELECT vec_id, sqrt(list_reduce(list_prepend(cast(0.0 AS double),
-         |    list_transform(range(1, len(v) + 1), i -> v[i] * v[i])),
-         |    (acc, x) -> acc + x)) AS nv
+         |  SELECT vec_id, ${normSql("v")} AS nv
          |  FROM emb
          |), prs AS (
          |  SELECT a.vec_id AS id_a, b.vec_id AS id_b
@@ -1009,11 +855,7 @@ private[graft] object AnnGates {
          |  JOIN emb eb ON eb.vec_id = b.vec_id
          |  JOIN nrm na ON na.vec_id = a.vec_id
          |  JOIN nrm nb ON nb.vec_id = b.vec_id
-         |  WHERE CASE WHEN na.nv * nb.nv > 0 THEN
-         |      list_reduce(list_prepend(cast(0.0 AS double),
-         |        list_transform(range(1, len(ea.v) + 1), i -> ea.v[i] * eb.v[i])),
-         |        (acc, x) -> acc + x) / (na.nv * nb.nv)
-         |    ELSE 0.0 END >= 0.3
+         |  WHERE ${cosineSql("ea.v", "na.nv", "eb.v", "nb.nv")} >= 0.3
          |), edges AS (
          |  SELECT id_a AS a, id_b AS b FROM prs UNION SELECT id_b, id_a FROM prs
          |), reach(id, r) AS (
@@ -1062,9 +904,7 @@ private[graft] object AnnGates {
          |  FROM embeddings WHERE vec_id % 5 = 0
          |), bd AS (
          |  SELECT e.vec_id, s.cell,
-         |    list_reduce(list_prepend(cast(0.0 AS double),
-         |      list_transform(range(1, len(e.v) + 1),
-         |        i -> (e.v[i] - s.w[i]) * (e.v[i] - s.w[i]))), (acc, x) -> acc + x) AS d2
+         |    ${d2Sql("e.v", "s.w")} AS d2
          |  FROM bemb e, w2 s
          |), ba AS (
          |  SELECT vec_id, cell AS ccell FROM (SELECT vec_id, cell,
@@ -1072,9 +912,7 @@ private[graft] object AnnGates {
          |  WHERE rn = 1
          |), bsd AS (
          |  SELECT e.vec_id, s.cell,
-         |    list_reduce(list_prepend(cast(0.0 AS double),
-         |      list_transform(range(1, len(e.v) + 1),
-         |        i -> (e.v[i] - s.w[i]) * (e.v[i] - s.w[i]))), (acc, x) -> acc + x) AS d2
+         |    ${d2Sql("e.v", "s.w")} AS d2
          |  FROM bemb e JOIN ba ON e.vec_id = ba.vec_id
          |  JOIN sw2 s ON s.ccell = ba.ccell
          |), bsa AS (
@@ -1082,23 +920,15 @@ private[graft] object AnnGates {
          |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, cell) AS rn FROM bsd)
          |  WHERE rn = 1
          |), nc AS (
-         |  SELECT vec_id, sqrt(list_reduce(list_prepend(cast(0.0 AS double),
-         |    list_transform(range(1, len(v) + 1), i -> v[i] * v[i])),
-         |    (acc, x) -> acc + x)) AS nv
+         |  SELECT vec_id, ${normSql("v")} AS nv
          |  FROM emb
          |), nb AS (
-         |  SELECT vec_id, sqrt(list_reduce(list_prepend(cast(0.0 AS double),
-         |    list_transform(range(1, len(v) + 1), i -> v[i] * v[i])),
-         |    (acc, x) -> acc + x)) AS nv
+         |  SELECT vec_id, ${normSql("v")} AS nv
          |  FROM bemb
          |)
          |SELECT id_new, id_corpus, cosine FROM (
          |  SELECT b.vec_id AS id_new, c.vec_id AS id_corpus,
-         |    CASE WHEN na.nv * nb2.nv > 0 THEN
-         |      list_reduce(list_prepend(cast(0.0 AS double),
-         |        list_transform(range(1, len(ec.v) + 1), i -> ec.v[i] * eb.v[i])),
-         |        (acc, x) -> acc + x) / (na.nv * nb2.nv)
-         |    ELSE 0.0 END AS cosine
+         |    ${cosineSql("ec.v", "na.nv", "eb.v", "nb2.nv")} AS cosine
          |  FROM bsa b JOIN saf c ON b.cell = c.cell
          |  JOIN bemb eb ON eb.vec_id = b.vec_id
          |  JOIN emb ec ON ec.vec_id = c.vec_id
@@ -1119,29 +949,18 @@ private[graft] object AnnGates {
           trainedCentroids = Some(centroids))
         .withColumn("rank", col("rank").cast("long"))
     },
-      """WITH cent AS (
+      s"""WITH cent AS (
         |  SELECT c, list_transform(range(0, 64),
         |    d -> cast((c * 13 + d * 7) % 5 - 2 AS double)) AS w
         |  FROM (SELECT unnest(range(0, 8)) AS c)
         |), centn AS (
-        |  SELECT c, w, sqrt(list_reduce(list_prepend(cast(0.0 AS double),
-        |    list_transform(range(1, 65), i -> w[i] * w[i])), (acc, x) -> acc + x)) AS nc
+        |  SELECT c, w, ${normSql("w")} AS nc
         |  FROM cent
-        |), emb AS (
-        |  SELECT vec_id, embedding,
-        |    sqrt(list_reduce(list_prepend(cast(0.0 AS double),
-        |      list_transform(range(1, len(embedding) + 1),
-        |        i -> cast(embedding[i] AS double) * cast(embedding[i] AS double))),
-        |      (acc, x) -> acc + x)) AS nv
-        |  FROM embeddings
-        |), vc AS (
+        |),
+        |${embNormCte("emb")},
+        |vc AS (
         |  SELECT e.vec_id, ct.c,
-        |    CASE WHEN e.nv > 0 THEN
-        |      list_reduce(list_prepend(cast(0.0 AS double),
-        |        list_transform(range(1, len(e.embedding) + 1),
-        |          i -> cast(e.embedding[i] AS double) * ct.w[i])), (acc, x) -> acc + x)
-        |      / (e.nv * ct.nc)
-        |    ELSE 0.0 END AS sim
+        |    ${cosineSql("e.embedding", "e.nv", "ct.w", "ct.nc")} AS sim
         |  FROM emb e, centn ct
         |), sims AS (
         |  SELECT vec_id, list(sim ORDER BY c) AS sims FROM vc GROUP BY vec_id
@@ -1163,20 +982,8 @@ private[graft] object AnnGates {
         |  SELECT c.vec_id AS neighbor_id, q.vec_id AS probe_id,
         |    c.embedding AS va, c.nv AS na, q.embedding AS vb, q.nv AS nb
         |  FROM corpus c JOIN psel q ON c.cell = q.cell AND c.vec_id <> q.vec_id
-        |), cos AS (
-        |  SELECT probe_id, neighbor_id,
-        |    CASE WHEN na * nb > 0 THEN
-        |      list_reduce(list_prepend(cast(0.0 AS double),
-        |        list_transform(range(1, len(va) + 1),
-        |          i -> cast(va[i] AS double) * cast(vb[i] AS double))), (acc, x) -> acc + x)
-        |      / (na * nb)
-        |    ELSE 0.0 END AS cosine
-        |  FROM cand
-        |), ranked AS (
-        |  SELECT *, cast(row_number() OVER (PARTITION BY probe_id
-        |    ORDER BY cosine DESC, neighbor_id) AS bigint) AS rank FROM cos
-        |)
-        |SELECT probe_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= 5""".stripMargin),
+        |),
+        |${probeTopKSql(5)}""".stripMargin),
 
     // §2#33e INCREMENTAL IVF ANN: the IVF sibling of q_dedup_incremental
     // / q_embed_incremental — the corpus is assigned ONCE into a
@@ -1230,29 +1037,18 @@ private[graft] object AnnGates {
       // incremental IVF det twin: identical replay to q_knn_ivf_det except
       // the index side holds only vec_id >= 8 (the probe batch is NOT in the
       // corpus index — the never-re-assign-the-corpus incremental shape)
-      """WITH cent AS (
+      s"""WITH cent AS (
         |  SELECT c, list_transform(range(0, 64),
         |    d -> cast((c * 13 + d * 7) % 5 - 2 AS double)) AS w
         |  FROM (SELECT unnest(range(0, 8)) AS c)
         |), centn AS (
-        |  SELECT c, w, sqrt(list_reduce(list_prepend(cast(0.0 AS double),
-        |    list_transform(range(1, 65), i -> w[i] * w[i])), (acc, x) -> acc + x)) AS nc
+        |  SELECT c, w, ${normSql("w")} AS nc
         |  FROM cent
-        |), emb AS (
-        |  SELECT vec_id, embedding,
-        |    sqrt(list_reduce(list_prepend(cast(0.0 AS double),
-        |      list_transform(range(1, len(embedding) + 1),
-        |        i -> cast(embedding[i] AS double) * cast(embedding[i] AS double))),
-        |      (acc, x) -> acc + x)) AS nv
-        |  FROM embeddings
-        |), vc AS (
+        |),
+        |${embNormCte("emb")},
+        |vc AS (
         |  SELECT e.vec_id, ct.c,
-        |    CASE WHEN e.nv > 0 THEN
-        |      list_reduce(list_prepend(cast(0.0 AS double),
-        |        list_transform(range(1, len(e.embedding) + 1),
-        |          i -> cast(e.embedding[i] AS double) * ct.w[i])), (acc, x) -> acc + x)
-        |      / (e.nv * ct.nc)
-        |    ELSE 0.0 END AS sim
+        |    ${cosineSql("e.embedding", "e.nv", "ct.w", "ct.nc")} AS sim
         |  FROM emb e, centn ct
         |), sims AS (
         |  SELECT vec_id, list(sim ORDER BY c) AS sims FROM vc GROUP BY vec_id
@@ -1275,20 +1071,8 @@ private[graft] object AnnGates {
         |  SELECT c.vec_id AS neighbor_id, q.vec_id AS probe_id,
         |    c.embedding AS va, c.nv AS na, q.embedding AS vb, q.nv AS nb
         |  FROM corpus c JOIN psel q ON c.cell = q.cell AND c.vec_id <> q.vec_id
-        |), cos AS (
-        |  SELECT probe_id, neighbor_id,
-        |    CASE WHEN na * nb > 0 THEN
-        |      list_reduce(list_prepend(cast(0.0 AS double),
-        |        list_transform(range(1, len(va) + 1),
-        |          i -> cast(va[i] AS double) * cast(vb[i] AS double))), (acc, x) -> acc + x)
-        |      / (na * nb)
-        |    ELSE 0.0 END AS cosine
-        |  FROM cand
-        |), ranked AS (
-        |  SELECT *, cast(row_number() OVER (PARTITION BY probe_id
-        |    ORDER BY cosine DESC, neighbor_id) AS bigint) AS rank FROM cos
-        |)
-        |SELECT probe_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= 5""".stripMargin),
+        |),
+        |${probeTopKSql(5)}""".stripMargin),
 
     // §2#34b embedding near-dup with deterministic hyperplanes (see 33c) —
     // SAME corpus-derived band geometry as q_embed_neardup (the fixed 2×3
@@ -1312,22 +1096,12 @@ private[graft] object AnnGates {
         |  SELECT p, list_transform(range(0, 64),
         |    d -> cast((p * 31 + d * 17) % 7 - 3 AS double)) AS w
         |  FROM (SELECT unnest(range(0, 4 * bits)) AS p FROM geo)
-        |), emb AS (
-        |  SELECT vec_id, embedding,
-        |    sqrt(list_reduce(list_prepend(cast(0.0 AS double),
-        |      list_transform(range(1, len(embedding) + 1),
-        |        i -> cast(embedding[i] AS double) * cast(embedding[i] AS double))),
-        |      (acc, x) -> acc + x)) AS nv
-        |  FROM embeddings
-        |), dots AS (
-        |  SELECT e.vec_id, pl.p,
-        |    list_reduce(list_prepend(cast(0.0 AS double),
-        |      list_transform(range(1, len(e.embedding) + 1),
-        |        i -> cast(e.embedding[i] AS double) * pl.w[i])), (acc, x) -> acc + x) AS dp
-        |  FROM emb e, pl
-        |), codes AS (
+        |),
+        |${embNormCte("emb")},
+        |${signDotsCte("dots", "emb", "pl")},
+        |codes AS (
         |  SELECT vec_id, cast(p // bits AS bigint) AS band,
-        |    cast(sum(CASE WHEN dp >= 0 THEN 1 << (p % bits) ELSE 0 END) AS bigint) AS bucket
+        |    ${signCodeSql("(p % bits)")} AS bucket
         |  FROM dots CROSS JOIN geo GROUP BY vec_id, p // bits, bits
         |), cand AS (
         |  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
@@ -1335,13 +1109,7 @@ private[graft] object AnnGates {
         |    ON a.band = b.band AND a.bucket = b.bucket AND a.vec_id < b.vec_id
         |), cos AS (
         |  SELECT id_a, id_b,
-        |    CASE WHEN ea.nv * eb.nv > 0 THEN
-        |      list_reduce(list_prepend(cast(0.0 AS double),
-        |        list_transform(range(1, len(ea.embedding) + 1),
-        |          i -> cast(ea.embedding[i] AS double) * cast(eb.embedding[i] AS double))),
-        |        (acc, x) -> acc + x)
-        |      / (ea.nv * eb.nv)
-        |    ELSE 0.0 END AS cosine
+        |    ${cosineSql("ea.embedding", "ea.nv", "eb.embedding", "eb.nv")} AS cosine
         |  FROM cand JOIN emb ea ON cand.id_a = ea.vec_id
         |            JOIN emb eb ON cand.id_b = eb.vec_id
         |)
@@ -1367,28 +1135,13 @@ private[graft] object AnnGates {
       s"""WITH geo AS (
         |  SELECT $BandBitsLadderSql AS bits
         |  FROM (SELECT count(*) AS n FROM embeddings)
-        |), pl AS (
-        |  SELECT p, list_transform(
-        |    list_transform(range(0, 64), d -> (p * 64 + d + 584449537) % 1000003),
-        |    k -> cast((k * k % 1000003 * 73856093 + k * 19349663) % 1000003 AS double)
-        |      / 1000003.0 - 0.5) AS w
-        |  FROM (SELECT unnest(range(0, 4 * bits)) AS p FROM geo)
-        |), emb AS (
-        |  SELECT vec_id, embedding,
-        |    sqrt(list_reduce(list_prepend(cast(0.0 AS double),
-        |      list_transform(range(1, len(embedding) + 1),
-        |        i -> cast(embedding[i] AS double) * cast(embedding[i] AS double))),
-        |      (acc, x) -> acc + x)) AS nv
-        |  FROM embeddings
-        |), dots AS (
-        |  SELECT e.vec_id, pl.p,
-        |    list_reduce(list_prepend(cast(0.0 AS double),
-        |      list_transform(range(1, len(e.embedding) + 1),
-        |        i -> cast(e.embedding[i] AS double) * pl.w[i])), (acc, x) -> acc + x) AS dp
-        |  FROM emb e, pl
-        |), codes AS (
+        |),
+        |${lshPlanesCte("pl", 7L, "(SELECT 4 * bits FROM geo)")},
+        |${embNormCte("emb")},
+        |${signDotsCte("dots", "emb", "pl")},
+        |codes AS (
         |  SELECT vec_id, cast(p // bits AS bigint) AS band,
-        |    cast(sum(CASE WHEN dp >= 0 THEN 1 << (p % bits) ELSE 0 END) AS bigint) AS bucket
+        |    ${signCodeSql("(p % bits)")} AS bucket
         |  FROM dots CROSS JOIN geo GROUP BY vec_id, p // bits, bits
         |), cand AS (
         |  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
@@ -1396,13 +1149,7 @@ private[graft] object AnnGates {
         |    ON a.band = b.band AND a.bucket = b.bucket AND a.vec_id < b.vec_id
         |), cos AS (
         |  SELECT id_a, id_b,
-        |    CASE WHEN ea.nv * eb.nv > 0 THEN
-        |      list_reduce(list_prepend(cast(0.0 AS double),
-        |        list_transform(range(1, len(ea.embedding) + 1),
-        |          i -> cast(ea.embedding[i] AS double) * cast(eb.embedding[i] AS double))),
-        |        (acc, x) -> acc + x)
-        |      / (ea.nv * eb.nv)
-        |    ELSE 0.0 END AS cosine
+        |    ${cosineSql("ea.embedding", "ea.nv", "eb.embedding", "eb.nv")} AS cosine
         |  FROM cand JOIN emb ea ON cand.id_a = ea.vec_id
         |            JOIN emb eb ON cand.id_b = eb.vec_id
         |)
@@ -1432,28 +1179,13 @@ private[graft] object AnnGates {
       s"""WITH geo AS (
         |  SELECT $BandBitsLadderSql AS bits
         |  FROM (SELECT count(*) AS n FROM embeddings)
-        |), pl AS (
-        |  SELECT p, list_transform(
-        |    list_transform(range(0, 64), d -> (p * 64 + d + 584449537) % 1000003),
-        |    k -> cast((k * k % 1000003 * 73856093 + k * 19349663) % 1000003 AS double)
-        |      / 1000003.0 - 0.5) AS w
-        |  FROM (SELECT unnest(range(0, 4 * bits)) AS p FROM geo)
-        |), emb AS (
-        |  SELECT vec_id, embedding,
-        |    sqrt(list_reduce(list_prepend(cast(0.0 AS double),
-        |      list_transform(range(1, len(embedding) + 1),
-        |        i -> cast(embedding[i] AS double) * cast(embedding[i] AS double))),
-        |      (acc, x) -> acc + x)) AS nv
-        |  FROM embeddings
-        |), dots AS (
-        |  SELECT e.vec_id, pl.p,
-        |    list_reduce(list_prepend(cast(0.0 AS double),
-        |      list_transform(range(1, len(e.embedding) + 1),
-        |        i -> cast(e.embedding[i] AS double) * pl.w[i])), (acc, x) -> acc + x) AS dp
-        |  FROM emb e, pl
-        |), codes AS (
+        |),
+        |${lshPlanesCte("pl", 7L, "(SELECT 4 * bits FROM geo)")},
+        |${embNormCte("emb")},
+        |${signDotsCte("dots", "emb", "pl")},
+        |codes AS (
         |  SELECT vec_id, cast(p // bits AS bigint) AS band,
-        |    cast(sum(CASE WHEN dp >= 0 THEN 1 << (p % bits) ELSE 0 END) AS bigint) AS bucket
+        |    ${signCodeSql("(p % bits)")} AS bucket
         |  FROM dots CROSS JOIN geo GROUP BY vec_id, p // bits, bits
         |), cand AS (
         |  SELECT DISTINCT a.vec_id AS id_new, b.vec_id AS id_corpus
@@ -1462,13 +1194,7 @@ private[graft] object AnnGates {
         |   AND a.vec_id % 5 = 0 AND b.vec_id % 5 <> 0
         |), cos AS (
         |  SELECT id_new, id_corpus,
-        |    CASE WHEN ea.nv * eb.nv > 0 THEN
-        |      list_reduce(list_prepend(cast(0.0 AS double),
-        |        list_transform(range(1, len(ea.embedding) + 1),
-        |          i -> cast(ea.embedding[i] AS double) * cast(eb.embedding[i] AS double))),
-        |        (acc, x) -> acc + x)
-        |      / (ea.nv * eb.nv)
-        |    ELSE 0.0 END AS cosine
+        |    ${cosineSql("ea.embedding", "ea.nv", "eb.embedding", "eb.nv")} AS cosine
         |  FROM cand JOIN emb ea ON cand.id_new = ea.vec_id
         |            JOIN emb eb ON cand.id_corpus = eb.vec_id
         |)
@@ -1494,7 +1220,7 @@ private[graft] object AnnGates {
       // agrees between engines: shortest-repr vs binary rounding can only
       // diverge mid-tie-chain, impossible at the integer boundary) and both
       // folds run left-to-right — hash-exact like the knn float oracles
-      """WITH s AS (
+      s"""WITH s AS (
         |  SELECT vec_id, embedding,
         |    list_max(list_transform(embedding, x -> abs(cast(x AS double)))) / 127.0 AS scale
         |  FROM embeddings
@@ -1506,10 +1232,9 @@ private[graft] object AnnGates {
         |  FROM s
         |)
         |SELECT vec_id, scale,
-        |  list_reduce(list_prepend(cast(0.0 AS double),
-        |    list_transform(range(1, len(embedding) + 1),
-        |      i -> abs(cast(qv[i] AS double) * scale - cast(embedding[i] AS double)))),
-        |    (acc, e) -> acc + e) AS sum_abs_err,
+        |  ${floatFoldSql("embedding",
+              "abs(cast(qv[i] AS double) * scale - cast(embedding[i] AS double))")}
+        |    AS sum_abs_err,
         |  list_reduce(list_prepend(cast(0 AS bigint),
         |    list_transform(qv, x -> abs(x))), (acc, x) -> acc + x) AS l1_q
         |FROM q""".stripMargin),
@@ -1524,18 +1249,9 @@ private[graft] object AnnGates {
       // plane components recomputed from the QUADRATIC-mod integer formula
       // (k = pos·64 + (i−1) + 21·83492791 = … + 1753348611, exact in both
       // engines), dot = the same left-to-right fold as the brute-kNN oracle
-      """WITH j AS (SELECT pos, list_transform(
-        |    list_transform(range(0, 64), d -> (pos * 64 + d + 1753348611) % 1000003),
-        |    k -> cast((k * k % 1000003 * 73856093 + k * 19349663) % 1000003 AS double)
-        |      / 1000003.0 - 0.5) AS w
-        |  FROM (SELECT unnest(range(0, 8)) AS pos)),
-        |p AS (SELECT e.vec_id, j.pos,
-        |    list_reduce(list_prepend(CAST(0.0 AS double),
-        |      list_transform(range(1, len(embedding) + 1),
-        |        i -> CAST(embedding[i] AS double) * j.w[i])),
-        |      (acc, x) -> acc + x) AS val
-        |  FROM embeddings e, j)
-        |SELECT vec_id, cast(pos AS bigint) AS pos, val FROM p""".stripMargin),
+      s"""WITH ${lshPlanesCte("j", 21L, "8")},
+        |${signDotsCte("pd", "embeddings", "j")}
+        |SELECT vec_id, cast(p AS bigint) AS pos, dp AS val FROM pd""".stripMargin),
 
     // §2#50 per-cluster embedding centroids (SemDeDup-style curation /
     // IVF cell refresh): posexplode → ONE map-side-combined aggregation;
@@ -1573,7 +1289,7 @@ private[graft] object AnnGates {
       // centroid = the q_mean_pool math (order-free quantized sums); the
       // per-vector distance is a left-to-right fold — bit-exact like the
       // brute-kNN cosines
-      """WITH x AS (SELECT cast(label AS bigint) AS label,
+      s"""WITH x AS (SELECT cast(label AS bigint) AS label,
         |    unnest(list_transform(range(1, len(embedding) + 1),
         |      i -> struct_pack(p := i - 1,
         |        q := floor(cast(embedding[i] AS double) * 1099511627776) / 1099511627776))) AS u
@@ -1581,11 +1297,7 @@ private[graft] object AnnGates {
         |c AS (SELECT label, u.p AS pos, sum(u.q) / count(*) AS cv FROM x GROUP BY 1, 2),
         |cl AS (SELECT label, list(cv ORDER BY pos) AS centroid FROM c GROUP BY 1)
         |SELECT e.vec_id, cast(e.label AS bigint) AS label,
-        |  sqrt(list_reduce(list_prepend(cast(0.0 AS double),
-        |    list_transform(range(1, len(e.embedding) + 1),
-        |      i -> (cast(e.embedding[i] AS double) - cl.centroid[i])
-        |        * (cast(e.embedding[i] AS double) - cl.centroid[i]))),
-        |    (acc, d) -> acc + d)) AS dist_to_centroid
+        |  sqrt(${d2Sql("e.embedding", "cl.centroid")}) AS dist_to_centroid
         |FROM embeddings e JOIN cl ON cast(e.label AS bigint) = cl.label""".stripMargin),
 
     // §2#42c In-Context Pretraining layout (Shi et al. 2023,
@@ -1677,9 +1389,7 @@ private[graft] object AnnGates {
          |  FROM embeddings WHERE vec_id % 5 = 0
          |), icd AS (
          |  SELECT e.vec_id, s.cell,
-         |    list_reduce(list_prepend(cast(0.0 AS double),
-         |      list_transform(range(1, len(e.v) + 1),
-         |        i -> (e.v[i] - s.w[i]) * (e.v[i] - s.w[i]))), (acc, x) -> acc + x) AS d2
+         |    ${d2Sql("e.v", "s.w")} AS d2
          |  FROM icb e, w2 s
          |), ica AS (
          |  SELECT vec_id, cell AS ccell FROM (SELECT vec_id, cell,
@@ -1687,9 +1397,7 @@ private[graft] object AnnGates {
          |  WHERE rn = 1
          |), icsd AS (
          |  SELECT e.vec_id, ica.ccell, s.cell,
-         |    list_reduce(list_prepend(cast(0.0 AS double),
-         |      list_transform(range(1, len(e.v) + 1),
-         |        i -> (e.v[i] - s.w[i]) * (e.v[i] - s.w[i]))), (acc, x) -> acc + x) AS d2
+         |    ${d2Sql("e.v", "s.w")} AS d2
          |  FROM icb e JOIN ica ON e.vec_id = ica.vec_id
          |  JOIN sw2 s ON s.ccell = ica.ccell
          |), icsa AS (

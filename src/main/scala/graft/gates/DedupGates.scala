@@ -17,10 +17,8 @@ private[graft] object DedupGates {
     * oracles, on both the driver corpus and the Zipf corpus).
     */
   private def shinglePostingSql(from: String): String =
-    s"""toks AS (SELECT doc_id, $TokSql AS tk FROM $from),
-       |sh AS (SELECT doc_id, list_distinct(list_transform(range(1, len(tk) - 1),
-       |    i -> array_to_string(list_slice(tk, i, i + 2), ' '))) AS shingles
-       |  FROM toks WHERE len(tk) >= 3),
+    s"""${toksCte(from)},
+       |$ShinglesCte,
        |posting AS (SELECT doc_id AS id, unnest(shingles) AS shingle FROM sh)""".stripMargin
 
   private val ShinglePostingSql = shinglePostingSql("documents")
@@ -33,10 +31,8 @@ private[graft] object DedupGates {
     * `pairs(id_a, id_b, sa, sb, inter)`; scorers select from it.
     */
   private def ngramPairCoreSql(from: String): String =
-    s"""toks AS (SELECT doc_id, $TokSql AS tk FROM $from),
-       |sh AS (SELECT doc_id, list_distinct(list_transform(range(1, len(tk) - 1),
-       |    i -> array_to_string(list_slice(tk, i, i + 2), ' '))) AS shingles
-       |  FROM toks WHERE len(tk) >= 3),
+    s"""${toksCte(from)},
+       |$ShinglesCte,
        |posting AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
        |capn AS (SELECT greatest(128, (16384 * count(DISTINCT doc_id)) // count(*)) AS cap
        |  FROM posting),
@@ -64,7 +60,7 @@ private[graft] object DedupGates {
     * segments; `lead` prepends corpus-construction CTEs.
     */
   private def segmentDedupOracleSql(lead: String, from: String, segWords: Int): String =
-    s"""WITH ${lead}toks AS (SELECT doc_id, $TokSql AS tk FROM $from),
+    s"""WITH $lead${toksCte(from)},
        |c AS (SELECT doc_id, tk, len(tk) AS n FROM toks),
        |st AS (SELECT doc_id, tk, n,
        |    list_filter(range(0, greatest(n, 1), $segWords), i -> i < n) AS ss FROM c),
@@ -93,17 +89,12 @@ private[graft] object DedupGates {
     * incremental (batch-vs-corpus) finishers. */
   private def minhashBandedCtes(lead: String): String =
     s"""$lead,
-       |folded AS (SELECT id, $FnvFoldSql AS h FROM posting),
-       |hx AS (SELECT id, h, unnest(range(0, 32)) AS i FROM folded),
-       |z0 AS (SELECT id, i, CAST((CAST(h AS HUGEINT) +
-       |    CAST(${mulModSql("CAST(i AS UBIGINT)", GoldenB)} AS HUGEINT))
-       |    % 18446744073709551616 AS UBIGINT) AS z FROM hx),
-       |z1 AS (SELECT id, i, ${mulModSql("xor(z, z >> 30)", Mix1B)} AS z FROM z0),
-       |z2 AS (SELECT id, i, ${mulModSql("xor(z, z >> 27)", Mix2B)} AS z FROM z1),
-       |hv AS (SELECT id, i, CAST(CAST(xor(z, z >> 31) AS HUGEINT) -
-       |    CASE WHEN xor(z, z >> 31) >= 9223372036854775808
-       |      THEN 18446744073709551616 ELSE 0 END AS BIGINT) AS h FROM z2),
-       |hm AS (SELECT id, i, min(h) AS m FROM hv GROUP BY 1, 2),
+       |${fnvMixCtes("", "id, i", "posting", "i",
+            " CROSS JOIN (SELECT unnest(range(0, 32)) AS i)")},
+       |hs AS (SELECT id, i, CAST(CAST(z AS HUGEINT) -
+       |    CASE WHEN z >= 9223372036854775808
+       |      THEN 18446744073709551616 ELSE 0 END AS BIGINT) AS h FROM hv),
+       |hm AS (SELECT id, i, min(h) AS m FROM hs GROUP BY 1, 2),
        |sigs AS (SELECT id, list(m ORDER BY i) AS sig FROM hm GROUP BY 1),
        |banded AS (SELECT id, sig, u.b AS band,
        |    array_to_string(list_transform(list_slice(sig, u.b * 4 + 1, u.b * 4 + 4),
@@ -184,10 +175,8 @@ private[graft] object DedupGates {
     * contract is result identity, so both gates compare against one
     * string. */
   private lazy val DecontaminateSql: String =
-      s"""WITH toks AS (SELECT doc_id, $TokSql AS tk FROM documents),
-         |sh AS (SELECT doc_id, list_distinct(list_transform(range(1, len(tk) - 1),
-         |    i -> array_to_string(list_slice(tk, i, i + 2), ' '))) AS shingles
-         |  FROM toks WHERE len(tk) >= 3),
+      s"""WITH ${toksCte("documents")},
+         |$ShinglesCte,
          |dp AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh
          |  WHERE doc_id % 25 <> 0 OR doc_id >= 12500),
          |bp AS (SELECT doc_id AS bench_id, unnest(shingles) AS shingle FROM sh
@@ -332,26 +321,11 @@ private[graft] object DedupGates {
       // near-dup pairs → transitive closure (recursive CTE) → min reachable
       // id per component — the oracle computes the same canonical keeper the
       // label-propagation operator converges to
-      s"""WITH RECURSIVE toks AS (SELECT doc_id, $TokSql AS tk FROM documents),
-         |sh AS (SELECT doc_id, list_distinct(list_transform(range(1, len(tk) - 1),
-         |    i -> array_to_string(list_slice(tk, i, i + 2), ' '))) AS shingles
-         |  FROM toks WHERE len(tk) >= 3),
-         |posting AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
-         |capn AS (SELECT greatest(128, (16384 * count(DISTINCT doc_id)) // count(*)) AS cap
-         |  FROM posting),
-         |rare AS (SELECT shingle FROM posting GROUP BY 1
-         |  HAVING count(*) <= (SELECT cap FROM capn)),
-         |f0 AS (SELECT posting.* FROM posting JOIN rare USING (shingle)),
-         |sizes AS (SELECT doc_id, count(*) AS set_size FROM f0 GROUP BY 1),
-         |f AS (SELECT f0.doc_id, f0.shingle, sizes.set_size FROM f0 JOIN sizes USING (doc_id)),
-         |cnt AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.set_size AS sa, b.set_size AS sb,
-         |    count(*) AS inter
-         |  FROM f a JOIN f b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2, 3, 4),
-         |pairs AS (SELECT id_a, id_b FROM cnt
+      s"""WITH RECURSIVE ${ngramPairCoreSql("documents")},
+         |near AS (SELECT id_a, id_b FROM pairs
          |  WHERE cast(inter AS double) / (sa + sb - inter) >= 0.8),
-         |edges AS (SELECT id_a AS a, id_b AS b FROM pairs
-         |  UNION SELECT id_b, id_a FROM pairs),
+         |edges AS (SELECT id_a AS a, id_b AS b FROM near
+         |  UNION SELECT id_b, id_a FROM near),
          |reach(id, r) AS (
          |  SELECT a, a FROM edges
          |  UNION
@@ -383,21 +357,15 @@ private[graft] object DedupGates {
     Gate("q_lsh_plan", (s, _) =>
       Dedup.lshPlan(s, numHashes = 32, tauNum = 7L, tauDen = 10L),
       // LSH banding plan: divisor splits of 32, the same ilog2q ladder on
-      // b, the (ilog2q(7) − ilog2q(10)) constant inlined exactly
+      // b and on the constants of ilog2q(7) − ilog2q(10)
       {
-        def ilog2qConst(v: Long): Long = {
-          val e = 63 - java.lang.Long.numberOfLeadingZeros(v)
-          e.toLong * 65536L + (((v - (1L << e)) << 16) >> e)
-        }
-        val lt = ilog2qConst(7L) - ilog2qConst(10L)
-        val eCase = (62 to 1 by -1)
-          .map(k => s"WHEN b >= ${1L << k} THEN $k").mkString(" ")
+        def ilog2qOf(v: Int) = ilog2qSql(v.toString, ilog2ExpSql(v.toString))
         s"""WITH bp AS (SELECT b, 32 // b AS r
            |  FROM (SELECT unnest(range(1, 33)) AS b) t WHERE 32 % b = 0),
-           |be AS (SELECT b, r, CASE $eCase ELSE 0 END AS e FROM bp),
+           |be AS (SELECT b, r, ${ilog2ExpSql("b")} AS e FROM bp),
            |sc AS (SELECT b AS bands, r AS rows_per_band,
-           |    abs(r * ($lt) + (e * 65536 +
-           |      (((b - (CAST(1 AS BIGINT) << e)) << 16) >> e))) AS score_q
+           |    abs(r * (${ilog2qOf(7)} - ${ilog2qOf(10)}) + ${ilog2qSql("b", "e")})
+           |      AS score_q
            |  FROM be)
            |SELECT bands, rows_per_band, cast(score_q AS bigint) AS score_q,
            |  (row_number() OVER (ORDER BY score_q * bands, bands DESC) = 1) AS chosen
@@ -517,11 +485,7 @@ private[graft] object DedupGates {
     },
       // md5-hex folded to a 64-bit unsigned decimal via hugeint — matches
       // Spark's conv(substring(md5(x),1,16),16,10) digit-for-digit
-      s"""WITH toks AS (SELECT doc_id, $TokSql AS tk FROM documents WHERE doc_id < 1000),
-         |sh AS (SELECT doc_id, list_distinct(list_transform(range(1, len(tk) - 1),
-         |    i -> array_to_string(list_slice(tk, i, i + 2), ' '))) AS shingles
-         |  FROM toks WHERE len(tk) >= 3),
-         |posting AS (SELECT doc_id AS id, unnest(shingles) AS shingle FROM sh),
+      s"""WITH ${shinglePostingSql("documents WHERE doc_id < 1000")},
          |hashed AS (SELECT id,
          |  list_transform(range(0, 16), i ->
          |    cast(list_reduce(list_prepend(cast(0 AS hugeint),
@@ -590,11 +554,7 @@ private[graft] object DedupGates {
         .groupBy("id_a", "id_b").agg(min("hamming").as("hamming"))
         .filter(col("hamming") <= 3)
     },
-      s"""WITH toks AS (SELECT doc_id, $TokSql AS tk FROM documents WHERE doc_id < 1000),
-         |sh AS (SELECT doc_id, list_distinct(list_transform(range(1, len(tk) - 1),
-         |    i -> array_to_string(list_slice(tk, i, i + 2), ' '))) AS shingles
-         |  FROM toks WHERE len(tk) >= 3),
-         |posting AS (SELECT doc_id AS id, unnest(shingles) AS shingle FROM sh),
+      s"""WITH ${shinglePostingSql("documents WHERE doc_id < 1000")},
          |hs AS (SELECT id, md5(shingle) AS m FROM posting),
          |hv AS (SELECT id,
          |  cast(list_reduce(list_prepend(cast(0 AS hugeint),
@@ -636,10 +596,7 @@ private[graft] object DedupGates {
       // FnvMix with seed 0 (the +seed·golden term vanishes), bits extracted
       // from the unsigned value — identical raw bits to Spark's signed long
       s"""WITH $ShinglePostingSql,
-         |folded AS (SELECT id, $FnvFoldSql AS h FROM posting),
-         |z1 AS (SELECT id, ${mulModSql("xor(h, h >> 30)", Mix1B)} AS z FROM folded),
-         |z2 AS (SELECT id, ${mulModSql("xor(z, z >> 27)", Mix2B)} AS z FROM z1),
-         |hv AS (SELECT id, xor(z, z >> 31) AS z FROM z2),
+         |${fnvMixCtes("", "id", "posting", "0")},
          |bits AS (SELECT id, unnest(range(0, 64)) AS b,
          |    unnest(list_transform(range(0, 64), b -> CAST((z >> b) & 1 AS BIGINT))) AS bit
          |  FROM hv),
@@ -699,12 +656,8 @@ private[graft] object DedupGates {
       // window-grain exact-substring duplicate marking: 5-token sliding
       // windows with multiplicity; a window is duplicated when its text
       // occupies >= 2 (doc, position) slots corpus-wide
-      s"""WITH toks AS (SELECT doc_id, $TokSql AS tk FROM documents),
-         |wins AS (SELECT doc_id,
-         |    CASE WHEN len(tk) >= 5 THEN list_transform(range(1, len(tk) - 3),
-         |      i -> array_to_string(list_slice(tk, i, i + 4), ' '))
-         |    ELSE [] END AS w
-         |  FROM toks),
+      s"""WITH ${toksCte("documents")},
+         |$WinsCte,
          |posting AS (SELECT doc_id, unnest(w) AS win FROM wins),
          |occ AS (SELECT win FROM (SELECT win, count(*) AS c FROM posting GROUP BY 1)
          |  WHERE c >= 2),
@@ -731,12 +684,8 @@ private[graft] object DedupGates {
       // equivalent min-(doc,pos) witness), islands on window position,
       // token-level cut, order-preserving reassembly. 1-based list positions
       // throughout (Spark side is 0-based; both self-consistent).
-      s"""WITH toks AS (SELECT doc_id, $TokSql AS tk FROM documents),
-         |wins AS (SELECT doc_id,
-         |    CASE WHEN len(tk) >= 5 THEN list_transform(range(1, len(tk) - 3),
-         |      i -> array_to_string(list_slice(tk, i, i + 4), ' '))
-         |    ELSE [] END AS w
-         |  FROM toks),
+      s"""WITH ${toksCte("documents")},
+         |$WinsCte,
          |posting AS (SELECT doc_id, u.j AS pos, u.win FROM (
          |  SELECT doc_id, unnest(list_transform(range(1, len(w) + 1),
          |    j -> struct_pack(j := j, win := w[j]))) AS u FROM wins)),
@@ -786,12 +735,8 @@ private[graft] object DedupGates {
       // duplicated 5-windows (no keep-first), islands on window position,
       // span rows with 0-based token offsets (posting positions are 1-based
       // in the list replay, shifted on output)
-      s"""WITH toks AS (SELECT doc_id, $TokSql AS tk FROM documents),
-         |wins AS (SELECT doc_id,
-         |    CASE WHEN len(tk) >= 5 THEN list_transform(range(1, len(tk) - 3),
-         |      i -> array_to_string(list_slice(tk, i, i + 4), ' '))
-         |    ELSE [] END AS w
-         |  FROM toks),
+      s"""WITH ${toksCte("documents")},
+         |$WinsCte,
          |posting AS (SELECT doc_id, u.j AS pos, u.win FROM (
          |  SELECT doc_id, unnest(list_transform(range(1, len(w) + 1),
          |    j -> struct_pack(j := j, win := w[j]))) AS u FROM wins)),

@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 /** Query gates — multimodal and media metadata. Each gate pairs its Spark
   * query with the DuckDB oracle SQL the correctness gate compares it against. */
 private[graft] object MediaGates {
+  import Shared._
   val gates: Seq[Gate] = Seq(
     // §2#35 multimodal metadata: REAL byte-level container parse. The gate
     // constructs real PNG/JPEG/GIF/BMP container bytes IN-PLAN from
@@ -138,28 +139,17 @@ private[graft] object MediaGates {
     },
       // CLIP filter: caption tower = exact float reorder/negation of the
       // image vector, cosine = the q_knn_brute sequential-fold discipline
-      """WITH cap AS (
+      s"""WITH cap AS (
         |  SELECT vec_id, embedding AS v,
         |    CASE WHEN vec_id % 5 = 0 THEN list_reverse(embedding)
         |      ELSE list_append(embedding[1:63], -embedding[64]) END AS c
         |  FROM embeddings
-        |), dots AS (
-        |  SELECT vec_id,
-        |    list_reduce(list_transform(generate_series(1, len(v)),
-        |      i -> cast(v[i] AS double) * cast(c[i] AS double)),
-        |      (acc, x) -> acc + x) AS d,
-        |    sqrt(list_reduce(list_transform(generate_series(1, len(v)),
-        |      i -> cast(v[i] AS double) * cast(v[i] AS double)),
-        |      (acc, x) -> acc + x)) AS nv,
-        |    sqrt(list_reduce(list_transform(generate_series(1, len(c)),
-        |      i -> cast(c[i] AS double) * cast(c[i] AS double)),
-        |      (acc, x) -> acc + x)) AS nc
-        |  FROM cap
+        |), nrm AS (
+        |  SELECT vec_id, v, c, ${normSql("v")} AS nv, ${normSql("c")} AS nc FROM cap
+        |), cs AS (
+        |  SELECT vec_id, ${cosineSql("v", "nv", "c", "nc")} AS clip_score FROM nrm
         |)
-        |SELECT vec_id,
-        |  CASE WHEN nv * nc > 0 THEN d / (nv * nc) ELSE 0.0 END AS clip_score,
-        |  (CASE WHEN nv * nc > 0 THEN d / (nv * nc) ELSE 0.0 END) >= 0.5 AS kept
-        |FROM dots""".stripMargin),
+        |SELECT vec_id, clip_score, clip_score >= 0.5 AS kept FROM cs""".stripMargin),
 
     // §2#35d audio-CODEC container metadata — MediaMeta's remaining
     // families (FLAC STREAMINFO bit fields, ID3v2 + MPEG-1 Layer III MP3
@@ -249,7 +239,7 @@ private[graft] object MediaGates {
       // histogram stripes in double with one float rounding per stripe, which
       // DuckDB replicates via the same sequential folds (text is ASCII, so
       // char positions == UTF-8 byte offsets)
-      """WITH d AS (
+      s"""WITH d AS (
         |  SELECT doc_id, text, length(text) AS n FROM documents
         |), patches AS (
         |  SELECT doc_id, text, n, unnest(generate_series(0, (n - 1) // 256)) AS patch_idx
@@ -268,11 +258,8 @@ private[graft] object MediaGates {
         |  FROM patches
         |)
         |SELECT doc_id, cast(patch_idx AS bigint) AS patch_idx,
-        |  sqrt(list_reduce(list_prepend(cast(0.0 AS double),
-        |    list_transform(features, x -> cast(x AS double) * cast(x AS double))),
-        |    (acc, x) -> acc + x)) AS feat_l2,
-        |  list_reduce(list_prepend(cast(0.0 AS double),
-        |    list_transform(features, x -> cast(x AS double))), (acc, x) -> acc + x) AS feat_sum
+        |  ${normSql("features")} AS feat_l2,
+        |  ${floatFoldSql("features", "cast(features[i] AS double)")} AS feat_sum
         |FROM feats""".stripMargin)
   )
 }

@@ -64,33 +64,6 @@ private[graft] object MiscGates {
        |  FROM customer CROSS JOIN side)""".stripMargin
   }
 
-  /** FnvMix HLL register replay over a caller-provided CTE
-    * `hsrc(<groups>..., shingle)` → CTE chain ending in
-    * `regs(<groups>..., bucket, reg)` — the grouped generalization of
-    * [[CardRegsCtes]] (used by the q_agg_merge mergeable-state oracle,
-    * whose grouping carries a derived month column).
-    */
-  private def hllRegsCtesOver(groups: Seq[String], seed: Long): String = {
-    val g = groups.mkString(", ")
-    val seedGolden = (BigInt(seed) * GoldenB).mod(BigInt(2).pow(64))
-    val rhoCase = (1 to 56)
-      .map(r => s"WHEN rem >= ${BigInt(2).pow(64 - r)} THEN $r")
-      .mkString(" ")
-    s"""folded AS (SELECT $g, $FnvFoldSql AS h FROM hsrc),
-       |z0 AS (SELECT $g,
-       |    CAST((CAST(h AS HUGEINT) + $seedGolden) % 18446744073709551616
-       |      AS UBIGINT) AS z FROM folded),
-       |z1 AS (SELECT $g, ${mulModSql("xor(z, z >> 30)", Mix1B)} AS z FROM z0),
-       |z2 AS (SELECT $g, ${mulModSql("xor(z, z >> 27)", Mix2B)} AS z FROM z1),
-       |hv AS (SELECT $g, xor(z, z >> 31) AS z FROM z2),
-       |br AS (SELECT $g, z >> 56 AS bucket,
-       |    CAST((CAST(z AS HUGEINT) * 256) % 18446744073709551616 AS UBIGINT) AS rem
-       |  FROM hv),
-       |rho AS (SELECT $g, bucket, CASE $rhoCase ELSE 57 END AS rho FROM br),
-       |regs AS (SELECT $g, bucket, max(rho) AS reg FROM rho
-       |  GROUP BY $g, bucket)""".stripMargin
-  }
-
   /** Count-min counter replay (depth 4) over a caller-provided CTE
     * `$src(shingle)` → a counter CTE `$out(r, bucket, cnt)` with
     * width-`$width` buckets — replays
@@ -99,19 +72,10 @@ private[graft] object MiscGates {
     * join-size sketch needs one per join side).
     */
   private def cmCountersCtes(src: String, out: String, width: Int,
-      seed: Long): String = {
-    val p = out
-    s"""${p}_f AS (SELECT $FnvFoldSql AS h FROM $src),
-       |${p}_j AS (SELECT h, r FROM ${p}_f CROSS JOIN rs),
-       |${p}_z0 AS (SELECT r, CAST((CAST(h AS HUGEINT) +
-       |    ($seed + r) * CAST('$GoldenB' AS HUGEINT)) % 18446744073709551616
-       |    AS UBIGINT) AS z FROM ${p}_j),
-       |${p}_z1 AS (SELECT r, ${mulModSql("xor(z, z >> 30)", Mix1B)} AS z FROM ${p}_z0),
-       |${p}_z2 AS (SELECT r, ${mulModSql("xor(z, z >> 27)", Mix2B)} AS z FROM ${p}_z1),
-       |${p}_hv AS (SELECT r, xor(z, z >> 31) AS z FROM ${p}_z2),
+      seed: Long): String =
+    s"""${fnvMixCtes(s"${out}_", "r", src, s"$seed + r", " CROSS JOIN rs")},
        |$out AS (SELECT r, cast(z % $width AS bigint) AS bucket, count(*) AS cnt
-       |  FROM ${p}_hv GROUP BY 1, 2)""".stripMargin
-  }
+       |  FROM ${out}_hv GROUP BY 1, 2)""".stripMargin
 
   /** Rank-select quantile finisher over CTE `hist`: integer cross-multiply
     * rank rule (cum·den ≥ N·num, no division), answer = the bucket's exact
@@ -178,25 +142,18 @@ private[graft] object MiscGates {
   private def langClassifyCtes(from: String): String = {
     val wl = (0 until 4).map(i =>
       QualityClassifier.seededWeights(256, 101L + i).mkString("[", ", ", "]"))
-    val seedGolden = (BigInt(53) * GoldenB).mod(BigInt(2).pow(64))
     s"""mlt AS (SELECT doc_id, lower(text) AS t FROM $from),
        |mlf AS (SELECT doc_id, CASE WHEN length(t) >= 3
        |    THEN list_transform(range(1, length(t) - 1), i -> substring(t, i, 3))
        |    ELSE [] END AS fs FROM mlt),
        |mlbase AS (SELECT doc_id, len(fs) AS n_features FROM mlf),
        |mlh0 AS (SELECT doc_id, unnest(fs) AS shingle FROM mlf),
-       |mlfold AS (SELECT doc_id, $FnvFoldSql AS h FROM mlh0),
-       |mlz0 AS (SELECT doc_id,
-       |    CAST((CAST(h AS HUGEINT) + $seedGolden) % 18446744073709551616
-       |      AS UBIGINT) AS z FROM mlfold),
-       |mlz1 AS (SELECT doc_id, ${mulModSql("xor(z, z >> 30)", Mix1B)} AS z FROM mlz0),
-       |mlz2 AS (SELECT doc_id, ${mulModSql("xor(z, z >> 27)", Mix2B)} AS z FROM mlz1),
-       |mlhv AS (SELECT doc_id,
-       |    cast(xor(z, z >> 31) % 256 AS bigint) + 1 AS bk FROM mlz2),
+       |${fnvMixCtes("ml", "doc_id", "mlh0", "53")},
+       |mlbk AS (SELECT doc_id, cast(z % 256 AS bigint) + 1 AS bk FROM mlhv),
        |mlsums AS (SELECT doc_id,
        |    sum((${wl(0)})[bk]) AS s0, sum((${wl(1)})[bk]) AS s1,
        |    sum((${wl(2)})[bk]) AS s2, sum((${wl(3)})[bk]) AS s3
-       |  FROM mlhv GROUP BY 1),
+       |  FROM mlbk GROUP BY 1),
        |mlsc AS (SELECT b.doc_id, b.n_features,
        |    coalesce(s0, 0) AS s0, coalesce(s1, 0) AS s1,
        |    coalesce(s2, 0) AS s2, coalesce(s3, 0) AS s3
@@ -608,8 +565,8 @@ private[graft] object MiscGates {
            |      AS n_blocks_dropped
            |  FROM bk GROUP BY 1
            |  HAVING sum(CASE WHEN kept THEN 1 ELSE 0 END) > 0),
-           |ctok AS (SELECT *, cast(len($TokSql) AS bigint) AS n_tokens,
-           |    $TokSql AS tk FROM dg),
+           |${toksCte("dg", "ctok0", "*")},
+           |ctok AS (SELECT *, cast(len(tk) AS bigint) AS n_tokens FROM ctok0),
            |${langClassifyCtes("dg")},
            |ch AS (SELECT doc_id,
            |  $hitCols
@@ -649,7 +606,7 @@ private[graft] object MiscGates {
           stop.as("stopword_cnt"),
           round(Text.qualityScoreFrom(nTok, punct, stop, nChars), 6).as("quality"))
     },
-      s"""WITH t AS (SELECT doc_id, text, $TokSql AS tk FROM documents),
+      s"""WITH ${toksCte("documents", "t", "doc_id, text")},
          |x AS (SELECT doc_id,
          |  cast(length(text) AS bigint) AS n_chars_calc,
          |  cast(len(tk) AS bigint) AS n_tokens,
@@ -737,7 +694,7 @@ private[graft] object MiscGates {
         val pick = names.reverse.foldLeft("'und'") { (rest, l) =>
           s"CASE WHEN ${l}_hits = best THEN '$l' ELSE $rest END"
         }
-        s"""WITH t AS (SELECT doc_id, $TokSql AS tk FROM documents),
+        s"""WITH ${toksCte("documents", "t")},
            |h AS (SELECT doc_id,
            |  $hitCols
            |  FROM t),
@@ -1019,27 +976,11 @@ private[graft] object MiscGates {
          |  ORDER BY true_cnt DESC, token LIMIT 20),
          |rs AS (SELECT unnest(range(4)) AS r),
          |f0 AS (SELECT token AS shingle FROM toks),
-         |folded AS (SELECT $FnvFoldSql AS h FROM f0),
-         |j AS (SELECT h, r FROM folded CROSS JOIN rs),
-         |z0 AS (SELECT r, CAST((CAST(h AS HUGEINT) +
-         |    (17 + r) * CAST('$GoldenB' AS HUGEINT)) % 18446744073709551616
-         |    AS UBIGINT) AS z FROM j),
-         |z1 AS (SELECT r, ${mulModSql("xor(z, z >> 30)", Mix1B)} AS z FROM z0),
-         |z2 AS (SELECT r, ${mulModSql("xor(z, z >> 27)", Mix2B)} AS z FROM z1),
-         |hv AS (SELECT r, xor(z, z >> 31) AS z FROM z2),
+         |${fnvMixCtes("", "r", "f0", "17 + r", " CROSS JOIN rs")},
          |cm AS (SELECT r, cast(z % 1024 AS bigint) AS bucket, count(*) AS cnt
          |  FROM hv GROUP BY 1, 2),
          |p0 AS (SELECT token AS shingle, true_cnt FROM probes),
-         |pfold AS (SELECT shingle, true_cnt, $FnvFoldSql AS h FROM p0),
-         |pj AS (SELECT shingle, true_cnt, h, r FROM pfold CROSS JOIN rs),
-         |pz0 AS (SELECT shingle, true_cnt, r, CAST((CAST(h AS HUGEINT) +
-         |    (17 + r) * CAST('$GoldenB' AS HUGEINT)) % 18446744073709551616
-         |    AS UBIGINT) AS z FROM pj),
-         |pz1 AS (SELECT shingle, true_cnt, r,
-         |    ${mulModSql("xor(z, z >> 30)", Mix1B)} AS z FROM pz0),
-         |pz2 AS (SELECT shingle, true_cnt, r,
-         |    ${mulModSql("xor(z, z >> 27)", Mix2B)} AS z FROM pz1),
-         |phv AS (SELECT shingle, true_cnt, r, xor(z, z >> 31) AS z FROM pz2),
+         |${fnvMixCtes("p", "shingle, true_cnt, r", "p0", "17 + r", " CROSS JOIN rs")},
          |pe AS (SELECT shingle AS token, true_cnt, r,
          |    cast(z % 1024 AS bigint) AS bucket FROM phv),
          |est AS (SELECT token, true_cnt,
@@ -1244,7 +1185,7 @@ private[graft] object MiscGates {
          |  CASE WHEN doc_id % 4 = 0 THEN text ||
          |    ' lorem ipsum dolor sit amet lorem ipsum dolor sit amet'
          |  ELSE text END AS text FROM documents),
-         |toks AS (SELECT doc_id, $TokSql AS tk FROM inj),
+         |${toksCte("inj")},
          |base AS (SELECT doc_id, cast(len(tk) AS bigint) AS n_tokens FROM toks),
          |g2 AS (SELECT doc_id, max(c) * 2 AS top2 FROM (
          |  SELECT doc_id, sh, count(*) AS c FROM (
@@ -1723,29 +1664,8 @@ private[graft] object MiscGates {
       // seeded int8 vector compiled into the Spark plan, one exact integer
       // sum per doc, logit as one divide+multiply — engine-identical IEEE
       {
-        val wlist = QualityClassifier.seededWeights(256, 29L).mkString("[", ", ", "]")
-        val seedGolden = (BigInt(29) * GoldenB).mod(BigInt(2).pow(64))
-        s"""WITH toks AS (SELECT doc_id, $TokSql AS tk FROM documents),
-           |feats AS (SELECT doc_id, list_concat(tk,
-           |    CASE WHEN len(tk) >= 2 THEN list_transform(range(1, len(tk)),
-           |      i -> array_to_string(list_slice(tk, i, i + 1), ' '))
-           |    ELSE [] END) AS fs
-           |  FROM toks),
-           |base AS (SELECT doc_id, len(fs) AS n_features FROM feats),
-           |h0 AS (SELECT doc_id, unnest(fs) AS shingle FROM feats),
-           |folded AS (SELECT doc_id, $FnvFoldSql AS h FROM h0),
-           |z0 AS (SELECT doc_id,
-           |    CAST((CAST(h AS HUGEINT) + $seedGolden) % 18446744073709551616
-           |      AS UBIGINT) AS z FROM folded),
-           |z1 AS (SELECT doc_id, ${mulModSql("xor(z, z >> 30)", Mix1B)} AS z FROM z0),
-           |z2 AS (SELECT doc_id, ${mulModSql("xor(z, z >> 27)", Mix2B)} AS z FROM z1),
-           |hv AS (SELECT doc_id, xor(z, z >> 31) AS z FROM z2),
-           |wsum AS (SELECT doc_id,
-           |    sum(($wlist)[cast(z % 256 AS bigint) + 1]) AS sum_w
-           |  FROM hv GROUP BY 1),
-           |sc AS (SELECT b.doc_id, cast(b.n_features AS bigint) AS n_features,
-           |    cast(coalesce(w.sum_w, 0) AS bigint) AS sum_w
-           |  FROM base b LEFT JOIN wsum w USING (doc_id)),
+        s"""WITH ${toksCte("documents")},
+           |${classifierSumCtes("doc_id", "toks")},
            |lg AS (SELECT doc_id, n_features, sum_w,
            |    CAST(0.0 AS DOUBLE) + CAST(0.05 AS DOUBLE) *
            |      (cast(sum_w AS double) / cast(greatest(n_features, 1) AS double))
@@ -1787,29 +1707,8 @@ private[graft] object MiscGates {
       // bucketed average-rank AUC — every rank a multiple of 0.5 (exact
       // doubles), one rounding step per ratio
       {
-        val wlist = QualityClassifier.seededWeights(256, 29L).mkString("[", ", ", "]")
-        val seedGolden = (BigInt(29) * GoldenB).mod(BigInt(2).pow(64))
-        s"""WITH toks AS (SELECT doc_id, $TokSql AS tk FROM documents),
-           |feats AS (SELECT doc_id, list_concat(tk,
-           |    CASE WHEN len(tk) >= 2 THEN list_transform(range(1, len(tk)),
-           |      i -> array_to_string(list_slice(tk, i, i + 1), ' '))
-           |    ELSE [] END) AS fs
-           |  FROM toks),
-           |base AS (SELECT doc_id, len(fs) AS n_features FROM feats),
-           |h0 AS (SELECT doc_id, unnest(fs) AS shingle FROM feats),
-           |folded AS (SELECT doc_id, $FnvFoldSql AS h FROM h0),
-           |z0 AS (SELECT doc_id,
-           |    CAST((CAST(h AS HUGEINT) + $seedGolden) % 18446744073709551616
-           |      AS UBIGINT) AS z FROM folded),
-           |z1 AS (SELECT doc_id, ${mulModSql("xor(z, z >> 30)", Mix1B)} AS z FROM z0),
-           |z2 AS (SELECT doc_id, ${mulModSql("xor(z, z >> 27)", Mix2B)} AS z FROM z1),
-           |hv AS (SELECT doc_id, xor(z, z >> 31) AS z FROM z2),
-           |wsum AS (SELECT doc_id,
-           |    sum(($wlist)[cast(z % 256 AS bigint) + 1]) AS sum_w
-           |  FROM hv GROUP BY 1),
-           |sc AS (SELECT b.doc_id, cast(b.n_features AS bigint) AS n_features,
-           |    cast(coalesce(w.sum_w, 0) AS bigint) AS sum_w
-           |  FROM base b LEFT JOIN wsum w USING (doc_id)),
+        s"""WITH ${toksCte("documents")},
+           |${classifierSumCtes("doc_id", "toks")},
            |lab AS (SELECT doc_id, NOT (len(tk) < 32
            |    OR cast(len(tk) - len(list_distinct(tk)) AS double)
            |      > 0.6 * cast(len(tk) AS double)
@@ -1890,11 +1789,9 @@ private[graft] object MiscGates {
       // pooling is exact integer sums with one IEEE divide, mirrored
       // operation-for-operation
       {
-        val wlist = QualityClassifier.seededWeights(256, 29L).mkString("[", ", ", "]")
-        val seedGolden = (BigInt(29) * GoldenB).mod(BigInt(2).pow(64))
         val pooledSql = "CAST(0.0 AS DOUBLE) + CAST(0.05 AS DOUBLE) * " +
           "(cast(sum(sum_w) AS double) / cast(greatest(sum(n_features), 1) AS double))"
-        s"""WITH toks AS (SELECT doc_id, $TokSql AS tk FROM documents),
+        s"""WITH ${toksCte("documents")},
            |c AS (SELECT doc_id, tk, len(tk) AS n FROM toks),
            |st AS (SELECT doc_id, tk, n,
            |    list_filter(range(0, greatest(n, 1), 8), i -> i < n) AS ss FROM c),
@@ -1904,32 +1801,9 @@ private[graft] object MiscGates {
            |      unnest(list_transform(range(1, len(ss) + 1),
            |        j -> struct_pack(j := j, s := ss[j]))) AS u
            |    FROM st)),
-           |stoks AS (SELECT doc_id, seg_idx,
-           |    list_filter(string_split_regex(lower(seg), '\\s+'),
-           |      t -> len(t) > 0) AS tk
-           |  FROM segs),
-           |feats AS (SELECT doc_id, seg_idx, list_concat(tk,
-           |    CASE WHEN len(tk) >= 2 THEN list_transform(range(1, len(tk)),
-           |      i -> array_to_string(list_slice(tk, i, i + 1), ' '))
-           |    ELSE [] END) AS fs FROM stoks),
-           |base AS (SELECT doc_id, seg_idx, len(fs) AS n_features FROM feats),
-           |h0 AS (SELECT doc_id, seg_idx, unnest(fs) AS shingle FROM feats),
-           |folded AS (SELECT doc_id, seg_idx, $FnvFoldSql AS h FROM h0),
-           |z0 AS (SELECT doc_id, seg_idx,
-           |    CAST((CAST(h AS HUGEINT) + $seedGolden) % 18446744073709551616
-           |      AS UBIGINT) AS z FROM folded),
-           |z1 AS (SELECT doc_id, seg_idx,
-           |    ${mulModSql("xor(z, z >> 30)", Mix1B)} AS z FROM z0),
-           |z2 AS (SELECT doc_id, seg_idx,
-           |    ${mulModSql("xor(z, z >> 27)", Mix2B)} AS z FROM z1),
-           |hv AS (SELECT doc_id, seg_idx, xor(z, z >> 31) AS z FROM z2),
-           |wsum AS (SELECT doc_id, seg_idx,
-           |    sum(($wlist)[cast(z % 256 AS bigint) + 1]) AS sum_w
-           |  FROM hv GROUP BY 1, 2),
-           |sc AS (SELECT b.doc_id, b.seg_idx,
-           |    cast(b.n_features AS bigint) AS n_features,
-           |    cast(coalesce(w.sum_w, 0) AS bigint) AS sum_w
-           |  FROM base b LEFT JOIN wsum w USING (doc_id, seg_idx)),
+           |${toksCte("(SELECT doc_id, seg_idx, seg AS text FROM segs)", "stoks",
+                "doc_id, seg_idx")},
+           |${classifierSumCtes("doc_id, seg_idx", "stoks")},
            |lg AS (SELECT doc_id, seg_idx, n_features, sum_w,
            |    CAST(0.0 AS DOUBLE) + CAST(0.05 AS DOUBLE) *
            |      (cast(sum_w AS double) / cast(greatest(n_features, 1) AS double))
@@ -1954,8 +1828,7 @@ private[graft] object MiscGates {
           .where(pmod(col("doc_id"), lit(20L)) === 0L)
           .select(col("doc_id"), col("text")),
         "doc_id", "text", window = 6, stride = 3),
-      s"""WITH toks AS (SELECT doc_id, $TokSql AS tk FROM documents
-         |  WHERE doc_id % 20 = 0),
+      s"""WITH ${toksCte("documents WHERE doc_id % 20 = 0")},
          |c AS (SELECT doc_id, tk, len(tk) AS n FROM toks),
          |st AS (SELECT doc_id, tk, n,
          |    list_filter(range(0, greatest(n, 1), 3),
@@ -2032,7 +1905,7 @@ private[graft] object MiscGates {
     },
       // same signals as q_text_stats, thresholds multiplied out so no
       // division can produce NaN; reasons array order = rule order
-      s"""WITH t AS (SELECT doc_id, $TokSql AS tk FROM documents),
+      s"""WITH ${toksCte("documents", "t")},
          |x AS (SELECT doc_id,
          |    cast(len(tk) AS bigint) AS n,
          |    cast(len(list_distinct(tk)) AS bigint) AS nd,
@@ -2062,7 +1935,7 @@ private[graft] object MiscGates {
       // ops) → per-doc sums are association-order-free and the score is
       // engine-exact; context totals derive from the bigram model, V from the
       // distinct unigram stream — mirroring NgramLM exactly
-      s"""WITH toks AS (SELECT doc_id, $TokSql AS tk FROM documents),
+      s"""WITH ${toksCte("documents")},
          |big AS (SELECT doc_id, unnest(list_transform(range(1, len(tk)),
          |    i -> tk[i] || ' ' || tk[i + 1])) AS bigram FROM toks),
          |c12 AS (SELECT bigram, count(*) AS c12 FROM big GROUP BY 1),
@@ -2097,7 +1970,7 @@ private[graft] object MiscGates {
       // the LM-score replay feeding the exact rational-quantile cut: both
       // stages reuse their own gates' oracle shapes; avg_prob doubles are
       // identical (quantized-p sums), so the threshold comparison is exact
-      s"""WITH toks AS (SELECT doc_id, $TokSql AS tk FROM documents),
+      s"""WITH ${toksCte("documents")},
          |big AS (SELECT doc_id, unnest(list_transform(range(1, len(tk)),
          |    i -> tk[i] || ' ' || tk[i + 1])) AS bigram FROM toks),
          |c12 AS (SELECT bigram, count(*) AS c12 FROM big GROUP BY 1),
@@ -2143,16 +2016,9 @@ private[graft] object MiscGates {
       // counts — cast-to-double factors in exactly the operator's association
       // so all three IEEE roundings match, floor-quantized to the 2^-20 grid
       {
-        val seedGolden = (BigInt(41) * GoldenB).mod(BigInt(2).pow(64))
-        s"""WITH toks AS (SELECT doc_id, $TokSql AS tk FROM documents),
+        s"""WITH ${toksCte("documents")},
            |tl AS (SELECT doc_id, unnest(tk) AS shingle FROM toks),
-           |folded AS (SELECT doc_id, $FnvFoldSql AS h FROM tl),
-           |z0 AS (SELECT doc_id,
-           |    CAST((CAST(h AS HUGEINT) + $seedGolden) % 18446744073709551616
-           |      AS UBIGINT) AS z FROM folded),
-           |z1 AS (SELECT doc_id, ${mulModSql("xor(z, z >> 30)", Mix1B)} AS z FROM z0),
-           |z2 AS (SELECT doc_id, ${mulModSql("xor(z, z >> 27)", Mix2B)} AS z FROM z1),
-           |hv AS (SELECT doc_id, xor(z, z >> 31) AS z FROM z2),
+           |${fnvMixCtes("", "doc_id", "tl", "41")},
            |bk AS (SELECT doc_id, cast(z % 4096 AS bigint) AS b FROM hv),
            |tgt AS (SELECT doc_id FROM documents WHERE lang = 'en'),
            |cnt AS (SELECT b,
@@ -2194,7 +2060,6 @@ private[graft] object MiscGates {
       // engines run the identical (150.0 · w) / n IEEE op sequence (DuckDB
       // bare decimal literals would compute exact-decimal rates instead).
       {
-        val seedGolden = (BigInt(7) * GoldenB).mod(BigInt(2).pow(64))
         s"""WITH w(source, wt) AS (VALUES
            |  ('src0', CAST(0.4 AS double)), ('src1', CAST(0.3 AS double)),
            |  ('src2', CAST(0.15 AS double)), ('src3', CAST(0.1 AS double)),
@@ -2204,13 +2069,7 @@ private[graft] object MiscGates {
            |    least(CAST(1 AS double), CAST(150 AS double) * wt / CAST(n AS double)) AS rate
            |  FROM w JOIN cnt USING (source)),
            |h0 AS (SELECT doc_id, source, CAST(doc_id AS VARCHAR) AS shingle FROM documents),
-           |folded AS (SELECT doc_id, source, $FnvFoldSql AS h FROM h0),
-           |z0 AS (SELECT doc_id, source,
-           |    CAST((CAST(h AS HUGEINT) + $seedGolden) % 18446744073709551616 AS UBIGINT) AS z
-           |  FROM folded),
-           |z1 AS (SELECT doc_id, source, ${mulModSql("xor(z, z >> 30)", Mix1B)} AS z FROM z0),
-           |z2 AS (SELECT doc_id, source, ${mulModSql("xor(z, z >> 27)", Mix2B)} AS z FROM z1),
-           |hv AS (SELECT doc_id, source, xor(z, z >> 31) AS z FROM z2),
+           |${fnvMixCtes("", "doc_id, source", "h0", "7")},
            |u AS (SELECT doc_id, source,
            |    CAST(z >> 24 AS double) / CAST(1099511627776 AS double) AS u FROM hv)
            |SELECT u.source, cast(count(*) AS bigint) AS n_kept,
@@ -2238,7 +2097,6 @@ private[graft] object MiscGates {
       // keep decision) are bit-identical cross-engine; same FnvMix uniform
       // replay as q_mixture_sample, seed 13
       {
-        val seedGolden = (BigInt(13) * GoldenB).mod(BigInt(2).pow(64))
         s"""WITH cnt AS (SELECT lang, count(*) AS n FROM documents GROUP BY 1),
            |mn AS (SELECT min(n) AS n_min FROM cnt),
            |r AS (SELECT lang, n,
@@ -2246,13 +2104,7 @@ private[graft] object MiscGates {
            |  FROM cnt CROSS JOIN mn),
            |h0 AS (SELECT doc_id, lang, CAST(doc_id AS VARCHAR) AS shingle
            |  FROM documents),
-           |folded AS (SELECT doc_id, lang, $FnvFoldSql AS h FROM h0),
-           |z0 AS (SELECT doc_id, lang,
-           |    CAST((CAST(h AS HUGEINT) + $seedGolden) % 18446744073709551616
-           |      AS UBIGINT) AS z FROM folded),
-           |z1 AS (SELECT doc_id, lang, ${mulModSql("xor(z, z >> 30)", Mix1B)} AS z FROM z0),
-           |z2 AS (SELECT doc_id, lang, ${mulModSql("xor(z, z >> 27)", Mix2B)} AS z FROM z1),
-           |hv AS (SELECT doc_id, lang, xor(z, z >> 31) AS z FROM z2),
+           |${fnvMixCtes("", "doc_id, lang", "h0", "13")},
            |u AS (SELECT doc_id, lang,
            |    CAST(z >> 24 AS double) / CAST(1099511627776 AS double) AS u FROM hv)
            |SELECT u.lang, CAST(r.n AS BIGINT) AS n_orig,
@@ -2297,7 +2149,7 @@ private[graft] object MiscGates {
            |  FROM (SELECT DISTINCT event_type,
            |      date_trunc('month', cast(ts AS date)) AS month, user_id
            |    FROM events WHERE user_id IS NOT NULL)),
-           |${hllRegsCtesOver(Seq("event_type", "month"), AggState.HllSeed)},
+           |${hllRegsCtes("event_type, month", AggState.HllSeed)},
            |est AS (SELECT event_type, month,
            |    sum(CAST(power(2.0, 57 - reg) AS HUGEINT)) AS s_present,
            |    count(*) AS nb
@@ -2896,7 +2748,7 @@ private[graft] object MiscGates {
            |  FROM melted GROUP BY 1),
            |hsrc AS (SELECT col_name, sval AS shingle
            |  FROM (SELECT DISTINCT col_name, sval FROM melted WHERE sval IS NOT NULL)),
-           |${hllRegsCtesOver(Seq("col_name"), 31L)},
+           |${hllRegsCtes("col_name", 31L)},
            |est AS (SELECT col_name,
            |    sum(CAST(power(2.0, 57 - reg) AS HUGEINT)) AS s_present,
            |    count(*) AS nb
@@ -3017,7 +2869,7 @@ private[graft] object MiscGates {
         minCount = 5L, k = 20),
       // identical lift operation order (doubles before any multiply); the
       // LIMIT is deterministic because (lift DESC, w1, w2) is a total order
-      s"""WITH toks AS (SELECT doc_id, $TokSql AS tk FROM documents),
+      s"""WITH ${toksCte("documents")},
          |big AS (SELECT unnest(list_transform(range(1, len(tk)),
          |    i -> tk[i] || ' ' || tk[i + 1])) AS bigram
          |  FROM toks WHERE len(tk) >= 2),
@@ -3082,18 +2934,11 @@ private[graft] object MiscGates {
       // side embeds (0.9 + 0.05 = 0.9500000000000001 — both engines compare
       // against that exact value)
       {
-        val seedGolden = (BigInt(13) * GoldenB).mod(BigInt(2).pow(64))
         val cums = Sampling.cumFractions(
           Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05))
         s"""WITH h0 AS (SELECT doc_id, source,
            |    CAST(doc_id AS VARCHAR) AS shingle FROM documents),
-           |folded AS (SELECT doc_id, source, $FnvFoldSql AS h FROM h0),
-           |z0 AS (SELECT doc_id, source,
-           |    CAST((CAST(h AS HUGEINT) + $seedGolden) % 18446744073709551616
-           |      AS UBIGINT) AS z FROM folded),
-           |z1 AS (SELECT doc_id, source, ${mulModSql("xor(z, z >> 30)", Mix1B)} AS z FROM z0),
-           |z2 AS (SELECT doc_id, source, ${mulModSql("xor(z, z >> 27)", Mix2B)} AS z FROM z1),
-           |hv AS (SELECT doc_id, source, xor(z, z >> 31) AS z FROM z2),
+           |${fnvMixCtes("", "doc_id, source", "h0", "13")},
            |u AS (SELECT doc_id, source,
            |    CAST(z >> 24 AS double) / CAST(1099511627776 AS double) AS u FROM hv),
            |a AS (SELECT doc_id, source,
@@ -3119,16 +2964,9 @@ private[graft] object MiscGates {
       // a row_number here vs the bounded-heap TopKPerKey in Spark — identical
       // selection, different physical operator
       {
-        val seedGolden = (BigInt(5) * GoldenB).mod(BigInt(2).pow(64))
         s"""WITH h0 AS (SELECT event_id, event_type,
            |    CAST(event_id AS VARCHAR) AS shingle FROM events),
-           |folded AS (SELECT event_id, event_type, $FnvFoldSql AS h FROM h0),
-           |z0 AS (SELECT event_id, event_type,
-           |    CAST((CAST(h AS HUGEINT) + $seedGolden) % 18446744073709551616
-           |      AS UBIGINT) AS z FROM folded),
-           |z1 AS (SELECT event_id, event_type, ${mulModSql("xor(z, z >> 30)", Mix1B)} AS z FROM z0),
-           |z2 AS (SELECT event_id, event_type, ${mulModSql("xor(z, z >> 27)", Mix2B)} AS z FROM z1),
-           |hv AS (SELECT event_id, event_type, xor(z, z >> 31) AS z FROM z2),
+           |${fnvMixCtes("", "event_id, event_type", "h0", "5")},
            |u AS (SELECT event_id, event_type,
            |    CAST(z >> 24 AS double) / CAST(1099511627776 AS double) AS sample_u
            |  FROM hv),
@@ -3175,15 +3013,8 @@ private[graft] object MiscGates {
       // the signed value). The Spark side reads the written files back, so a
       // match here proves the on-disk layout, not just the plan.
       {
-        val seedGolden = (BigInt(13) * GoldenB).mod(BigInt(2).pow(64))
         s"""WITH h0 AS (SELECT doc_id, CAST(doc_id AS VARCHAR) AS shingle FROM documents),
-           |folded AS (SELECT doc_id, $FnvFoldSql AS h FROM h0),
-           |z0 AS (SELECT doc_id,
-           |    CAST((CAST(h AS HUGEINT) + $seedGolden) % 18446744073709551616
-           |      AS UBIGINT) AS z FROM folded),
-           |z1 AS (SELECT doc_id, ${mulModSql("xor(z, z >> 30)", Mix1B)} AS z FROM z0),
-           |z2 AS (SELECT doc_id, ${mulModSql("xor(z, z >> 27)", Mix2B)} AS z FROM z1),
-           |hv AS (SELECT doc_id, xor(z, z >> 31) AS z FROM z2)
+           |${fnvMixCtes("", "doc_id", "h0", "13")}
            |SELECT cast(z % 8 AS bigint) AS shard,
            |  cast(count(*) AS bigint) AS n_rows_read,
            |  cast(count(*) AS bigint) AS n_rows_manifest,

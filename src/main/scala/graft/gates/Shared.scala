@@ -6,7 +6,14 @@ import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** SQL/CTE builders and frame helpers used by gates of several families. */
+/** SQL/CTE builders and frame helpers used by gates of several families.
+  * The kernel-replay builders ([[fnvMixCtes]] with [[hllRegsCtes]] and
+  * [[classifierSumCtes]], [[floatFoldSql]] and its dot/norm/distance/cosine
+  * shapes, the sign-LSH CTEs, [[probeTopKSql]], [[toksCte]] /
+  * [[ShinglesCte]] / [[WinsCte]] and the ilog2q pair) are the
+  * one place each graft kernel is restated in DuckDB SQL: they emit SQL
+  * only and never call the Spark kernel they replay, so an oracle stays an
+  * independent replay. */
 private[gates] object Shared {
 
   /** Delete temp-dir children left by a PREVIOUS invocation of a gate. */
@@ -76,7 +83,7 @@ private[gates] object Shared {
     * int128, so: a*b ≡ al*bl + ((al*bh + ah*bl) mod 2^32)·2^32 (mod 2^64),
     * every intermediate < 2^66.
     */
-  def mulModSql(a: String, b: BigInt): String = {
+  private def mulModSql(a: String, b: BigInt): String = {
     val bh = b >> 32
     val bl = b & 0xFFFFFFFFL
     s"CAST(((CAST(($a) % 4294967296 AS HUGEINT) * $bl) + " +
@@ -85,47 +92,21 @@ private[gates] object Shared {
       "% 18446744073709551616 AS UBIGINT)"
   }
 
-  /** Recursive-CTE replay of [[graft.operators.Unigram]]'s hard-EM
-    * trajectory (requires `WITH RECURSIVE`): seed substring counts,
-    * integer ilog2q scores (exponent CASE chain + shifted mantissa
-    * fraction — exact integer ops only), per-word piece-score MAPs, the
-    * Viterbi DP as a recursive position walk carrying the (score,
-    * backpointer) list, backtrace as a second recursive walk, usage
-    * counts, top-K + single-char pruning. Rounds 1..2 prune; round 3
-    * applies the final artifact. Ends in `u3scr(piece, used, score)`
-    * (the artifact, q_unigram_train) and `u3cnt(piece, used)` (the
-    * application counts, q_unigram_tokenize).
-    */
   /** The A-ES draw replay — shared by q_weighted_sample (batch) and
     * q_stream_weighted_sample (the streamed fold must land on the
     * identical k rows). */
-  lazy val WeightedSampleSql: String = {
-
-      val seedGolden = (BigInt(29) * GoldenB).mod(BigInt(2).pow(64))
-      val eCase = (62 to 1 by -1)
-        .map(k => s"WHEN v >= ${1L << k} THEN $k").mkString(" ")
-      s"""WITH w0 AS (SELECT doc_id, CAST(length(text) AS BIGINT) AS weight,
-         |    CAST(doc_id AS VARCHAR) AS shingle
-         |  FROM documents WHERE length(text) >= 1),
-         |f AS (SELECT doc_id, weight, $FnvFoldSql AS h FROM w0),
-         |z0 AS (SELECT doc_id, weight,
-         |    CAST((CAST(h AS HUGEINT) + $seedGolden)
-         |      % 18446744073709551616 AS UBIGINT) AS z FROM f),
-         |z1 AS (SELECT doc_id, weight, ${mulModSql("xor(z, z >> 30)", Mix1B)}
-         |    AS z FROM z0),
-         |z2 AS (SELECT doc_id, weight, ${mulModSql("xor(z, z >> 27)", Mix2B)}
-         |    AS z FROM z1),
-         |hv AS (SELECT doc_id, weight,
-         |    CAST(xor(z, z >> 31) >> 24 AS BIGINT) + 1 AS v FROM z2),
-         |e AS (SELECT doc_id, weight, v, CASE $eCase ELSE 0 END AS e FROM hv),
-         |kq AS (SELECT doc_id, weight,
-         |    -(((2621440 - (e * 65536 +
-         |        (((v - (CAST(1 AS BIGINT) << e)) << 16) >> e))) << 20)
-         |      // weight) AS kq
-         |  FROM e)
-         |SELECT doc_id, weight FROM kq
-         |ORDER BY kq DESC, doc_id LIMIT 100""".stripMargin
-  }
+  lazy val WeightedSampleSql: String =
+    s"""WITH w0 AS (SELECT doc_id, CAST(length(text) AS BIGINT) AS weight,
+       |    CAST(doc_id AS VARCHAR) AS shingle
+       |  FROM documents WHERE length(text) >= 1),
+       |${fnvMixCtes("", "doc_id, weight", "w0", "29")},
+       |hv1 AS (SELECT doc_id, weight, CAST(z >> 24 AS BIGINT) + 1 AS v FROM hv),
+       |e AS (SELECT doc_id, weight, v, ${ilog2ExpSql("v")} AS e FROM hv1),
+       |kq AS (SELECT doc_id, weight,
+       |    -(((2621440 - ${ilog2qSql("v", "e")}) << 20) // weight) AS kq
+       |  FROM e)
+       |SELECT doc_id, weight FROM kq
+       |ORDER BY kq DESC, doc_id LIMIT 100""".stripMargin
 
   /** The CDC fold replay — shared by q_cdc_apply (batch) and
     * q_stream_cdc (the streamed materialization must land on the
@@ -160,66 +141,216 @@ private[gates] object Shared {
         |FROM snap s FULL JOIN w ON s.c_custkey = w.c_custkey
         |WHERE w.op IS NULL OR w.op <> 'D'""".stripMargin
 
-  val FnvPrimeB = BigInt("1099511628211")          // 0x100000001b3
+  private val FnvPrimeB = BigInt("1099511628211")  // 0x100000001b3
 
-  val GoldenB = BigInt("11400714819323198485")     // 0x9E3779B97F4A7C15
+  private val GoldenB = BigInt("11400714819323198485")  // 0x9E3779B97F4A7C15
 
-  val Mix1B = BigInt("13787848793156543929")       // 0xBF58476D1CE4E5B9
+  private val Mix1B = BigInt("13787848793156543929")  // 0xBF58476D1CE4E5B9
 
-  val Mix2B = BigInt("10723151780598845931")       // 0x94D049BB133111EB
+  private val Mix2B = BigInt("10723151780598845931")  // 0x94D049BB133111EB
 
-  /** FNV-1a fold of column `shingle` (ASCII text: codepoint == UTF-8 byte,
-    * which holds for the generated documents) → UBIGINT.
+  /** Replays [[graft.plans.HashExpressions.fnvMix]] as CTEs `${p}folded`,
+    * `${p}z0`, `${p}z1`, `${p}z2` and `${p}hv` over `src`, which carries
+    * the text column `shingle` (ASCII: codepoint == UTF-8 byte, which holds
+    * for the generated documents): the FNV-1a fold of `shingle`, then
+    * `+ seed·0x9E3779B97F4A7C15`, the two splitmix64 multiply rounds and
+    * the final xor-shift, all mod 2^64. Ends in `${p}hv(<cols>, z)`, z the
+    * UBIGINT hash. `seed` is a SQL integer expression over the columns of
+    * `src` and of `join` — an optional clause (`" CROSS JOIN rs"`) that
+    * fans each folded row out to several seeds, so the fold runs once per
+    * shingle, not once per seed.
     */
-  val FnvFoldSql =
-    "list_reduce(list_prepend(CAST(14695981039346656037 AS UBIGINT), " +
-      "list_transform(range(1, length(shingle) + 1), " +
-      "i -> CAST(unicode(shingle[i]) AS UBIGINT))), " +
-      s"(acc, b) -> ${mulModSql("xor(acc, b)", FnvPrimeB)})"
+  def fnvMixCtes(p: String, cols: String, src: String, seed: String,
+      join: String = ""): String = {
+    val fold =
+      "list_reduce(list_prepend(CAST(14695981039346656037 AS UBIGINT), " +
+        "list_transform(range(1, length(shingle) + 1), " +
+        "i -> CAST(unicode(shingle[i]) AS UBIGINT))), " +
+        s"(acc, b) -> ${mulModSql("xor(acc, b)", FnvPrimeB)})"
+    s"""${p}folded AS (SELECT *, $fold AS h FROM $src),
+       |${p}z0 AS (SELECT $cols, CAST((CAST(h AS HUGEINT) +
+       |    ($seed) * CAST('$GoldenB' AS HUGEINT)) % 18446744073709551616
+       |    AS UBIGINT) AS z FROM ${p}folded$join),
+       |${p}z1 AS (SELECT $cols, ${mulModSql("xor(z, z >> 30)", Mix1B)} AS z FROM ${p}z0),
+       |${p}z2 AS (SELECT $cols, ${mulModSql("xor(z, z >> 27)", Mix2B)} AS z FROM ${p}z1),
+       |${p}hv AS (SELECT $cols, xor(z, z >> 31) AS z FROM ${p}z2)""".stripMargin
+  }
 
-  /** FnvMix HLL register replay (seed 11) over `events(event_type,
-    * user_id)` → CTE chain ending in `regs(event_type, bucket, reg)` —
-    * shared by the q_card_sketch and q_stream_sketch oracles.
+  /** Replays [[graft.operators.Sketch.registers]] (FnvMix HLL registers)
+    * over a caller-provided CTE `hsrc(<groups>..., shingle)` → CTEs ending in
+    * `regs(<groups>..., bucket, reg)`: bucket = the top 8 hash bits, rank =
+    * leading zeros of the rest + 1 from an exact integer CASE ladder.
     */
-  lazy val CardRegsCtes: String = {
-    val seedGolden = (BigInt(11) * GoldenB).mod(BigInt(2).pow(64))
+  def hllRegsCtes(groups: String, seed: Long): String = {
     val rhoCase = (1 to 56)
       .map(r => s"WHEN rem >= ${BigInt(2).pow(64 - r)} THEN $r")
       .mkString(" ")
-    s"""h0 AS (SELECT event_type, CAST(user_id AS VARCHAR) AS shingle
-       |  FROM (SELECT DISTINCT event_type, user_id FROM events
-       |        WHERE user_id IS NOT NULL)),
-       |folded AS (SELECT event_type, $FnvFoldSql AS h FROM h0),
-       |z0 AS (SELECT event_type,
-       |    CAST((CAST(h AS HUGEINT) + $seedGolden) % 18446744073709551616
-       |      AS UBIGINT) AS z FROM folded),
-       |z1 AS (SELECT event_type, ${mulModSql("xor(z, z >> 30)", Mix1B)} AS z FROM z0),
-       |z2 AS (SELECT event_type, ${mulModSql("xor(z, z >> 27)", Mix2B)} AS z FROM z1),
-       |hv AS (SELECT event_type, xor(z, z >> 31) AS z FROM z2),
-       |br AS (SELECT event_type, z >> 56 AS bucket,
+    s"""${fnvMixCtes("", groups, "hsrc", seed.toString)},
+       |br AS (SELECT $groups, z >> 56 AS bucket,
        |    CAST((CAST(z AS HUGEINT) * 256) % 18446744073709551616 AS UBIGINT) AS rem
        |  FROM hv),
-       |rho AS (SELECT event_type, bucket, CASE $rhoCase ELSE 57 END AS rho FROM br),
-       |regs AS (SELECT event_type, bucket, max(rho) AS reg FROM rho GROUP BY 1, 2)""".stripMargin
+       |rho AS (SELECT $groups, bucket, CASE $rhoCase ELSE 57 END AS rho FROM br),
+       |regs AS (SELECT $groups, bucket, max(rho) AS reg FROM rho
+       |  GROUP BY $groups, bucket)""".stripMargin
   }
 
+  /** [[hllRegsCtes]] (seed 11) over distinct `events(event_type, user_id)`
+    * → `regs(event_type, bucket, reg)` — shared by the q_card_sketch and
+    * q_stream_sketch oracles.
+    */
+  lazy val CardRegsCtes: String =
+    s"""hsrc AS (SELECT event_type, CAST(user_id AS VARCHAR) AS shingle
+       |  FROM (SELECT DISTINCT event_type, user_id FROM events
+       |        WHERE user_id IS NOT NULL)),
+       |${hllRegsCtes("event_type", 11)}""".stripMargin
+
+  /** Replays the exponent of [[graft.operators.Unigram.ilog2q]],
+    * `63 − clz64(v)` for `v` ≥ 1, as an exact integer CASE ladder (no
+    * floating log2); 0 below 2. */
+  def ilog2ExpSql(v: String): String =
+    (62 to 1 by -1).map(k => s"WHEN $v >= ${1L << k} THEN $k")
+      .mkString("CASE ", " ", " ELSE 0 END")
+
+  /** Replays [[graft.operators.Unigram.ilog2q]] of `v` given its exponent
+    * `e` (an [[ilog2ExpSql]] value): `e·2^16 + ((v − 2^e) << 16) >> e`. */
+  def ilog2qSql(v: String, e: String): String =
+    s"($e * 65536 + ((($v - (CAST(1 AS BIGINT) << $e)) << 16) >> $e))"
+
+  /** Replays [[graft.plans.FloatDot]]'s fold (`Vectors.dot`, and the
+    * KMeans, Pooling and Pq distances): a left-to-right double sum from 0.0
+    * over elements 1..len(`v`) of `term`, a lambda body over the 1-based
+    * index `i`. The same IEEE operations in the same order give the same
+    * bits on both engines. */
+  def floatFoldSql(v: String, term: String): String =
+    s"list_reduce(list_prepend(cast(0.0 AS double), list_transform(range(1, len($v) + 1), " +
+      s"i -> $term)), (acc, x) -> acc + x)"
+
+  /** [[floatFoldSql]] dot product of lists `a` and `b`, elements cast to
+    * double. */
+  def dotSql(a: String, b: String): String =
+    floatFoldSql(a, s"cast($a[i] AS double) * cast($b[i] AS double)")
+
+  /** Euclidean norm: the square root of the [[dotSql]] self product. */
+  def normSql(v: String): String = s"sqrt(${dotSql(v, v)})"
+
+  /** [[floatFoldSql]] squared Euclidean distance of lists `a` and `b`
+    * (DuckDB widens a float element to double before subtracting). */
+  def d2Sql(a: String, b: String): String =
+    floatFoldSql(a, s"($a[i] - $b[i]) * ($a[i] - $b[i])")
+
+  /** Replays `Vectors.cosine` from precomputed norms: [[dotSql]] over
+    * `na·nb`, 0.0 when either norm is 0. */
+  def cosineSql(a: String, na: String, b: String, nb: String): String =
+    s"CASE WHEN $na * $nb > 0 THEN ${dotSql(a, b)} / ($na * $nb) ELSE 0.0 END"
+
+  /** CTE `$name(vec_id, embedding, nv)`: the `embeddings` rows matching
+    * `where`, each with its [[normSql]] norm. */
+  def embNormCte(name: String, where: String = "TRUE",
+      materialized: Boolean = false): String =
+    s"""$name AS ${if (materialized) "MATERIALIZED " else ""}(SELECT vec_id, embedding,
+       |    ${normSql("embedding")} AS nv
+       |  FROM embeddings WHERE $where)""".stripMargin
+
+  /** Replays `Similarity.hyperplanes(planes, 64, seed)`: CTE
+    * `$name(p, w)`, one 64-dim plane per p in [0, `planes`) (a SQL integer
+    * expression), component d the quadratic-mod uniform of
+    * k = (p·64 + d + seed·83492791) mod 1000003. */
+  def lshPlanesCte(name: String, seed: Long, planes: String): String =
+    s"""$name AS (SELECT p, list_transform(
+       |    list_transform(range(0, 64), d -> (p * 64 + d + ${seed * 83492791L}) % 1000003),
+       |    k -> cast((k * k % 1000003 * 73856093 + k * 19349663) % 1000003 AS double)
+       |      / 1000003.0 - 0.5) AS w
+       |  FROM (SELECT unnest(range(0, $planes)) AS p))""".stripMargin
+
+  /** The per-plane dots of `Similarity.bucketCode`: CTE
+    * `$name(vec_id, p, dp)`, the [[dotSql]] of every `$emb(vec_id,
+    * embedding)` vector with every `$planes(p, w)` plane. */
+  def signDotsCte(name: String, emb: String, planes: String): String =
+    s"""$name AS (SELECT e.vec_id, $planes.p,
+       |    ${dotSql("e.embedding", s"$planes.w")} AS dp
+       |  FROM $emb e, $planes)""".stripMargin
+
+  /** `Similarity.bucketCode` as an aggregate over [[signDotsCte]] rows:
+    * bit `bit` (a SQL expression over the plane index) set where the dot
+    * is ≥ 0. */
+  def signCodeSql(bit: String): String =
+    s"cast(sum(CASE WHEN dp >= 0 THEN 1 << $bit ELSE 0 END) AS bigint)"
+
+  /** The exact-cosine rerank of `Similarity.knnBruteForce` / `knnLsh` /
+    * `knnIvf` over CTE `cand(neighbor_id, probe_id, va, na, vb, nb)` (both
+    * vectors with their norms): the [[cosineSql]] of every candidate and
+    * the per-probe top-`k` by (cosine desc, neighbor_id) — CTEs `cos`,
+    * `ranked` and the final SELECT. */
+  def probeTopKSql(k: Int): String =
+    s"""cos AS (SELECT probe_id, neighbor_id,
+       |    ${cosineSql("va", "na", "vb", "nb")} AS cosine
+       |  FROM cand),
+       |ranked AS (SELECT *, cast(row_number() OVER (PARTITION BY probe_id
+       |    ORDER BY cosine DESC, neighbor_id) AS bigint) AS rank FROM cos)
+       |SELECT probe_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= $k""".stripMargin
+
+  /** Replays the hashed feature sum of [[graft.operators.QualityClassifier]]
+    * (`features` + `weightSum` at seed 29, 256 buckets) over CTE
+    * `$toks(<keys>, tk)`: the tokens then the space-joined bigrams, each
+    * [[fnvMixCtes]]-hashed to a bucket of the seeded int8 weight vector.
+    * Ends in `sc(<keys>, n_features, sum_w)`; a featureless row sums to 0.
+    */
+  def classifierSumCtes(keys: String, toks: String): String = {
+    val wlist = QualityClassifier.seededWeights(256, 29L).mkString("[", ", ", "]")
+    s"""feats AS (SELECT $keys, list_concat(tk,
+       |    CASE WHEN len(tk) >= 2 THEN list_transform(range(1, len(tk)),
+       |      i -> array_to_string(list_slice(tk, i, i + 1), ' '))
+       |    ELSE [] END) AS fs
+       |  FROM $toks),
+       |base AS (SELECT $keys, len(fs) AS n_features FROM feats),
+       |h0 AS (SELECT $keys, unnest(fs) AS shingle FROM feats),
+       |${fnvMixCtes("", keys, "h0", "29")},
+       |wsum AS (SELECT $keys,
+       |    sum(($wlist)[cast(z % 256 AS bigint) + 1]) AS sum_w
+       |  FROM hv GROUP BY $keys),
+       |sc AS (SELECT $keys, cast(b.n_features AS bigint) AS n_features,
+       |    cast(coalesce(w.sum_w, 0) AS bigint) AS sum_w
+       |  FROM base b LEFT JOIN wsum w USING ($keys))""".stripMargin
+  }
+
+  /** Replays `Text.tokens` (split on whitespace runs, lowercased, no
+    * empties) as CTE `$name(<cols>, tk)` over `from`, carrying `cols`. */
+  def toksCte(from: String, name: String = "toks", cols: String = "doc_id"): String =
+    s"$name AS (SELECT $cols, $TokSql AS tk FROM $from)"
+
+  /** Replays `Text.wordShingles(text, 3)` over CTE `toks(doc_id, tk)`: CTE
+    * `sh(doc_id, shingles)`, each doc's distinct space-joined 3-token
+    * windows; a doc under 3 tokens (no shingle) is dropped. */
+  val ShinglesCte: String =
+    """sh AS (SELECT doc_id, list_distinct(list_transform(range(1, len(tk) - 1),
+      |    i -> array_to_string(list_slice(tk, i, i + 2), ' '))) AS shingles
+      |  FROM toks WHERE len(tk) >= 3)""".stripMargin
+
+  /** The 5-token windows of `Dedup.duplicateSpans` over CTE
+    * `toks(doc_id, tk)`: CTE `wins(doc_id, w)`, every space-joined window
+    * in position order with multiplicity; empty under 5 tokens. */
+  val WinsCte: String =
+    """wins AS (SELECT doc_id,
+      |    CASE WHEN len(tk) >= 5 THEN list_transform(range(1, len(tk) - 3),
+      |      i -> array_to_string(list_slice(tk, i, i + 4), ' '))
+      |    ELSE [] END AS w
+      |  FROM toks)""".stripMargin
+
   /** Log-bucketed histogram replay (operators/Sketch.scala logHistogram)
-    * over documents(source, n_chars): binary exponent from an exact integer
-    * CASE chain (same no-floating-log2 rule as the HLL rank), then the
-    * HdrHistogram bucket map with 4 sub-bucket bits — ends in CTE
+    * over documents(source, n_chars): binary exponent from the
+    * [[ilog2ExpSql]] ladder (same no-floating-log2 rule as the HLL rank; the
+    * exponent of v < 16 is unused), then the HdrHistogram bucket map with
+    * 4 sub-bucket bits — ends in CTE
     * `hist(source, bucket, cnt)`.
     */
-  lazy val HistCtes: String = {
-    val eCase = (62 to 4 by -1)
-      .map(k => s"WHEN v >= ${1L << k} THEN $k").mkString(" ")
+  lazy val HistCtes: String =
     s"""vals AS (SELECT source, CAST(n_chars AS BIGINT) AS v FROM documents
        |  WHERE n_chars IS NOT NULL AND n_chars >= 0),
-       |ve AS (SELECT source, v, CASE $eCase ELSE 0 END AS e FROM vals),
+       |ve AS (SELECT source, v, ${ilog2ExpSql("v")} AS e FROM vals),
        |hist AS (SELECT source,
        |    CASE WHEN v < 16 THEN v ELSE (e - 4) * 16 + (v >> (e - 4)) END AS bucket,
        |    count(*) AS cnt
        |  FROM ve GROUP BY 1, 2)""".stripMargin
-  }
 
   /** DuckDB fragment: sessionized events (adds session_seq per user). */
   val SessSql =

@@ -224,15 +224,8 @@ private[graft] object StreamingGates {
       // path, compared at counter-table grain
       s"""WITH f0 AS (SELECT event_type, CAST(user_id AS VARCHAR) AS shingle
          |  FROM events WHERE user_id IS NOT NULL),
-         |folded AS (SELECT event_type, $FnvFoldSql AS h FROM f0),
          |rs AS (SELECT unnest(range(4)) AS r),
-         |j AS (SELECT event_type, h, r FROM folded CROSS JOIN rs),
-         |z0 AS (SELECT event_type, r, CAST((CAST(h AS HUGEINT) +
-         |    (19 + r) * CAST('$GoldenB' AS HUGEINT)) % 18446744073709551616
-         |    AS UBIGINT) AS z FROM j),
-         |z1 AS (SELECT event_type, r, ${mulModSql("xor(z, z >> 30)", Mix1B)} AS z FROM z0),
-         |z2 AS (SELECT event_type, r, ${mulModSql("xor(z, z >> 27)", Mix2B)} AS z FROM z1),
-         |hv AS (SELECT event_type, r, xor(z, z >> 31) AS z FROM z2)
+         |${fnvMixCtes("", "event_type, r", "f0", "19 + r", " CROSS JOIN rs")}
          |SELECT event_type, cast(r AS bigint) AS r,
          |  cast(z % 256 AS bigint) AS bucket,
          |  cast(count(*) AS bigint) AS cnt
@@ -686,34 +679,13 @@ private[graft] object StreamingGates {
       // text — one deterministic row per distinct fingerprint, same
       // classifier replay as q_quality_classifier keyed on the fingerprint
       {
-        val wlist = QualityClassifier.seededWeights(256, 29L).mkString("[", ", ", "]")
-        val seedGolden = (BigInt(29) * GoldenB).mod(BigInt(2).pow(64))
         s"""WITH docs AS (
            |  SELECT DISTINCT trim(regexp_replace(regexp_replace(lower(text),
            |    '[^a-z0-9\\s]', '', 'g'), '\\s+', ' ', 'g')) AS text
            |  FROM documents),
            |ids AS (SELECT md5(text) AS fingerprint, text FROM docs),
-           |toks AS (SELECT fingerprint, $TokSql AS tk FROM ids),
-           |feats AS (SELECT fingerprint, list_concat(tk,
-           |    CASE WHEN len(tk) >= 2 THEN list_transform(range(1, len(tk)),
-           |      i -> array_to_string(list_slice(tk, i, i + 1), ' '))
-           |    ELSE [] END) AS fs
-           |  FROM toks),
-           |base AS (SELECT fingerprint, len(fs) AS n_features FROM feats),
-           |h0 AS (SELECT fingerprint, unnest(fs) AS shingle FROM feats),
-           |folded AS (SELECT fingerprint, $FnvFoldSql AS h FROM h0),
-           |z0 AS (SELECT fingerprint,
-           |    CAST((CAST(h AS HUGEINT) + $seedGolden) % 18446744073709551616
-           |      AS UBIGINT) AS z FROM folded),
-           |z1 AS (SELECT fingerprint, ${mulModSql("xor(z, z >> 30)", Mix1B)} AS z FROM z0),
-           |z2 AS (SELECT fingerprint, ${mulModSql("xor(z, z >> 27)", Mix2B)} AS z FROM z1),
-           |hv AS (SELECT fingerprint, xor(z, z >> 31) AS z FROM z2),
-           |wsum AS (SELECT fingerprint,
-           |    sum(($wlist)[cast(z % 256 AS bigint) + 1]) AS sum_w
-           |  FROM hv GROUP BY 1),
-           |sc AS (SELECT b.fingerprint, cast(b.n_features AS bigint) AS n_features,
-           |    cast(coalesce(w.sum_w, 0) AS bigint) AS sum_w
-           |  FROM base b LEFT JOIN wsum w USING (fingerprint)),
+           |${toksCte("ids", cols = "fingerprint")},
+           |${classifierSumCtes("fingerprint", "toks")},
            |lg AS (SELECT fingerprint, n_features, sum_w,
            |    CAST(0.0 AS DOUBLE) + CAST(0.05 AS DOUBLE) *
            |      (cast(sum_w AS double) / cast(greatest(n_features, 1) AS double))

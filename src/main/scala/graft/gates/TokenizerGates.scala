@@ -20,7 +20,7 @@ private[graft] object TokenizerGates {
   private def bpeOracleCtes(m: Int): String = {
     val sb = new StringBuilder
     sb.append(
-      s"""toks AS (SELECT doc_id, $TokSql AS tk FROM documents),
+      s"""${toksCte("documents")},
          |tw AS (SELECT unnest(tk) AS word FROM toks),
          |wv AS (SELECT word, count(*) AS cnt FROM tw
          |  WHERE regexp_full_match(word, '[a-z0-9]+') GROUP BY 1),
@@ -176,10 +176,6 @@ private[graft] object TokenizerGates {
     * valid on corpora with ≥ m merges.
     */
   private def wordPieceOracleCtes(m: Int): String = {
-    def eCase(v: String) = (62 to 1 by -1)
-      .map(k => s"WHEN $v >= ${1L << k} THEN $k").mkString(" ")
-    def lg(v: String, e: String) =
-      s"($e * 65536 + ((($v - (CAST(1 AS BIGINT) << $e)) << 16) >> $e))"
     val strip = "CASE WHEN b LIKE '##%' THEN substring(b, 3) ELSE b END"
     def roundCtes(r: Int) =
       s"""wp${r}sy AS MATERIALIZED (SELECT cnt, string_split(substring(s, 2, length(s) - 2),
@@ -190,13 +186,13 @@ private[graft] object TokenizerGates {
          |wp${r}s AS MATERIALIZED (SELECT sym, sum(cnt) AS scnt
          |  FROM (SELECT unnest(sy) AS sym, cnt FROM wp${r}sy) GROUP BY 1),
          |wp${r}e AS (SELECT a, b, pcnt, sa.scnt AS ca, sb.scnt AS cb,
-         |    CASE ${eCase("pcnt")} ELSE 0 END AS ep,
-         |    CASE ${eCase("sa.scnt")} ELSE 0 END AS ea,
-         |    CASE ${eCase("sb.scnt")} ELSE 0 END AS eb
+         |    ${ilog2ExpSql("pcnt")} AS ep,
+         |    ${ilog2ExpSql("sa.scnt")} AS ea,
+         |    ${ilog2ExpSql("sb.scnt")} AS eb
          |  FROM wp${r}pr JOIN wp${r}s sa ON sa.sym = a
          |  JOIN wp${r}s sb ON sb.sym = b),
          |wpm$r AS MATERIALIZED (SELECT a, b, pcnt,
-         |    ${lg("pcnt", "ep")} - ${lg("ca", "ea")} - ${lg("cb", "eb")}
+         |    ${ilog2qSql("pcnt", "ep")} - ${ilog2qSql("ca", "ea")} - ${ilog2qSql("cb", "eb")}
          |      AS score
          |  FROM wp${r}e ORDER BY score DESC, a, b LIMIT 1),
          |wpv$r AS MATERIALIZED (SELECT CASE WHEN a IS NULL THEN s
@@ -204,7 +200,7 @@ private[graft] object TokenizerGates {
          |      chr(1) || a || ($strip) || chr(1)) END AS s, cnt
          |  FROM wpv${r - 1} LEFT JOIN wpm$r ON TRUE)""".stripMargin
     val base =
-      s"""wptoks AS (SELECT doc_id, $TokSql AS tk FROM documents),
+      s"""${toksCte("documents", "wptoks")},
          |wpwv AS MATERIALIZED (SELECT word, count(*) AS cnt
          |  FROM (SELECT unnest(tk) AS word FROM wptoks)
          |  WHERE regexp_full_match(word, '[a-z0-9]+') GROUP BY 1),
@@ -246,21 +242,28 @@ private[graft] object TokenizerGates {
     (Seq(base) ++ (1 to m).map(roundCtes) :+ fv).mkString(",\n")
   }
 
+  /** Recursive-CTE replay of [[graft.operators.Unigram]]'s hard-EM
+    * trajectory (requires `WITH RECURSIVE`): seed substring counts,
+    * integer ilog2q scores (exponent CASE chain + shifted mantissa
+    * fraction — exact integer ops only), per-word piece-score MAPs, the
+    * Viterbi DP as a recursive position walk carrying the (score,
+    * backpointer) list, backtrace as a second recursive walk, usage
+    * counts, top-K + single-char pruning. Rounds 1..2 prune; round 3
+    * applies the final artifact. Ends in `u3scr(piece, used, score)`
+    * (the artifact, q_unigram_train) and `u3cnt(piece, used)` (the
+    * application counts, q_unigram_tokenize).
+    */
   private lazy val unigramOracleCtes: String = {
     val neg = -(1L << 40)
     val neg2 = 2L * neg
-    def eCase(v: String) = (62 to 1 by -1)
-      .map(k => s"WHEN $v >= ${1L << k} THEN $k").mkString(" ")
     def ilogCtes(src: String, p: String) =
-      s"""${p}e AS (SELECT piece, used, CASE ${eCase("used")} ELSE 0 END AS e
+      s"""${p}e AS (SELECT piece, used, ${ilog2ExpSql("used")} AS e
          |  FROM $src),
-         |${p}lg AS (SELECT piece, used,
-         |    (e * 65536 + (((used - (CAST(1 AS BIGINT) << e)) << 16) >> e)) AS lg
+         |${p}lg AS (SELECT piece, used, ${ilog2qSql("used", "e")} AS lg
          |  FROM ${p}e),
          |${p}t AS (SELECT sum(used) AS t FROM $src),
-         |${p}te AS (SELECT t, CASE ${eCase("t")} ELSE 0 END AS e FROM ${p}t),
-         |${p}tl AS (SELECT
-         |    (e * 65536 + (((t - (CAST(1 AS BIGINT) << e)) << 16) >> e)) AS lgt
+         |${p}te AS (SELECT t, ${ilog2ExpSql("t")} AS e FROM ${p}t),
+         |${p}tl AS (SELECT ${ilog2qSql("t", "e")} AS lgt
          |  FROM ${p}te),
          |${p}scr AS (SELECT piece, used, lg - lgt AS score
          |  FROM ${p}lg CROSS JOIN ${p}tl)""".stripMargin
@@ -306,7 +309,7 @@ private[graft] object TokenizerGates {
          |  FROM (SELECT * FROM u${r}top UNION ALL SELECT * FROM u${r}sng)
          |  GROUP BY 1)""".stripMargin
     val base =
-      s"""utoks AS (SELECT doc_id, $TokSql AS tk FROM documents),
+      s"""${toksCte("documents", "utoks")},
          |utw AS (SELECT unnest(tk) AS word FROM utoks),
          |uwv AS (SELECT word, count(*) AS cnt FROM utw
          |  WHERE regexp_full_match(word, '[a-z0-9]+') GROUP BY 1),

@@ -50,16 +50,21 @@ def connect():
     con.execute(f"SET max_temp_directory_size = '{shutil.disk_usage(spill).free // 2}B'")
     return con
 
-def check(sf_dir, out_dir):
-    """Compare every gate named in oracle_sql.json; returns (n_pass, n_fail).
-    A gate with no output dir (Verify could not run it) is a failure."""
-    con = connect()
+def create_views(con, sf_dir):
+    """One view per test table present in `sf_dir`, named as the oracles
+    name it."""
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.isdir(p):  # Spark-written table: directory of part files
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}/*.parquet')")
         elif os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+
+def check(sf_dir, out_dir):
+    """Compare every gate named in oracle_sql.json; returns (n_pass, n_fail).
+    A gate with no output dir (Verify could not run it) is a failure."""
+    con = connect()
+    create_views(con, sf_dir)
     oracles = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
     n_pass = n_fail = 0
     for name in sorted(oracles):
