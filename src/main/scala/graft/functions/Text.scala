@@ -150,25 +150,4 @@ object Text {
     */
   def regexTokens(textCol: String): Column =
     graft.plans.TextExpressions.bpeTokens(col(textCol))
-
-  /** 64-bit SimHash over a string-array column named `shinglesCol`: per bit,
-    * sum +1/−1 by shingle-hash bit, take the sign. Pure higher-order-function
-    * SQL expression (dynamic shift amounts need the SQL form) — distributed,
-    * no UDF, no driver state.
-    */
-  def simhash64(shinglesCol: String): Column = expr(
-    s"""aggregate(
-       |  zip_with(
-       |    aggregate(
-       |      transform($shinglesCol, s -> xxhash64(s)),
-       |      array_repeat(0L, 64),
-       |      (acc, h) -> zip_with(acc, sequence(0, 63),
-       |                           (a, i) -> a + if((shiftright(h, i) & 1L) = 1L, 1L, -1L))
-       |    ),
-       |    sequence(0, 63),
-       |    (s, i) -> if(s >= 0L, shiftleft(1L, i), 0L)
-       |  ),
-       |  0L,
-       |  (a, b) -> a | b
-       |)""".stripMargin)
 }

@@ -446,15 +446,19 @@ private[graft] object DedupGates {
     // q_minhash_lsh (signature mins → band buckets → bucket join → estimated
     // Jaccard) but with md5-derived 64-bit hashes that DuckDB can replicate
     // digit-for-digit — so the banding/bucketing/estimation math itself is
-    // oracle-checked, not just row counts. (q_minhash_lsh keeps codegen'd
-    // xxhash64 as the fast path; DuckDB has no xxhash64.)
+    // oracle-checked, not just row counts. q_minhash_lsh (FnvMix) is
+    // replayed end to end as well; what this gate adds is a second,
+    // independent hash family: md5-derived decimal(20,0) signatures and
+    // string band buckets through the same BandedPairs core, so the banding
+    // and estimation math is checked under two hash families and two
+    // bucket types.
     Gate("q_minhash_md5", (s, dir) => {
       val numHashes = 16
       val bands = 4
       val rowsPer = numHashes / bands
       // validation slice: md5 is ~5x costlier than xxhash64, so the
       // hash-exact check runs on a bounded sample (the whole table at the
-      // sf0.01 gate); the fast xxhash64 variant covers full-scale timing
+      // sf0.01 gate); q_minhash_lsh covers full-scale timing
       val shingled = Tables.documents(s, dir).filter(col("doc_id") < 1000).select(
         col("doc_id").as("id"),
         explode(Text.wordShingles(col("text"), 3)).as("shingle"))
@@ -464,24 +468,13 @@ private[graft] object DedupGates {
       val hashed = shingled.select(col("id") +: hashCols: _*)
       val minAggs = (0 until numHashes).map(i => min(col(s"_h$i")).as(s"_m$i"))
       val sigs = hashed.groupBy(col("id")).agg(minAggs.head, minAggs.tail: _*)
-      val banded = sigs.select(
-          col("id"),
-          array((0 until numHashes).map(i => col(s"_m$i")): _*).as("sig"),
-          explode(array((0 until bands).map(b =>
-            struct(lit(b).as("band"),
-              concat_ws(",",
-                (b * rowsPer until (b + 1) * rowsPer).map(i => col(s"_m$i").cast("string")): _*)
-                .as("bucket"))): _*)).as("bb"))
-        .select(col("id"), col("sig"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-      val l = banded.toDF("id_a", "sig_a", "band", "bucket")
-      val r = banded.toDF("id_b", "sig_b", "band", "bucket")
-      l.join(r, Seq("band", "bucket"))
-        .filter(col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b"),
-          (size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y), b => b))
-            .cast("double") / numHashes).as("est_jaccard"))
-        .groupBy("id_a", "id_b").agg(max("est_jaccard").as("est_jaccard"))
-        .filter(col("est_jaccard") >= 0.5)
+        .select(col("id"), array((0 until numHashes).map(i => col(s"_m$i")): _*).as("sig"))
+      val banded = BandedPairs.bands(sigs, array((0 until bands).map(b =>
+        concat_ws(",", (b * rowsPer until (b + 1) * rowsPer).map(i =>
+          col("sig").getItem(i).cast("string")): _*)): _*))
+      BandedPairs.selfPairs(banded, BandedPairs.Score("est_jaccard",
+        BandedPairs.agreement(col("sig_a"), col("sig_b"), numHashes),
+        higherIsBetter = true, 0.5))
     },
       // md5-hex folded to a 64-bit unsigned decimal via hugeint — matches
       // Spark's conv(substring(md5(x),1,16),16,10) digit-for-digit
@@ -536,23 +529,12 @@ private[graft] object DedupGates {
           .reduce(_ + _).as(s"chunk$c")
       }
       val fp = sums.select(col("id") +: chunkCols: _*)
-      val banded = fp.select(
-          col("id"), col("chunk0"), col("chunk1"), col("chunk2"), col("chunk3"),
-          explode(array((0 until 4).map(c =>
-            struct(lit(c).as("cidx"), col(s"chunk$c").as("piece"))): _*)).as("cp"))
-        .select(col("id"), col("chunk0"), col("chunk1"), col("chunk2"), col("chunk3"),
-          col("cp.cidx").as("cidx"), col("cp.piece").as("piece"))
-      val l = banded.toDF("id_a", "c0a", "c1a", "c2a", "c3a", "cidx", "piece")
-      val r = banded.toDF("id_b", "c0b", "c1b", "c2b", "c3b", "cidx", "piece")
-      l.join(r, Seq("cidx", "piece"))
-        .filter(col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b"),
-          (bit_count(col("c0a").bitwiseXOR(col("c0b"))) +
-            bit_count(col("c1a").bitwiseXOR(col("c1b"))) +
-            bit_count(col("c2a").bitwiseXOR(col("c2b"))) +
-            bit_count(col("c3a").bitwiseXOR(col("c3b")))).cast("long").as("hamming"))
-        .groupBy("id_a", "id_b").agg(min("hamming").as("hamming"))
-        .filter(col("hamming") <= 3)
+      val banded = BandedPairs.bands(fp, array((0 until 4).map(c => col(s"chunk$c")): _*))
+      BandedPairs.selfPairs(banded, BandedPairs.Score("hamming",
+        (0 until 4).map(c =>
+          bit_count(col(s"chunk${c}_a").bitwiseXOR(col(s"chunk${c}_b")))).reduce(_ + _)
+          .cast("long"),
+        higherIsBetter = false, 3))
     },
       s"""WITH ${shinglePostingSql("documents WHERE doc_id < 1000")},
          |hs AS (SELECT id, md5(shingle) AS m FROM posting),

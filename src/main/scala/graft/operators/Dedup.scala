@@ -137,16 +137,11 @@ object Dedup {
       n: Int,
       threshold: Double,
       maxShingleDocFreq: Long = DeriveDocFreqCap): DataFrame =
-    shinglePairStats(df, idCol, textCol, n, maxShingleDocFreq, threshold,
-        containment = false)
-      .withColumn("jaccard",
-        col("inter").cast("double") /
-          (col("size_a") + col("size_b") - col("inter")).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+    ngramJaccardOn(docShingleSets(df, idCol, textCol, n, maxShingleDocFreq), threshold)
 
-  /** Jaccard scorer over a pre-materialized [[shingleSets]] frame — the
-    * multi-scorer amortization path (see [[shingleSets]]).
+  /** Jaccard scorer over a docsets frame: the lazy one [[ngramJaccard]]
+    * builds, or a [[shingleSets]] checkpoint — the multi-scorer
+    * amortization path.
     */
   def ngramJaccardOn(sets: DataFrame, threshold: Double): DataFrame =
     pairStatsOn(sets, threshold, containment = false)
@@ -172,16 +167,10 @@ object Dedup {
       n: Int,
       threshold: Double,
       maxShingleDocFreq: Long = DeriveDocFreqCap): DataFrame =
-    shinglePairStats(df, idCol, textCol, n, maxShingleDocFreq, threshold,
-        containment = true)
-      .withColumn("overlap",
-        col("inter").cast("double") /
-          least(col("size_a"), col("size_b")).cast("double"))
-      .filter(col("overlap") >= threshold)
-      .select("id_a", "id_b", "size_a", "size_b", "overlap")
+    overlapPairsOn(docShingleSets(df, idCol, textCol, n, maxShingleDocFreq), threshold)
 
-  /** Overlap-coefficient scorer over a pre-materialized [[shingleSets]]
-    * frame (see [[shingleSets]]).
+  /** Overlap-coefficient scorer over a docsets frame (see
+    * [[ngramJaccardOn]]).
     */
   def overlapPairsOn(sets: DataFrame, threshold: Double): DataFrame =
     pairStatsOn(sets, threshold, containment = true)
@@ -207,8 +196,9 @@ object Dedup {
     * every scorer branch reads document-bounded rows instead of re-running
     * the corpus scan.
     *
-    * Default paths ([[ngramJaccard]]/[[overlapPairs]]) are untouched: the
-    * single-scorer recompute plan remains the measured optimum. Use this
+    * Default paths ([[ngramJaccard]]/[[overlapPairs]]) run the same `…On`
+    * scorers over the lazy, uncheckpointed frame: the single-scorer
+    * recompute plan remains the measured optimum. Use this
     * when running ≥2 scorers (or thresholds) over one corpus:
     * {{{
     *   val sets = Dedup.shingleSets(docs, "doc_id", "text", 3)
@@ -227,49 +217,6 @@ object Dedup {
       n: Int,
       maxShingleDocFreq: Long = DeriveDocFreqCap): DataFrame =
     docShingleSets(df, idCol, textCol, n, maxShingleDocFreq).localCheckpoint(true)
-
-  /** Shared PREFIX-FILTERED pair core (AllPairs/PPJoin family — Bayardo et
-    * al. 2007, Xiao et al. 2008): distinct word `n`-shingles → hot-shingle
-    * suppression → prefix-filtered candidate generation → exact
-    * verification on the per-doc shingle arrays. Returns
-    * (id_a < id_b, size_a, size_b, inter); scorers divide.
-    *
-    * Prefix principle: fix ANY global total order on shingles; if
-    * |A∩B| ≥ α, the first |A|−α+1 shingles of A and first |B|−α+1 of B
-    * must share an element. For Jaccard ≥ t, α = ⌈t·max(|A|,|B|)⌉ works
-    * (J ≥ t ⇒ |∩| ≥ t·|∪| ≥ t·max), so each doc indexes only its first
-    * |S|−⌈t·|S|⌉+1 shingles and candidates come from a PREFIX×PREFIX join
-    * — candidate volume drops by (1−t)² (25× at t=0.8) versus the full
-    * inverted-index self-join, which is what made the exact pair scan
-    * super-linear on shingle-dense corpora (measured 174 s at sf1; the
-    * per-shingle join fan-out is Σ df², and df grows with corpus size).
-    * For the overlap coefficient ≥ t, α = ⌈t·min⌉ depends on the SMALLER
-    * side only, so the smaller doc's prefix joins the larger doc's FULL
-    * posting list (one-sided (1−t) reduction).
-    *
-    * The global order is the shingle's 64-bit hash VALUE itself — order-by-
-    * hash needs no doc-frequency join (df-ascending order à la PPJoin would
-    * put rarer shingles in prefixes, but costs a full posting⋈df shuffle
-    * join; the hot-shingle cap already bounds the df skew that ordering
-    * would exploit, so the shuffle-free order wins at scale).
-    *
-    * Verification is exact: candidates (deduplicated) join the per-doc
-    * SORTED shingle arrays and count `array_intersect` — arrays are
-    * document-bounded, never corpus-bounded. Lossless end to end: every
-    * pair at-or-above threshold shares a prefix shingle by the principle
-    * above (prefix lengths use an ε-guard so float rounding can only
-    * LENGTHEN a prefix, never drop a qualifying pair).
-    */
-  private def shinglePairStats(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int,
-      maxShingleDocFreq: Long,
-      threshold: Double,
-      containment: Boolean): DataFrame =
-    pairStatsOn(docShingleSets(df, idCol, textCol, n, maxShingleDocFreq),
-      threshold, containment)
 
   /** Corpus-derived hot-shingle cap: `max(floor, budget · n_docs ÷
     * postings)` in integer arithmetic (both engines floor the division the
@@ -317,8 +264,8 @@ object Dedup {
   }
 
   /** The shared docsets intermediate: (id, sorted shingle-hash array,
-    * set_size), df-capped. NOT materialized here — [[shinglePairStats]]
-    * composes it lazily (the measured single-scorer optimum) and
+    * set_size), df-capped. NOT materialized here — the default scorer paths
+    * compose it lazily (the measured single-scorer optimum) and
     * [[shingleSets]] checkpoints it for multi-scorer reuse.
     */
   private def docShingleSets(
@@ -374,9 +321,37 @@ object Dedup {
       .withColumn("set_size", size(col("shingles")))
   }
 
-  /** Prefix-filtered candidate generation + exact verification over a
-    * docsets frame (from [[docShingleSets]] or a [[shingleSets]]
-    * checkpoint). Returns (id_a < id_b, size_a, size_b, inter).
+  /** Shared PREFIX-FILTERED pair core (AllPairs/PPJoin family — Bayardo et
+    * al. 2007, Xiao et al. 2008) over a docsets frame (from
+    * [[docShingleSets]] or a [[shingleSets]] checkpoint): prefix-filtered
+    * candidate generation → exact verification on the per-doc shingle
+    * arrays. Returns (id_a < id_b, size_a, size_b, inter); scorers divide.
+    *
+    * Prefix principle: fix ANY global total order on shingles; if
+    * |A∩B| ≥ α, the first |A|−α+1 shingles of A and first |B|−α+1 of B
+    * must share an element. For Jaccard ≥ t, α = ⌈t·max(|A|,|B|)⌉ works
+    * (J ≥ t ⇒ |∩| ≥ t·|∪| ≥ t·max), so each doc indexes only its first
+    * |S|−⌈t·|S|⌉+1 shingles and candidates come from a PREFIX×PREFIX join
+    * — candidate volume drops by (1−t)² (25× at t=0.8) versus the full
+    * inverted-index self-join, which is what made the exact pair scan
+    * super-linear on shingle-dense corpora (measured 174 s at sf1; the
+    * per-shingle join fan-out is Σ df², and df grows with corpus size).
+    * For the overlap coefficient ≥ t, α = ⌈t·min⌉ depends on the SMALLER
+    * side only, so the smaller doc's prefix joins the larger doc's FULL
+    * posting list (one-sided (1−t) reduction).
+    *
+    * The global order is the shingle's 64-bit hash VALUE itself — order-by-
+    * hash needs no doc-frequency join (df-ascending order à la PPJoin would
+    * put rarer shingles in prefixes, but costs a full posting⋈df shuffle
+    * join; the hot-shingle cap already bounds the df skew that ordering
+    * would exploit, so the shuffle-free order wins at scale).
+    *
+    * Verification is exact: candidates (deduplicated) join the per-doc
+    * SORTED shingle arrays and count `array_intersect` — arrays are
+    * document-bounded, never corpus-bounded. Lossless end to end: every
+    * pair at-or-above threshold shares a prefix shingle by the principle
+    * above (prefix lengths use an ε-guard so float rounding can only
+    * LENGTHEN a prefix, never drop a qualifying pair).
     */
   private def pairStatsOn(
       docsets: DataFrame,
@@ -588,18 +563,18 @@ object Dedup {
   /** MinHash + LSH banding near-duplicate candidates.
     *
     * Signature of `numHashes` min-hashes split into `bands` bands; docs
-    * agreeing on all rows of any band meet in a bucket; bucket self-join
-    * emits candidate pairs with the estimated Jaccard
-    * (fraction of agreeing signature positions). No all-pairs anywhere:
-    * cost is Σ_bucket |bucket|², controlled by band width.
+    * agreeing on all rows of any band meet in a bucket; the
+    * [[BandedPairs]] self-join emits candidate pairs with the estimated
+    * Jaccard (fraction of agreeing signature positions). No all-pairs
+    * anywhere: cost is Σ_bucket |bucket|², controlled by band width.
     *
     * The signature is computed posting-list style: explode the distinct
-    * shingle set, hash each (permutation, shingle) with codegen'd
-    * `xxhash64`, take `numHashes` min-aggregates per doc (map-side
-    * combined — one shuffle of (id, numHashes·8B)). This stays inside
-    * whole-stage codegen; a nested higher-order-function formulation
-    * re-evaluates the shingle array per permutation and falls out of
-    * codegen — ~30× slower measured at 500 docs.
+    * shingle set, hash each (permutation, shingle) with the codegen'd
+    * FnvMix family (oracle-replayable), take `numHashes` min-aggregates
+    * per doc (map-side combined — one shuffle of (id, numHashes·8B)).
+    * This stays inside whole-stage codegen; a nested higher-order-function
+    * formulation re-evaluates the shingle array per permutation and falls
+    * out of codegen — ~30× slower measured at 500 docs.
     */
   def minhashLsh(
       df: DataFrame,
@@ -608,14 +583,9 @@ object Dedup {
       shingleLen: Int,
       numHashes: Int,
       bands: Int,
-      threshold: Double): DataFrame = {
-    val banded = minhashIndex(df, idCol, textCol, shingleLen, numHashes, bands)
-    val l = banded.toDF("id_a", "sig_a", "band", "bucket")
-    val r = banded.toDF("id_b", "sig_b", "band", "bucket")
-    scoreBandMatches(
-      l.join(r, Seq("band", "bucket")).filter(col("id_a") < col("id_b")),
-      numHashes, threshold, "id_a", "id_b")
-  }
+      threshold: Double): DataFrame =
+    BandedPairs.selfPairs(minhashIndex(df, idCol, textCol, shingleLen, numHashes, bands),
+      estJaccard(numHashes, threshold))
 
   /** The banded MinHash signature INDEX: `(id, sig, band, bucket)` — the
     * persistable artifact [[minhashLsh]] self-joins and
@@ -649,15 +619,8 @@ object Dedup {
     val sigs = hashed.groupBy(col("id"))
       .agg(minAggs.head, minAggs.tail: _*)
       .select(col("id"), array((0 until numHashes).map(i => col(s"_m$i")): _*).as("sig"))
-    sigs.select(
-      col("id"), col("sig"),
-      explode(transform(
-        sequence(lit(0), lit(bands - 1)),
-        b => struct(
-          b.as("band"),
-          xxhash64(b, slice(col("sig"), b * rows + 1, lit(rows)).cast("string")).as("bucket"))))
-        .as("bb"))
-      .select(col("id"), col("sig"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
+    BandedPairs.bands(sigs, transform(sequence(lit(0), lit(bands - 1)),
+      b => xxhash64(b, slice(col("sig"), b * rows + 1, lit(rows)).cast("string"))))
   }
 
   /** INCREMENTAL near-dup: candidates of a new `batch` against an existing
@@ -674,38 +637,22 @@ object Dedup {
       batch: DataFrame,
       corpus: DataFrame,
       numHashes: Int,
-      threshold: Double): DataFrame = {
-    val l = batch.toDF("id_new", "sig_a", "band", "bucket")
-    val r = corpus.toDF("id_corpus", "sig_b", "band", "bucket")
-    // self-pair guard: in the documented append-then-probe workflow the
-    // batch may already be IN the corpus index — (x, x) collisions would
-    // otherwise report every such doc as a perfect duplicate of itself
-    scoreBandMatches(
-      l.join(r, Seq("band", "bucket")).filter(col("id_new") =!= col("id_corpus")),
-      numHashes, threshold, "id_new", "id_corpus")
-  }
+      threshold: Double): DataFrame =
+    BandedPairs.probePairs(batch, corpus, estJaccard(numHashes, threshold))
 
-  /** Shared band-collision scorer: estimated jaccard = fraction of agreeing
-    * signature positions, max over colliding bands, thresholded. */
-  private def scoreBandMatches(
-      collisions: DataFrame,
-      numHashes: Int,
-      threshold: Double,
-      leftId: String,
-      rightId: String): DataFrame =
-    collisions
-      .select(col(leftId), col(rightId),
-        (size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y), b => b))
-          .cast("double") / numHashes).as("est_jaccard"))
-      .groupBy(leftId, rightId).agg(max("est_jaccard").as("est_jaccard"))
-      .filter(col("est_jaccard") >= threshold)
+  /** Estimated Jaccard of a signature pair: the fraction of agreeing
+    * positions over the whole signature. */
+  private def estJaccard(numHashes: Int, threshold: Double) =
+    BandedPairs.Score("est_jaccard",
+      BandedPairs.agreement(col("sig_a"), col("sig_b"), numHashes),
+      higherIsBetter = true, threshold)
 
   /** SimHash near-duplicate pairs: 64-bit simhash, banded into 4×16-bit
     * chunks (Hamming ≤ 3 guarantees agreement on ≥1 chunk); chunk-bucket
     * join then exact Hamming filter via `bit_count(xor)`.
     *
     * Like [[minhashLsh]], the fingerprint is built posting-list style:
-    * explode shingles, one codegen'd xxhash64 per shingle, 64 ±1 bit-sum
+    * explode shingles, one codegen'd FnvMix hash per shingle, 64 ±1 bit-sum
     * aggregates per doc, sign → bit. Map-side combined, single shuffle.
     */
   def simhashNearDup(
@@ -725,20 +672,11 @@ object Dedup {
       .select(col("id"), graft.plans.HashExpressions.fnvMix(col("shingle"), 0L).as("_h"))
     val sims = hashed.groupBy(col("id"))
       .agg(graft.plans.SimHashAgg.simhashAgg(col("_h")).as("simhash"))
-    val chunked = sims.select(
-      col("id"), col("simhash"),
-      explode(expr(
-        "transform(sequence(0, 3), c -> struct(c as chunk, (shiftright(simhash, c * 16) & 65535L) as piece))"))
-        .as("cp"))
-      .select(col("id"), col("simhash"), col("cp.chunk").as("chunk"), col("cp.piece").as("piece"))
-    val l = chunked.toDF("id_a", "sim_a", "chunk", "piece")
-    val r = chunked.toDF("id_b", "sim_b", "chunk", "piece")
-    l.join(r, Seq("chunk", "piece"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        bit_count(expr("sim_a ^ sim_b")).as("hamming"))
-      .groupBy("id_a", "id_b").agg(min("hamming").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
+    val chunked = BandedPairs.bands(sims, array((0 until 4).map(c =>
+      shiftright(col("simhash"), c * 16).bitwiseAND(lit(65535L))): _*))
+    BandedPairs.selfPairs(chunked, BandedPairs.Score("hamming",
+      bit_count(col("simhash_a").bitwiseXOR(col("simhash_b"))),
+      higherIsBetter = false, maxHamming))
   }
 
   /** Segment-level boilerplate removal (C4/RefinedWeb line-dedup style):

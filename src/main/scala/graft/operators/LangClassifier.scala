@@ -33,28 +33,21 @@ import org.apache.spark.sql.functions._
   */
 object LangClassifier {
 
-  /** Character trigrams of the lowercased text, multiplicity kept (bag
-    * semantics — fastText's input layer over `minn=maxn=3`). Texts
-    * shorter than 3 characters contribute no features (logits collapse
-    * to the shared bias and the argmax tie rule picks class 0).
-    */
-  def charTrigrams(text: Column): Column = {
-    val t = lower(text)
-    when(length(t) >= 3,
-      transform(sequence(lit(1), length(t) - 2), i => t.substr(i, lit(3))))
-      .otherwise(array().cast("array<string>"))
-  }
-
-  /** Trigram-bag size: `max(len(lower(text)) − 2, 0)` — the size the
-    * [[charTrigrams]] array would have, computed without building it. */
+  /** Trigram-bag size: `max(len(lower(text)) − 2, 0)` — the number of
+    * character trigrams of the lowercased text, multiplicity kept (bag
+    * semantics — fastText's input layer over `minn=maxn=3`), computed
+    * without building them. Texts shorter than 3 characters contribute no
+    * features (logits collapse to the shared bias and the argmax tie rule
+    * picks class 0). */
   def nFeatures(text: Column): Column =
     greatest(length(lower(text)) - 2, lit(0)).cast("long")
 
   /** Per-class exact integer feature-weight sums as ONE native string
     * pass ([[graft.plans.TrigramClassSums]] — whole-stage codegen,
-    * bit-identical to hashing each [[charTrigrams]] member with
-    * `fnv_mix mod B` and folding the literal weight vectors, which as
-    * interpreted higher-order functions dominated the sf10 decade).
+    * bit-identical to hashing each character trigram of the lowercased
+    * text with `fnv_mix mod B` and folding the literal weight vectors,
+    * which as interpreted higher-order functions dominated the sf10
+    * decade).
     * Returns `array<bigint>` of length C.
     */
   def classSums(

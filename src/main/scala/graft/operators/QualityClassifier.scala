@@ -99,10 +99,4 @@ object QualityClassifier {
         lit(bias) + lit(scale) *
           (col("sum_w").cast("double") / greatest(col("n_features"), lit(1L)).cast("double")))
       .withColumn("pass", col("logit") > lit(0.0))
-
-  /** Sigmoid probability for consumers that want a calibrated score — NOT
-    * part of the oracle gate (libm exp last-ulp behavior is not an
-    * engine-portability promise; the pass decision never needs it). */
-  def sigmoid(logit: Column): Column =
-    lit(1.0) / (lit(1.0) + exp(-logit))
 }

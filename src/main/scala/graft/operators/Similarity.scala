@@ -15,18 +15,28 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Exact cosine top-k for each probe. `probes` must be small (broadcast).
-    * Ties broken by ascending corpus id for determinism.
-    */
   /** cosine from a per-pair dot and per-side precomputed norms — the norms
     * live in projections below the join, so they are computed once per row
     * per side instead of once per candidate pair.
     */
-  private def pairCosine = {
-    val nn = col("_nv") * col("_np")
-    when(nn > 0, Vectors.dot(col("_v"), col("_p")) / nn).otherwise(lit(0.0))
+  private def cosine(v: String, nv: String, p: String, np: String) = {
+    val nn = col(nv) * col(np)
+    when(nn > 0, Vectors.dot(col(v), col(p)) / nn).otherwise(lit(0.0))
   }
 
+  /** [[cosine]] of a corpus row (`_v`, `_nv`) and a probe (`_p`, `_np`). */
+  private def pairCosine = cosine("_v", "_nv", "_p", "_np")
+
+  /** Each probe's top `k` scored rows by cosine, ties broken by ascending
+    * `neighbor` id for determinism, numbered 1..k in `rank`. */
+  private def topKPerProbe(scored: DataFrame, neighbor: String, k: Int): DataFrame =
+    scored.withColumn("rank", row_number().over(
+        Window.partitionBy(col("probe_id")).orderBy(col("cosine").desc, col(neighbor))))
+      .filter(col("rank") <= k)
+
+  /** Exact cosine top-k for each probe. `probes` must be small (broadcast).
+    * Ties broken by ascending corpus id for determinism.
+    */
   def knnBruteForce(
       corpus: DataFrame,
       probes: DataFrame,
@@ -42,10 +52,7 @@ object Similarity {
           Vectors.norm(col(probeVecCol)).as("_np"))),
         col("neighbor_id") =!= col("probe_id"))
       .withColumn("cosine", pairCosine)
-    val w = Window.partitionBy(col("probe_id")).orderBy(col("cosine").desc, col("neighbor_id"))
-    joined
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topKPerProbe(joined, "neighbor_id", k)
       .select("probe_id", "neighbor_id", "cosine", "rank")
   }
 
@@ -149,9 +156,7 @@ object Similarity {
     val cand = c.join(broadcast(p), Seq("bucket"))
       .filter(col("neighbor_id") =!= col("probe_id"))
       .withColumn("cosine", pairCosine)
-    val w = Window.partitionBy(col("probe_id")).orderBy(col("cosine").desc, col("neighbor_id"))
-    cand.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topKPerProbe(cand, "neighbor_id", k)
       .select("probe_id", "neighbor_id", "cosine", "rank")
   }
 
@@ -281,9 +286,7 @@ object Similarity {
     val cand = c.join(broadcast(p), Seq("cell"))
       .filter(col("neighbor_id") =!= col("probe_id"))
       .withColumn("cosine", pairCosine)
-    val w = Window.partitionBy(col("probe_id")).orderBy(col("cosine").desc, col("neighbor_id"))
-    cand.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topKPerProbe(cand, "neighbor_id", k)
       .select("probe_id", "neighbor_id", "cosine", "rank")
   }
 
@@ -730,7 +733,6 @@ object Similarity {
       cands.join(vecs, Seq("nid")).join(p, Seq("probe_id"))
         .withColumn("cosine", pairCosine)
         .select(col("probe_id"), col("nid"), col("cosine"))
-    val w = Window.partitionBy(col("probe_id")).orderBy(col("cosine").desc, col("nid"))
     val globalEntry = vecs.orderBy(col("nid")).limit(entries).select(col("nid"))
     val localEntry = p.select(col("probe_id"),
         bucketCode(col("_p"), index.coarse).as("cbk"))
@@ -746,8 +748,7 @@ object Similarity {
     // posting-fold precedent).
     var best = score(entry).localCheckpoint()
     for (_ <- 1 to hops) {
-      val frontier = best.withColumn("_r", row_number().over(w))
-        .filter(col("_r") <= beam)
+      val frontier = topKPerProbe(best, "nid", beam)
         .select(col("probe_id"), col("nid").as("src"))
       val expand = frontier
         .join(adjacency, Seq("src"))
@@ -757,9 +758,7 @@ object Similarity {
           Seq("probe_id", "nid"), "left_anti")
       best = best.unionByName(score(expand)).localCheckpoint()
     }
-    best.filter(col("probe_id") =!= col("nid"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topKPerProbe(best.filter(col("probe_id") =!= col("nid")), "nid", k)
       .select(col("probe_id"), col("nid").as("neighbor_id"), col("cosine"),
         col("rank").cast("long").as("rank"))
   }
@@ -851,15 +850,10 @@ object Similarity {
       bandBits: Int = 16,
       dim: Int = 64,
       seed: Long = 7L,
-      hyperplanesOverride: Option[Array[Array[Double]]] = None): DataFrame = {
-    val v = embeddingBandIndex(df, idCol, vecCol, bands, bandBits, dim, seed,
-      hyperplanesOverride)
-    val a = v.toDF("id_a", "_va", "_na", "band", "bucket")
-    val b = v.toDF("id_b", "_vb", "_nb", "band", "bucket")
-    scoreCosineMatches(
-      a.join(b, Seq("band", "bucket")).filter(col("id_a") < col("id_b")),
-      threshold, "id_a", "id_b")
-  }
+      hyperplanesOverride: Option[Array[Array[Double]]] = None): DataFrame =
+    BandedPairs.selfPairs(
+      embeddingBandIndex(df, idCol, vecCol, bands, bandBits, dim, seed, hyperplanesOverride),
+      bandCosine(threshold))
 
   /** The banded sign-LSH INDEX: `(id, _v, _n, band, bucket)` — the
     * persistable artifact [[embeddingNearDup]] self-joins and
@@ -889,17 +883,15 @@ object Similarity {
     // single-element transform so CollapseProject cannot inline the
     // bands·bandBits-dot expression into every band slice (interpreted
     // projections get no CSE — see RewriteHofDot notes)
-    val bandStructs = element_at(
+    val buckets = element_at(
       transform(array(bucketCode(col("_v"), hp)), code =>
         array((0 until bands).map(b =>
-          struct(lit(b).as("band"),
-            shiftright(code, b * bandBits).bitwiseAND(lit(mask)).as("bucket"))): _*)), 1)
-    df.select(col(idCol).as("id"),
+          shiftright(code, b * bandBits).bitwiseAND(lit(mask))): _*)), 1)
+    BandedPairs.bands(
+      df.select(col(idCol).as("id"),
         checkedDim(col(vecCol), dim).as("_v"),
-        Vectors.norm(col(vecCol)).as("_n"))
-      .withColumn("bb", explode(bandStructs))
-      .select(col("id"), col("_v"), col("_n"),
-        col("bb.band").as("band"), col("bb.bucket").as("bucket"))
+        Vectors.norm(col(vecCol)).as("_n")),
+      buckets)
   }
 
   /** INCREMENTAL embedding near-dup: candidates of a new `batch` against an
@@ -911,34 +903,13 @@ object Similarity {
   def embeddingNearDupAgainst(
       batch: DataFrame,
       corpus: DataFrame,
-      threshold: Double): DataFrame = {
-    val a = batch.toDF("id_new", "_va", "_na", "band", "bucket")
-    val b = corpus.toDF("id_corpus", "_vb", "_nb", "band", "bucket")
-    // self-pair guard: an append-then-probe caller may have the batch
-    // already in the corpus index — (x, x) collisions would otherwise
-    // report every such vector as a cosine-1.0 near-dup of itself
-    scoreCosineMatches(
-      a.join(b, Seq("band", "bucket")).filter(col("id_new") =!= col("id_corpus")),
-      threshold, "id_new", "id_corpus")
-  }
+      threshold: Double): DataFrame =
+    BandedPairs.probePairs(batch, corpus, bandCosine(threshold))
 
-  /** Shared band-collision scorer: exact cosine over colliding pairs, max
-    * across bands (a pair meeting in several bands has the same cosine each
-    * time — the group-max is pure dedup), thresholded. */
-  private def scoreCosineMatches(
-      collisions: DataFrame,
-      threshold: Double,
-      leftId: String,
-      rightId: String): DataFrame = {
-    val nn = col("_na") * col("_nb")
-    collisions
-      .withColumn("cosine",
-        when(nn > 0, Vectors.dot(col("_va"), col("_vb")) / nn).otherwise(lit(0.0)))
-      .groupBy(col(leftId), col(rightId))
-      .agg(max(col("cosine")).as("cosine"))
-      .filter(col("cosine") >= threshold)
-      .select(leftId, rightId, "cosine")
-  }
+  /** Exact cosine of two [[embeddingBandIndex]] rows. */
+  private def bandCosine(threshold: Double) =
+    BandedPairs.Score("cosine", cosine("_v_a", "_n_a", "_v_b", "_n_b"),
+      higherIsBetter = true, threshold)
 
   /** Deterministic random projection D → d (Johnson–Lindenstrauss style):
     * out[j] = vec · plane_j over the same engine-portable integer-derived

@@ -96,13 +96,6 @@ class TextSpec extends SparkSpec {
     }
   }
 
-  test("simhash64 is identical for identical shingle sets, differs for unrelated") {
-    val df = Seq("a b c d e f", "a b c d e f", "x y z w q r").toDF("text")
-      .withColumn("sh", Text.wordShingles($"text", 3))
-      .select(Text.simhash64("sh").as("h")).as[Long].collect()
-    assert(df(0) == df(1) && df(0) != df(2))
-  }
-
   test("qualityScore is within [0,1] and favors stopword-rich prose") {
     val q1 = one(Text.qualityScore($"text"), "the cat is in the house and it is warm").asInstanceOf[Double]
     val q2 = one(Text.qualityScore($"text"), "!!! ??? ###").asInstanceOf[Double]
